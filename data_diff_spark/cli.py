@@ -74,6 +74,14 @@ def expand_columns(patterns: Sequence[str], schema_cols: Sequence[str], keys: Se
     return out
 
 
+def _positive_int(text: str) -> int:
+    """argparse type: an int >= 1."""
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be a positive int, got {n}")
+    return n
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="data-diff-spark",
@@ -99,16 +107,10 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("-l", "--limit", type=int, default=None)
     p.add_argument("--stats", action="store_true", help="print summary statistics instead of rows")
     p.add_argument("-j", "--json", dest="json_output", action="store_true", help="JSONL output")
-    p.add_argument("--n-buckets", type=int, default=None,
+    p.add_argument("--n-buckets", type=_positive_int, default=None,
                    help="hashdiff checksum buckets (default: auto-sized "
                         "two-level digest scheme; an explicit value forces "
                         "a single fixed level)")
-    p.add_argument("--persist-strategy", default="narrow", choices=["wide", "narrow"],
-                   help="hashdiff cache strategy: narrow (default) caches only "
-                        "keys+checksums and re-reads emitted keys — cache "
-                        "footprint independent of row width; wide caches "
-                        "annotated rows (one scan total) for narrow tables "
-                        "or high diff rates")
     p.add_argument("-m", "--materialize", default=None,
                    help="write diff to this parquet path (or table:NAME) instead of stdout")
     p.add_argument("--materialize-limit", type=int, default=1000)
@@ -357,7 +359,6 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
             t2,
             algorithm=Algorithm(args.algorithm),
             n_buckets=args.n_buckets,
-            hashdiff_persist=args.persist_strategy,
             # AUTO resolves to joindiff (diff.py), so the duplicate-key
             # guard the reference always runs for joindiff applies there too
             validate_unique_key=not args.assume_unique_key

@@ -36,9 +36,10 @@ class DiffResult:
 
     def unpersist(self) -> None:
         """Release caches the diff operator pinned for its own multi-read
-        plan (hashdiff persists both annotated sides) and the stats-path
-        persist of the diff itself. Call after the diff DataFrame has been
-        fully consumed; safe to call more than once."""
+        plan (hashdiff persists both sides' key/checksum frames and the
+        differing-key set) and the stats-path persist of the diff itself.
+        Call after the diff DataFrame has been fully consumed; safe to call
+        more than once."""
         for cached in getattr(self.df, "_ddspark_persisted", []):
             cached.unpersist()
         if getattr(self, "_stats_persisted", False):
@@ -122,7 +123,6 @@ def diff_tables(
     n_buckets: Optional[int] = None,
     validate_unique_key: bool = False,
     skip_null_keys: bool = False,
-    hashdiff_persist: str = "narrow",
     null_safe_keys: bool = True,
 ) -> DiffResult:
     """Diff two table segments; returns DiffResult wrapping the diff DataFrame.
@@ -157,7 +157,7 @@ def diff_tables(
     if algorithm in (Algorithm.AUTO, Algorithm.JOINDIFF):
         df = joindiff.join_diff(table1, table2, null_safe_keys=null_safe_keys)
     else:
-        df = hashdiff.hash_diff(table1, table2, n_buckets=n_buckets, persist=hashdiff_persist)
+        df = hashdiff.hash_diff(table1, table2, n_buckets=n_buckets)
     return DiffResult(df=df, table1=table1, table2=table2)
 
 

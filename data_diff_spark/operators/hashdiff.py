@@ -9,8 +9,9 @@ replaces the whole recursion tree (SURVEY.md §4.3):
 
   1. per row: checksum = md5_as_int(fingerprint(normalized cols)),
      bucket = pmod(xxhash64(normalized keys), n_buckets)
-  2. per side: groupBy(bucket).agg(count, sum(checksum))   -- map-side
-     combined partial aggregation; the shuffle moves only n_buckets rows
+  2. both sides: one groupBy(bucket) over the side-tagged union, giving
+     each side's (count, sum(checksum)) -- map-side combined partial
+     aggregation; the shuffle moves only partial digest rows
   3. compare the two tiny digest tables; equal digests prune the bucket
      (the reference's checksum-equality pruning, hashdiff_tables.py:210-212)
   4. only rows of mismatched buckets are re-read and diffed with the exact
@@ -49,8 +50,6 @@ _FINE_LEVEL_MIN_ROWS = 2_000_000  # below this many dirty-coarse rows, go straig
 
 _CKS = "__cks__"
 _BUCKET = "__bucket__"
-_CNT = "__cnt__"
-_SUM = "__sum__"
 _H = "__keyhash__"
 
 
@@ -58,131 +57,115 @@ def _knorm(i: int) -> str:
     return f"__knorm{i}__"
 
 
-def _annotated_narrow(t: TableSegment, cols: List[str]) -> DataFrame:
-    """Normalized key strings + per-row checksum + key hash ONLY — no raw
-    columns. The persist="narrow" cache: a handful of strings and two
-    numbers per row no matter how wide the table, at the cost of a final
-    semi-join re-read of the emitted keys (see hash_diff)."""
+def _key_norm(t: TableSegment, cols: List[str]) -> List[Column]:
+    """Normalized key strings (NULL as '<null>'). Both the key hash and the
+    phase-2 grouping use this one canonical form, so the sides align by key
+    VALUE even when key columns differ in name, physical type or kind
+    override (the reference aligns segments by key value,
+    diff_tables.py:377-391)."""
     nkeys = len(t.key_columns)
-    df = t.make_select()
+    return [
+        F.coalesce(c, F.lit("<null>")) for c in
+        normalized_columns(t.schema, cols[:nkeys], t.precision_overrides, t.kind_overrides)
+    ]
+
+
+def _annotated_keys(t: TableSegment, cols: List[str]) -> DataFrame:
+    """Per-row checksum + normalized key strings + key hash ONLY — no raw
+    columns. This is the frame hash_diff caches: a handful of strings and
+    two numbers per row no matter how wide the table. Bucket ids at any
+    granularity derive from the stored hash (pmod), so the digest levels
+    are chosen after annotation."""
     normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
-    cks = md5_as_int(row_fingerprint(normd))
-    key_norm = [
-        F.coalesce(c, F.lit("<null>")) for c in
-        normalized_columns(t.schema, cols[:nkeys], t.precision_overrides, t.kind_overrides)
-    ]
-    knorm_cols = [k.alias(_knorm(i)) for i, k in enumerate(key_norm)]
-    return df.select(cks.alias(_CKS), *knorm_cols, F.xxhash64(*key_norm).alias(_H))
+    key_norm = _key_norm(t, cols)
+    return t.make_select().select(
+        md5_as_int(row_fingerprint(normd)).alias(_CKS),
+        *[k.alias(_knorm(i)) for i, k in enumerate(key_norm)],
+        F.xxhash64(*key_norm).alias(_H),
+    )
 
 
-def _narrow_emit(
-    t: TableSegment, cols: List[str], out_names: List[str], sign: str, bad_keys: DataFrame
-) -> DataFrame:
+def _emit(t: TableSegment, cols: List[str], out_names: List[str], sign: str,
+          bad_keys: DataFrame) -> DataFrame:
     """Re-read a side restricted (left-semi on normalized keys) to the PKs
-    the narrow phase decided differ; all rows of a differing PK come back,
-    preserving the duplicate-PK multiset emission of the wide path."""
-    nkeys = len(t.key_columns)
-    df = t.make_select()
-    key_norm = [
-        F.coalesce(c, F.lit("<null>")) for c in
-        normalized_columns(t.schema, cols[:nkeys], t.precision_overrides, t.kind_overrides)
-    ]
-    renamed = [F.col(c).alias(o) for c, o in zip(cols, out_names)]
-    knorm_cols = [k.alias(_knorm(i)) for i, k in enumerate(key_norm)]
-    annotated = df.select(*renamed, *knorm_cols)
-    joined = annotated.join(bad_keys, [_knorm(i) for i in range(nkeys)], "left_semi")
+    phase 2 decided differ; all rows of a differing PK come back, so the
+    emission is the PK's whole row multiset."""
+    key_norm = _key_norm(t, cols)
+    annotated = t.make_select().select(
+        *[F.col(c).alias(o) for c, o in zip(cols, out_names)],
+        *[k.alias(_knorm(i)) for i, k in enumerate(key_norm)],
+    )
+    joined = annotated.join(bad_keys, [_knorm(i) for i in range(len(key_norm))], "left_semi")
     return joined.select(F.lit(sign).alias(SIGN_COL), *out_names)
 
 
-def _annotated(t: TableSegment, cols: List[str], out_names: List[str]) -> DataFrame:
-    """Rows + per-row checksum + normalized key strings + key hash, columns
-    renamed to the shared output names. The hash covers the *normalized key
-    strings* so both sides align even when key columns differ in name or
-    physical type (the reference aligns segments by key value,
-    diff_tables.py:377-391 — hashing canonical strings gives the same
-    alignment-by-construction). The normalized strings themselves are kept
-    as __knorm{i}__ columns: phase 2 partitions its multiset windows on
-    them, so the window grouping agrees with the digest hashing even under
-    kind overrides (uuid trim) or cross-side key type differences.
-    Bucket ids at any granularity derive from the stored hash (pmod), so
-    the digest levels are chosen AFTER annotation."""
-    nkeys = len(t.key_columns)
-    df = t.make_select()
-    normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
-    cks = md5_as_int(row_fingerprint(normd))
-    key_norm = [
-        F.coalesce(c, F.lit("<null>")) for c in
-        normalized_columns(t.schema, cols[:nkeys], t.precision_overrides, t.kind_overrides)
-    ]
-    renamed = [F.col(c).alias(o) for c, o in zip(cols, out_names)]
-    knorm_cols = [k.alias(_knorm(i)) for i, k in enumerate(key_norm)]
-    return df.select(*renamed, cks.alias(_CKS), *knorm_cols, F.xxhash64(*key_norm).alias(_H))
+def _bucketed(df: DataFrame, n: int) -> DataFrame:
+    return df.withColumn(_BUCKET, F.pmod(F.col(_H), F.lit(n)))
 
 
-def _bucket_digest(df: DataFrame, n_buckets: int) -> DataFrame:
-    return (
-        df.select(F.pmod(F.col(_H), F.lit(n_buckets)).alias(_BUCKET), _CKS)
-        .groupBy(_BUCKET)
-        .agg(F.count(F.lit(1)).alias(_CNT), F.sum(_CKS).alias(_SUM))
+def _side_digests(a: DataFrame, b: DataFrame, by: List[str]) -> DataFrame:
+    """THE digest kernel, used at every level: per `by` group, each side's
+    row count and checksum sum -> (*by, ca, cb, sa, sb). One aggregation
+    over the side-tagged union, so both sides are scanned in one stage and
+    only map-side partial aggregates cross the one shuffle. A group absent
+    from a side reads count 0 and sum NULL there."""
+    side = "__side__"
+    u = a.select(*by, _CKS, F.lit(0).alias(side)).unionAll(
+        b.select(*by, _CKS, F.lit(1).alias(side))
     )
+    is_a = (F.col(side) == 0).cast("long")
+    return u.groupBy(*by).agg(
+        F.sum(is_a).alias("ca"),
+        F.sum(1 - is_a).alias("cb"),
+        F.sum(F.when(F.col(side) == 0, F.col(_CKS))).alias("sa"),
+        F.sum(F.when(F.col(side) == 1, F.col(_CKS))).alias("sb"),
+    )
+
+
+def _digests_differ(emit_equal_duplicates: bool = False) -> Column:
+    """A group's row multiset differs iff its (count, checksum-sum) digests
+    differ (hashdiff_tables.py:210-212); emit_equal_duplicates adds the
+    reference's "PK with 2+ rows on either side" rule (hashdiff_tables.py:62-69)."""
+    ca, cb = F.col("ca"), F.col("cb")
+    differs = (ca != cb) | ~F.col("sa").eqNullSafe(F.col("sb"))
+    if emit_equal_duplicates:
+        return (ca != 1) | (cb != 1) | differs
+    return differs
 
 
 def _paired_digest(a: DataFrame, b: DataFrame, n_buckets: int):
-    """BOTH sides' digests in ONE job: tagged union -> per-bucket per-side
-    (count, checksum-sum) -> driver. One union scan materializes both
-    persisted sides in the same stage (parallel across the cluster) and one
-    shuffle of <= 2*n_buckets partial rows replaces two sequential
-    digest-collect jobs — at small SF the saved job/stage latency dominates,
-    at scale it halves the number of scans in flight.
+    """Coarse level: the bucket digests of BOTH sides in ONE job, collected
+    to the driver (<= n_buckets rows) and compared there — no digest join.
+    The collect also yields the exact row counts that size the fine level.
 
-    Returns ({bucket: (ca, sa)}, {bucket: (cb, sb)}, rows_total_a)."""
-    side = "__side__"
-    u = a.select(
-        F.pmod(F.col(_H), F.lit(n_buckets)).alias(_BUCKET), _CKS, F.lit(0).alias(side)
-    ).unionAll(
-        b.select(
-            F.pmod(F.col(_H), F.lit(n_buckets)).alias(_BUCKET), _CKS, F.lit(1).alias(side)
-        )
-    )
-    is_a = (F.col(side) == 0).cast("long")
-    rows = (
-        u.groupBy(_BUCKET)
-        .agg(
-            F.sum(is_a).alias("ca"),
-            F.sum(1 - is_a).alias("cb"),
-            F.sum(F.when(F.col(side) == 0, F.col(_CKS))).alias("sa"),
-            F.sum(F.when(F.col(side) == 1, F.col(_CKS))).alias("sb"),
-        )
-        .collect()
-    )
-    da = {r[_BUCKET]: (r["ca"], r["sa"]) for r in rows if r["ca"]}
-    db = {r[_BUCKET]: (r["cb"], r["sb"]) for r in rows if r["cb"]}
-    rows_total = sum(c for c, _ in da.values())
-    return da, db, rows_total
+    Returns (dirty bucket ids, rows in dirty buckets on both sides,
+    rows_total_a)."""
+    rows = _side_digests(_bucketed(a, n_buckets), _bucketed(b, n_buckets), [_BUCKET]).collect()
+    bad = [r for r in rows if r["ca"] != r["cb"] or r["sa"] != r["sb"]]
+    return ([r[_BUCKET] for r in bad], sum(r["ca"] + r["cb"] for r in bad),
+            sum(r["ca"] for r in rows))
 
 
 def _restrict_join(df: DataFrame, ids_df: DataFrame, n: int,
                    broadcast: bool) -> DataFrame:
     """Restrict `df` to the buckets in `ids_df` (a single-`_BUCKET`-column
-    frame that stays in the JVM) via left-semi join — the large-id-set
-    sibling of _restrict's literal InSet probe. broadcast=True ships the
-    id frame to every task (one long column; ~16 bytes/id); above
-    _BROADCAST_KEYS_LIMIT the caller leaves the join shape to AQE."""
-    bucket = F.pmod(F.col(_H), F.lit(n))
+    frame) via left-semi join — the large-id-set sibling of _restrict's
+    literal InSet probe. broadcast=True ships the id frame to every task
+    (one long column; ~16 bytes/id); above _BROADCAST_KEYS_LIMIT the
+    caller leaves the join shape to AQE."""
     rhs = F.broadcast(ids_df) if broadcast else ids_df
-    return (df.withColumn(_BUCKET, bucket)
-            .join(rhs, _BUCKET, "left_semi").drop(_BUCKET))
+    return _bucketed(df, n).join(rhs, _BUCKET, "left_semi").drop(_BUCKET)
 
 
-def mismatched_buckets(da: DataFrame, db: DataFrame) -> DataFrame:
-    """Bucket ids whose (count, checksum-sum) digests differ between sides."""
-    a = da.select(F.col(_BUCKET), F.col(_CNT).alias("ca"), F.col(_SUM).alias("sa"))
-    b = db.select(F.col(_BUCKET), F.col(_CNT).alias("cb"), F.col(_SUM).alias("sb"))
-    j = a.join(b, on=_BUCKET, how="full_outer")
-    differs = (
-        ~F.col("ca").eqNullSafe(F.col("cb")) | ~F.col("sa").eqNullSafe(F.col("sb"))
-    )
-    return j.filter(differs).select(_BUCKET)
+def _restrict(df: DataFrame, ids: List[int], n: int) -> DataFrame:
+    """Restrict `df` to the driver-side bucket ids `ids` (of n buckets)."""
+    if len(ids) >= n:
+        return df
+    if len(ids) <= _ISIN_LIMIT:
+        # isin over a literal set compiles to a hash-set probe (InSet)
+        return df.filter(F.pmod(F.col(_H), F.lit(n)).isin(ids))
+    ids_df = df.sparkSession.createDataFrame([(int(x),) for x in ids], f"{_BUCKET} long")
+    return _restrict_join(df, ids_df, n, broadcast=True)
 
 
 def hash_diff(
@@ -190,7 +173,6 @@ def hash_diff(
     t2: TableSegment,
     n_buckets: Optional[int] = None,
     emit_equal_duplicates: bool = False,
-    persist: str = "narrow",
 ) -> DataFrame:
     """Diff DataFrame (sign, *columns-of-table-1's-names), duplicate-PK-aware.
 
@@ -203,34 +185,23 @@ def hash_diff(
     here, when its bucket digest mismatched. Like the reference, that output
     then depends on how the key space was segmented.
 
-    persist picks the cache strategy the digest levels + phase 2 read:
-      "narrow" (default) only (normalized keys, checksum, key hash) cached —
-               a few strings + two numbers per row no matter how wide the
-               table (at 100 TB the wide cache IS the table); the emitted
-               PKs are then re-read from the sources with a left-semi join,
-               so the sources are scanned twice but the second scan is
-               pruned to differing keys. Measured equal to wide at 6M rows,
-               and the only strategy whose cache footprint is independent of
-               row width — hence the default (VERDICT r3: a default that
-               caches full rows of both sides makes the cache the table).
-      "wide"   full rows + checksum + key hash cached — one
-               normalization+md5 scan total; opt in when the rows are
-               narrow or the diff rate is high enough that the pruned
-               second scan would re-read most of the table anyway.
+    n_buckets=None auto-sizes a two-level digest scheme (coarse prune +
+    fine isolate); an explicit positive int forces one fixed level.
+
+    Cache shape: only (checksum, normalized keys, key hash) per row is
+    persisted — a few strings and two numbers no matter how wide the table,
+    so the cache never becomes the table. The rows of the differing PKs are
+    then re-read from the sources with a left-semi join: the sources are
+    scanned twice, but the second scan is pruned to the differing keys.
     """
-    if persist not in ("wide", "narrow"):
-        raise ValueError(f"persist must be 'wide' or 'narrow', got {persist!r}")
+    if n_buckets is not None and n_buckets < 1:
+        raise ValueError(f"n_buckets must be a positive int, got {n_buckets!r}")
     cols1, cols2 = _check_consistent(t1, t2)
     out_names = cols1
-    keys = list(t1.key_columns)
-    nkeys = len(keys)
+    knorm_names = [_knorm(i) for i in range(len(t1.key_columns))]
 
-    if persist == "narrow":
-        a = _annotated_narrow(t1, cols1).persist()
-        b = _annotated_narrow(t2, cols2).persist()
-    else:
-        a = _annotated(t1, cols1, out_names).persist()
-        b = _annotated(t2, cols2, out_names).persist()
+    a = _annotated_keys(t1, cols1).persist()
+    b = _annotated_keys(t2, cols2).persist()
 
     # --- level 1: coarse digests (DEFAULT_N_BUCKETS) ------------------------
     # The reference recursively bisects because remote round-trips dominate;
@@ -239,50 +210,27 @@ def hash_diff(
     # the clean bulk, and a fine compare over only the dirty-coarse rows
     # isolates differing keys even when the diff *rate* would dirty every
     # coarse bucket. Measured on a 6M-row / 2%-changed probe: single fixed
-    # 4096-bucket level 80s -> two-level narrow-persist design 36s; the
-    # zero-diff case pays only the coarse level (7.9s -> 5.3s).
+    # 4096-bucket level 80s -> two-level design 36s; the zero-diff case
+    # pays only the coarse level (7.9s -> 5.3s).
     coarse_n = n_buckets or DEFAULT_N_BUCKETS
-    # coarse digest tables are <= coarse_n rows: collect and compare on the
-    # driver (ONE fused job for both sides, no digest join), which also
-    # yields the exact row count for fine-level sizing for free.
-    da, db, rows_total = _paired_digest(a, b, coarse_n)
-    bad_ids = [k for k in set(da) | set(db) if da.get(k) != db.get(k)]
-
-    def _restrict(df: DataFrame, ids: List, n: int) -> DataFrame:
-        bucket = F.pmod(F.col(_H), F.lit(n))
-        if len(ids) >= n:
-            return df
-        if len(ids) <= _ISIN_LIMIT:
-            # isin over a literal set compiles to a hash-set probe (InSet)
-            return df.filter(bucket.isin(ids))
-        spark = df.sparkSession
-        bad_df = F.broadcast(
-            spark.createDataFrame([(int(x),) for x in ids], f"{_BUCKET} long")
-        )
-        return df.withColumn(_BUCKET, bucket).join(bad_df, _BUCKET, "left_semi").drop(_BUCKET)
-
+    bad_ids, dirty_rows, rows_total = _paired_digest(a, b, coarse_n)
     a_bad = _restrict(a, bad_ids, coarse_n)
     b_bad = _restrict(b, bad_ids, coarse_n)
 
     # --- level 2: fine digests over the dirty-coarse rows only --------------
-    # ...unless the dirty-coarse rows are ALREADY few: phase 2's windowed
+    # ...unless the dirty-coarse rows are ALREADY few: phase 2's per-key
     # multiset compare over <2M narrow rows costs less than another
-    # digest round-trip (two aggregate jobs + two restriction scans), so
-    # the fine level only pays for itself when it can prune a big set.
-    # Exact dirty-row count comes free from the coarse digests.
-    dirty_rows = sum(da[b][0] for b in bad_ids if b in da) + sum(
-        db[b][0] for b in bad_ids if b in db
-    )
+    # digest round-trip, so the fine level only pays for itself when it
+    # can prune a big set. Exact dirty-row count comes free from the
+    # coarse digests.
     extra_handles: List[DataFrame] = []
     if n_buckets is None and bad_ids and dirty_rows > _FINE_LEVEL_MIN_ROWS:
         fine_n = 1 << max(rows_total // _AUTO_ROWS_PER_BUCKET, 1).bit_length()
         if fine_n > coarse_n:
-            fa = _bucket_digest(a_bad, fine_n)
-            fb = _bucket_digest(b_bad, fine_n)
             # The dirty fine-bucket set must NEVER round-trip through the
             # Python driver when it is large: at a ~2% uniform diff rate
             # over 60M rows/side, ~2M of the 8.4M fine buckets mismatch,
-            # and the old collect() + createDataFrame ping-pong serialized
+            # and a collect() + createDataFrame ping-pong serialized
             # millions of rows through py4j twice (the r12 sf10 probe
             # flagged the entry SUPERLINEAR: 25.5s→131s for 3.33x data;
             # on a 1000-executor cluster the driver hop is strictly
@@ -291,7 +239,10 @@ def hash_diff(
             # directly (one long column); sets too big to broadcast fall
             # through to a plain left-semi under AQE; a fully-dirty set
             # prunes nothing and is skipped.
-            ids_df = mismatched_buckets(fa, fb).persist()
+            ids_df = (
+                _side_digests(_bucketed(a_bad, fine_n), _bucketed(b_bad, fine_n), [_BUCKET])
+                .filter(_digests_differ()).select(_BUCKET).persist()
+            )
             n_ids = ids_df.count()
             if n_ids <= _ISIN_LIMIT:
                 fine_ids = [r[_BUCKET] for r in ids_df.collect()]
@@ -306,83 +257,32 @@ def hash_diff(
             else:
                 ids_df.unpersist()
 
-    # Phase 2 — the diff_sets decision, one shuffle over the surviving
-    # NARROW rows: union both sides tagged with a sign, hash-partition by
-    # PK, and compare each PK's per-side (count, checksum-sum) multiset
-    # digest (hashdiff_tables.py:30-84 semantics). Grouping is on the
-    # NORMALIZED key strings carried from _annotated — the same canonical
-    # form the digests hash — not the raw renamed key values, whose
-    # types/trimming may differ across sides.
-    u = a_bad.withColumn(SIGN_COL, F.lit("-")).unionAll(
-        b_bad.withColumn(SIGN_COL, F.lit("+"))
+    # Phase 2 — the diff_sets decision (hashdiff_tables.py:30-84): the same
+    # digest kernel per NORMALIZED key over the surviving narrow rows, one
+    # map-side-combined aggregation. Only the differing KEY SET is consumed
+    # downstream, so no window or join back to the rows is needed.
+    bad_cached = (
+        _side_digests(a_bad, b_bad, knorm_names)
+        .filter(_digests_differ(emit_equal_duplicates))
+        .select(*knorm_names).persist()
     )
-    is_a = (F.col(SIGN_COL) == "-").cast("long")
-    knorm_names = [_knorm(i) for i in range(nkeys)]
-
-    def _pk_differs(ca, cb, sa, sb):
-        multiset = (ca != cb) | ~sa.eqNullSafe(sb)
-        if emit_equal_duplicates:
-            return (ca != 1) | (cb != 1) | multiset
-        return multiset
-
-    if persist == "narrow":
-        # the narrow frames carry no raw columns: decide PKs here, then
-        # re-read each side pruned to those keys (all rows of a differing
-        # PK match the semi-join, preserving multiset emission). Only the
-        # KEY SET is consumed downstream, so the per-key digests come
-        # from one hash AGGREGATION (map-side partial agg, no sort)
-        # instead of the wide path's window-over-union + distinct — one
-        # Exchange of partial aggregates replaces the window's full-row
-        # exchange + sort + a second distinct exchange (r13b: the window
-        # count job read 1.8-3.5s at sf0.1 for ~30k rows; at scale the
-        # partial agg also shuffles per-key digests, never rows). The
-        # per-key decision expression is identical.
-        g = u.groupBy(*knorm_names).agg(
-            F.sum(is_a).alias("__ca__"),
-            F.sum(1 - is_a).alias("__cb__"),
-            F.sum(F.when(F.col(SIGN_COL) == "-", F.col(_CKS))).alias("__sa__"),
-            F.sum(F.when(F.col(SIGN_COL) == "+", F.col(_CKS))).alias("__sb__"),
-        )
-        bad_cached = g.filter(_pk_differs(
-            F.col("__ca__"), F.col("__cb__"), F.col("__sa__"),
-            F.col("__sb__"),
-        )).select(*knorm_names).persist()
-        # The differing-key set is proportional to the DIFF count, not the
-        # table: broadcast it so the pruned re-read is scan+broadcast-semi,
-        # never a full shuffle of both sides (unbroadcast, the semi join
-        # sort-merge-shuffled 6M rows per side and narrow ran 5x slower
-        # than wide at sf0.1). Above the cap, fall back to AQE's choice.
-        bad_keys = (
-            F.broadcast(bad_cached)
-            if bad_cached.count() <= _BROADCAST_KEYS_LIMIT
-            else bad_cached
-        )
-        out = _narrow_emit(t1, cols1, out_names, "-", bad_keys).unionAll(
-            _narrow_emit(t2, cols2, out_names, "+", bad_keys)
-        )
-        out._ddspark_persisted = [a, b, bad_cached, *extra_handles]
-        return out
-    # wide path: the full rows ride the frames, so emission is per ROW —
-    # the window form computes the per-key digests alongside each row in
-    # one pass (an aggregation would need a join back to the rows)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*knorm_names)
-    emitted = u.withColumn(
-        "__emit__",
-        _pk_differs(
-            F.sum(is_a).over(w),
-            F.sum(1 - is_a).over(w),
-            F.sum(F.when(F.col(SIGN_COL) == "-", F.col(_CKS))).over(w),
-            F.sum(F.when(F.col(SIGN_COL) == "+", F.col(_CKS))).over(w),
-        ),
-    ).filter(F.col("__emit__"))
-    out = emitted.select(SIGN_COL, *out_names)
+    # The differing-key set is proportional to the DIFF count, not the
+    # table: broadcast it so the pruned re-read is scan+broadcast-semi,
+    # never a full shuffle of both sides (unbroadcast, the semi join
+    # sort-merge-shuffled 6M rows per side and ran 5x slower at sf0.1).
+    # Above the cap, fall back to AQE's choice.
+    bad_keys = (
+        F.broadcast(bad_cached)
+        if bad_cached.count() <= _BROADCAST_KEYS_LIMIT
+        else bad_cached
+    )
+    out = _emit(t1, cols1, out_names, "-", bad_keys).unionAll(
+        _emit(t2, cols2, out_names, "+", bad_keys)
+    )
     # Caller-managed cache lifecycle: the result is lazy, so the persisted
-    # sides must outlive it. DiffResult.unpersist() (and the CLI) release
-    # them once the diff is materialized; long-lived sessions doing many
-    # diffs would otherwise accumulate cached wide tables.
-    out._ddspark_persisted = [a, b, *extra_handles]
+    # frames must outlive it. DiffResult.unpersist() (and the CLI) release
+    # them once the diff is materialized.
+    out._ddspark_persisted = [a, b, bad_cached, *extra_handles]
     return out
 
 

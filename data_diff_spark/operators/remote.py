@@ -1003,6 +1003,8 @@ def hash_diff_remote(
     filter is dropped and the remote side streams the relation once without
     re-hashing every row against a giant IN list.
     """
+    if n_buckets is not None and n_buckets < 1:
+        raise ValueError(f"n_buckets must be a positive int, got {n_buckets!r}")
     spark = t1.df.sparkSession
     cols = list(t1.relevant_columns)
     keys = list(t1.key_columns)

@@ -57,6 +57,28 @@ def test_cli_stats(spark, sf_dir, mod_orders_path, capsys):
     assert int(out["updated"]) == n // 100
 
 
+def test_n_buckets_must_be_positive(spark, sf_dir, capsys):
+    """0 and negative bucket counts are rejected, not silently read as
+    "auto" (0) or "prune nothing" (negative), by both hashdiff operators
+    and the CLI flag."""
+    from data_diff_spark import table_segment
+    from data_diff_spark.operators.hashdiff import hash_diff
+    from data_diff_spark.operators.remote import hash_diff_remote
+
+    t = table_segment(spark.range(3), ["id"])
+    orders = f"parquet://{sf_dir}/orders.parquet"
+    for bad in (0, -4):
+        with pytest.raises(ValueError, match="n_buckets"):
+            hash_diff(t, t, n_buckets=bad)
+        with pytest.raises(ValueError, match="n_buckets"):
+            hash_diff_remote(t, None, n_buckets=bad)
+        with pytest.raises(SystemExit) as exc:
+            main([orders, orders, "-k", "o_orderkey", "-a", "hashdiff",
+                  "--n-buckets", str(bad)], spark=spark)
+        assert exc.value.code == 2
+        assert "--n-buckets" in capsys.readouterr().err
+
+
 def test_cli_jsonl_hashdiff(spark, sf_dir, mod_orders_path, capsys):
     rc = main(
         [f"parquet://{sf_dir}/orders.parquet", f"parquet://{mod_orders_path}",

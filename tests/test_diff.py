@@ -215,27 +215,25 @@ def test_per_column_diff_counts(spark):
     assert row["exclusive_a"] == 0 and row["exclusive_b"] == 0
 
 
-def test_hashdiff_narrow_persist_equals_wide(spark, sf_dir):
-    """persist='narrow' (keys+checksums cached, emitted keys re-read via
-    semi-join) must emit the exact multiset the wide path emits — exercised
-    on the dup-key compound-key lineitem workload."""
-    from data_diff_spark.workload import _lineitem_segments
+def test_hashdiff_dupkeys_matches_duckdb_oracle(spark, sf_dir):
+    """hash_diff on the dup-key compound-key lineitem pair emits exactly
+    the multiset of the workload's DuckDB digest oracle (an independent
+    engine replaying the per-PK multiset rule)."""
+    import duckdb
+
+    from data_diff_spark.workload import _hashdiff_lineitem_oracle, _lineitem_segments
 
     t1, t2 = _lineitem_segments(spark, sf_dir)
-    wide = hash_diff(t1, t2, n_buckets=256, persist="wide")
-    narrow = hash_diff(t1, t2, n_buckets=256, persist="narrow")
+    d = hash_diff(t1, t2, n_buckets=256)
+    con = duckdb.connect()
+    con.execute(f"create view lineitem as select * from read_parquet('{sf_dir}/lineitem.parquet')")
+    want = con.execute(_hashdiff_lineitem_oracle()).fetchall()
     key = lambda r: tuple(str(v) for v in r)
-    assert sorted(map(key, wide.collect())) == sorted(map(key, narrow.collect()))
-    with pytest.raises(ValueError, match="persist"):
-        hash_diff(t1, t2, persist="bogus")
-    # r13: the narrow path's phase-2 key decision is a hash AGGREGATION
-    # (map-side partial agg, no sort), never the wide path's
-    # window-over-union — pin the plan shape so it cannot silently
-    # regress to the window form
-    narrow_plan = narrow._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in narrow_plan
-    wide_plan = wide._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in wide_plan
+    assert want
+    assert sorted(map(key, d.collect())) == sorted(map(key, want))
+    # the phase-2 key decision is a hash AGGREGATION (map-side partial agg,
+    # no sort), never a window over the union
+    assert "Window" not in d._jdf.queryExecution().executedPlan().toString()
 
 
 def test_stats_dict(spark):
@@ -341,3 +339,83 @@ def test_fine_level_large_id_set_stays_jvm_side(spark, monkeypatch):
     c = spark.range(0, 100).selectExpr("id", "cast(id + 1 as string) as data")
     d2 = hash_diff(table_segment(a.limit(100), ["id"]), table_segment(c, ["id"]))
     assert d2.count() == 200
+
+
+def test_digest_kernel_shape_and_fine_level_branches(spark, monkeypatch):
+    """The coarse, fine and per-key levels all run the one digest kernel,
+    and each call compiles to ONE aggregation over the side-tagged union:
+    one Exchange, a partial + final HashAggregate, no Join (per-side
+    aggregates compared through a full outer join would show two
+    Exchanges, four HashAggregates and a Join).
+
+    The fine level only runs when its bucket count exceeds the coarse
+    DEFAULT_N_BUCKETS, which a few thousand rows at the default rows-per-
+    bucket target never reach; shrinking that target makes a 10k-row pair
+    reach it. Output is pinned identical on every id-set branch: literal
+    InSet, broadcast id frame, plain left-semi (the last two also restrict
+    the coarse level through a driver-built id frame), and the fully-dirty
+    skip."""
+    from data_diff_spark.operators import hashdiff as H
+
+    calls = []
+    real = H._side_digests
+
+    def spy(a, b, by):
+        out = real(a, b, by)
+        calls.append((list(by), out))
+        return out
+
+    def node_names(df):
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.initialPlan()
+        names, todo = [], [plan]
+        while todo:
+            node = todo.pop()
+            names.append(node.nodeName())
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+        return names
+
+    levels = [[H._BUCKET], [H._BUCKET], [H._knorm(0)]]
+    a = spark.range(0, 10000).selectExpr("id", "cast(id * 7 as string) as data")
+    b = spark.range(0, 10000).selectExpr(
+        "id", "cast(id * 7 + cast(id % 50 = 3 as int) as string) as data")
+    t1, t2 = table_segment(a, ["id"]), table_segment(b, ["id"])
+    expect = _sorted_rows(hash_diff(t1, t2))
+    assert len(expect) == 2 * 200
+
+    monkeypatch.setattr(H, "_side_digests", spy)
+    monkeypatch.setattr(H, "_FINE_LEVEL_MIN_ROWS", 0)
+    monkeypatch.setattr(H, "_AUTO_ROWS_PER_BUCKET", 1)
+    for isin_limit, bkeys_limit, n_handles in (
+        (8192, 2_000_000, 3),  # small set: literal InSet probe
+        (1, 2_000_000, 4),     # large set: broadcast the id frame (kept cached)
+        (1, 1, 4),             # too big to broadcast: plain left-semi (AQE)
+    ):
+        calls.clear()
+        monkeypatch.setattr(H, "_ISIN_LIMIT", isin_limit)
+        monkeypatch.setattr(H, "_BROADCAST_KEYS_LIMIT", bkeys_limit)
+        d = hash_diff(t1, t2)
+        assert _sorted_rows(d) == expect, (isin_limit, bkeys_limit)
+        assert [by for by, _ in calls] == levels
+        assert len(d._ddspark_persisted) == n_handles
+        if isin_limit > 1:  # no restriction joins feed the kernel here
+            for by, df in calls:
+                names = node_names(df)
+                assert names.count("Exchange") == 1, (by, names)
+                assert names.count("HashAggregate") == 2, (by, names)
+                assert not [n for n in names if "Join" in n or "Window" in n], (by, names)
+        for h in d._ddspark_persisted:
+            h.unpersist(True)
+    # every row of a 100k pair differs and 100k/24 rows per bucket sizes
+    # 8192 fine buckets (~12 rows each): every fine bucket mismatches, so
+    # the id set prunes nothing and is released
+    calls.clear()
+    monkeypatch.setattr(H, "_AUTO_ROWS_PER_BUCKET", 24)
+    a = spark.range(0, 100000).selectExpr("id", "cast(id as string) as data")
+    c = spark.range(0, 100000).selectExpr("id", "cast(id + 1 as string) as data")
+    d = hash_diff(table_segment(a, ["id"]), table_segment(c, ["id"]))
+    assert d.count() == 200000
+    assert [by for by, _ in calls] == levels
+    assert len(d._ddspark_persisted) == 3

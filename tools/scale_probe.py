@@ -68,9 +68,6 @@ def main():
     t0 = time.time(); out["hashdiff_rows"] = hd.hash_diff(t1, t2).count()
     out["hashdiff_sec"] = round(time.time() - t0, 1)
     spark.catalog.clearCache()
-    t0 = time.time(); out["hashdiff_narrow_rows"] = hd.hash_diff(t1, t2, persist="narrow").count()
-    out["hashdiff_narrow_sec"] = round(time.time() - t0, 1)
-    spark.catalog.clearCache()
     t0 = time.time(); out["hashdiff_zero_rows"] = hd.hash_diff(
         t1, table_segment(big, KEYS, extra_columns=extras)).count()
     out["hashdiff_zero_sec"] = round(time.time() - t0, 1)
