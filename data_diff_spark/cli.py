@@ -225,9 +225,6 @@ def _age_bound(spark: SparkSession, age: str):
 
 
 def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = None) -> int:
-    from pyspark.sql import functions as F
-
-    from data_diff_spark.diff import Algorithm, diff_tables
     from data_diff_spark.sources.connect import connect_to_table
 
     args = build_parser().parse_args(argv)
@@ -313,59 +310,7 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
                     print(f"{row[0]} {', '.join(repr(row[c]) for c in diff.columns[1:])}")
             return 0
 
-        if args.remote_digest:
-            return _remote_digest_diff(spark, args, keys)
-
-        t1 = connect_to_table(spark, args.uri1, keys, args.update_column, None, args.where)
-        t2 = connect_to_table(spark, args.uri2, keys, args.update_column, None, args.where)
-
-        from data_diff_spark.diff import diff_schemas
-
-        for col, ta, tb, status in diff_schemas(t1.df, t2.df):
-            if status != "common":
-                print(f"warning: schema difference on {col!r}: {ta} vs {tb} ({status})",
-                      file=sys.stderr)
-
-        shared = [c for c in t1.df.columns if c in set(t2.df.columns)]
-        if args.columns:
-            compare = expand_columns(args.columns, shared, keys)
-        else:
-            compare = [c for c in shared if c not in keys]
-        t1 = t1.with_(extra_columns=tuple(compare))
-        t2 = t2.with_(extra_columns=tuple(compare))
-
-        if not args.no_refine:
-            # sampling refinement of string columns (reference
-            # _refine_coltypes runs on every connect): uuid -> trimmed
-            # compare, json -> structural compare, alphanum -> flagged
-            from data_diff_spark.refine import refined
-
-            t1, t2 = refined(t1), refined(t2)
-            for side, seg in (("A", t1), ("B", t2)):
-                for col, kind in sorted(seg.kind_overrides.items()):
-                    print(f"refined: table {side} column {col!r} detected as {kind}",
-                          file=sys.stderr)
-
-        if args.update_column and (args.min_age or args.max_age):
-            upd = F.col(args.update_column)
-            for seg_attr, pred in (("min_age", upd < _age_bound(spark, args.min_age) if args.min_age else None),
-                                   ("max_age", upd > _age_bound(spark, args.max_age) if args.max_age else None)):
-                if pred is not None:
-                    t1 = t1.with_(df=t1.df.filter(pred))
-                    t2 = t2.with_(df=t2.df.filter(pred))
-
-        result = diff_tables(
-            t1,
-            t2,
-            algorithm=Algorithm(args.algorithm),
-            n_buckets=args.n_buckets,
-            # AUTO resolves to joindiff (diff.py), so the duplicate-key
-            # guard the reference always runs for joindiff applies there too
-            validate_unique_key=not args.assume_unique_key
-            and args.algorithm in ("joindiff", "auto"),
-            skip_null_keys=args.skip_null_keys,
-            null_safe_keys=not args.no_null_safe_keys,
-        )
+        result = (_remote_digest_diff if args.remote_digest else _local_diff)(spark, args, keys)
 
         if args.explain or args.interactive:
             plan = result.df._jdf.queryExecution().explainString(
@@ -391,7 +336,8 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
             return 0
 
         if args.stats:
-            stats = result.get_stats_dict()
+            # a remote side has no Spark table to count: sign counts only
+            stats = result.diff_by_sign() if args.remote_digest else result.get_stats_dict()
             for k, v in stats.items():
                 print(f"{k}: {v}")
             return 0
@@ -412,6 +358,63 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
             result.unpersist()
         if own_session:
             spark.stop()
+
+
+def _local_diff(spark, args, keys):
+    """Both URIs read into Spark: joindiff or hashdiff via diff_tables."""
+    from pyspark.sql import functions as F
+
+    from data_diff_spark.diff import Algorithm, diff_schemas, diff_tables
+    from data_diff_spark.sources.connect import connect_to_table
+
+    t1 = connect_to_table(spark, args.uri1, keys, args.update_column, None, args.where)
+    t2 = connect_to_table(spark, args.uri2, keys, args.update_column, None, args.where)
+
+    for col, ta, tb, status in diff_schemas(t1.df, t2.df):
+        if status != "common":
+            print(f"warning: schema difference on {col!r}: {ta} vs {tb} ({status})",
+                  file=sys.stderr)
+
+    shared = [c for c in t1.df.columns if c in set(t2.df.columns)]
+    if args.columns:
+        compare = expand_columns(args.columns, shared, keys)
+    else:
+        compare = [c for c in shared if c not in keys]
+    t1 = t1.with_(extra_columns=tuple(compare))
+    t2 = t2.with_(extra_columns=tuple(compare))
+
+    if not args.no_refine:
+        # sampling refinement of string columns (reference
+        # _refine_coltypes runs on every connect): uuid -> trimmed
+        # compare, json -> structural compare, alphanum -> flagged
+        from data_diff_spark.refine import refined
+
+        t1, t2 = refined(t1), refined(t2)
+        for side, seg in (("A", t1), ("B", t2)):
+            for col, kind in sorted(seg.kind_overrides.items()):
+                print(f"refined: table {side} column {col!r} detected as {kind}",
+                      file=sys.stderr)
+
+    if args.update_column and (args.min_age or args.max_age):
+        upd = F.col(args.update_column)
+        for seg_attr, pred in (("min_age", upd < _age_bound(spark, args.min_age) if args.min_age else None),
+                               ("max_age", upd > _age_bound(spark, args.max_age) if args.max_age else None)):
+            if pred is not None:
+                t1 = t1.with_(df=t1.df.filter(pred))
+                t2 = t2.with_(df=t2.df.filter(pred))
+
+    return diff_tables(
+        t1,
+        t2,
+        algorithm=Algorithm(args.algorithm),
+        n_buckets=args.n_buckets,
+        # AUTO resolves to joindiff (diff.py), so the duplicate-key
+        # guard the reference always runs for joindiff applies there too
+        validate_unique_key=not args.assume_unique_key
+        and args.algorithm in ("joindiff", "auto"),
+        skip_null_keys=args.skip_null_keys,
+        null_safe_keys=not args.no_null_safe_keys,
+    )
 
 
 _JDBC_DIALECTS = {
@@ -474,12 +477,13 @@ def _remote_relation(rel: str, args, bounds: dict, dialect) -> str:
     return f"(select * from {rel} where {' and '.join(preds)}) seg0"
 
 
-def _remote_digest_diff(spark, args, keys) -> int:
+def _remote_digest_diff(spark, args, keys):
     """uri1 stays a Spark-side segment; uri2 becomes a RemoteSide that
     computes its own bucket digests (reference hashdiff deployment shape:
     only checksums + mismatched-bucket rows cross the wire)."""
     from pyspark.sql import functions as F
 
+    from data_diff_spark.diff import DiffResult
     from data_diff_spark.operators import remote as RM
     from data_diff_spark.sources.connect import connect_to_table
 
@@ -567,25 +571,7 @@ def _remote_digest_diff(spark, args, keys) -> int:
         raise SystemExit(
             "error: --remote-digest needs uri2 = duckdb://…, sqlite://… or jdbc:…")
 
-    diff = RM.hash_diff_remote(t1, side, n_buckets=args.n_buckets)
-    try:
-        if args.stats:
-            rows = diff.groupBy(diff.columns[0]).count().collect()
-            counts = {r[0]: r["count"] for r in rows}
-            print(f"-: {counts.get('-', 0)}")
-            print(f"+: {counts.get('+', 0)}")
-            return 0
-        df = diff.limit(args.limit) if args.limit else diff
-        cols = df.columns[1:]
-        for row in df.toLocalIterator():
-            if args.json_output:
-                print(json.dumps({"sign": row[0], **{c: _jsonable(row[c]) for c in cols}}))
-            else:
-                print(f"{row[0]} {', '.join(repr(row[c]) for c in cols)}")
-        return 0
-    finally:
-        for cached in getattr(diff, "_ddspark_persisted", []):
-            cached.unpersist()
+    return DiffResult(RM.hash_diff_remote(t1, side, n_buckets=args.n_buckets), t1, None)
 
 
 def _remote_compare_columns(args, t1, remote_cols, keys):

@@ -32,7 +32,7 @@ class DiffResult:
 
     df: DataFrame
     table1: TableSegment
-    table2: TableSegment
+    table2: Optional[TableSegment]  # None when side B is a remote engine
 
     def unpersist(self) -> None:
         """Release caches the diff operator pinned for its own multi-read
@@ -48,7 +48,7 @@ class DiffResult:
 
     def diff_by_sign(self) -> Dict[str, int]:
         rows = self.df.groupBy(joindiff.SIGN_COL).count().collect()
-        out = {"+": 0, "-": 0}
+        out = {"-": 0, "+": 0}
         out.update({r[joindiff.SIGN_COL]: r["count"] for r in rows})
         return out
 

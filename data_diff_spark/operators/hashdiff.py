@@ -29,7 +29,7 @@ PostgreSQL/DuckDB/Snowflake via the reference's segment SQL
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -122,15 +122,10 @@ def _side_digests(a: DataFrame, b: DataFrame, by: List[str]) -> DataFrame:
     )
 
 
-def _digests_differ(emit_equal_duplicates: bool = False) -> Column:
+def _digests_differ() -> Column:
     """A group's row multiset differs iff its (count, checksum-sum) digests
-    differ (hashdiff_tables.py:210-212); emit_equal_duplicates adds the
-    reference's "PK with 2+ rows on either side" rule (hashdiff_tables.py:62-69)."""
-    ca, cb = F.col("ca"), F.col("cb")
-    differs = (ca != cb) | ~F.col("sa").eqNullSafe(F.col("sb"))
-    if emit_equal_duplicates:
-        return (ca != 1) | (cb != 1) | differs
-    return differs
+    differ (hashdiff_tables.py:210-212)."""
+    return (F.col("ca") != F.col("cb")) | ~F.col("sa").eqNullSafe(F.col("sb"))
 
 
 def _paired_digest(a: DataFrame, b: DataFrame, n_buckets: int):
@@ -172,18 +167,12 @@ def hash_diff(
     t1: TableSegment,
     t2: TableSegment,
     n_buckets: Optional[int] = None,
-    emit_equal_duplicates: bool = False,
 ) -> DataFrame:
-    """Diff DataFrame (sign, *columns-of-table-1's-names), duplicate-PK-aware.
-
-    Default: emit ALL rows of every PK whose row *multiset* differs between
-    sides — deterministic regardless of bucketing.
-
-    emit_equal_duplicates=True reproduces the reference's diff_sets artifact
-    (hashdiff_tables.py:62-69): a PK with 2+ rows on either side is emitted
-    "regardless of values" — but only when its segment was downloaded, i.e.
-    here, when its bucket digest mismatched. Like the reference, that output
-    then depends on how the key space was segmented.
+    """Diff DataFrame (sign, *columns-of-table-1's-names), duplicate-PK-aware:
+    emit ALL rows of every PK whose row *multiset* differs between sides —
+    deterministic regardless of bucketing. (The reference's diff_sets also
+    emits a PK with 2+ equal rows per side when its segment was downloaded,
+    hashdiff_tables.py:62-69 — an artifact of segmentation, not reproduced.)
 
     n_buckets=None auto-sizes a two-level digest scheme (coarse prune +
     fine isolate); an explicit positive int forces one fixed level.
@@ -263,7 +252,7 @@ def hash_diff(
     # downstream, so no window or join back to the rows is needed.
     bad_cached = (
         _side_digests(a_bad, b_bad, knorm_names)
-        .filter(_digests_differ(emit_equal_duplicates))
+        .filter(_digests_differ())
         .select(*knorm_names).persist()
     )
     # The differing-key set is proportional to the DIFF count, not the
@@ -284,8 +273,3 @@ def hash_diff(
     # them once the diff is materialized.
     out._ddspark_persisted = [a, b, bad_cached, *extra_handles]
     return out
-
-
-def count_and_checksum(t: TableSegment) -> Tuple[int, Optional[int]]:
-    """Whole-table count + checksum (one pass); see TableSegment.count_and_checksum."""
-    return t.count_and_checksum()

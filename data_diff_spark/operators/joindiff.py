@@ -216,16 +216,3 @@ def count_diff_per_column(t1: TableSegment, t2: TableSegment) -> DataFrame:
             F.sum(F.coalesce(F.col(f"__diff_{c}"), F.lit(False)).cast("long")).alias(f"diff_{c}")
         )
     return j.agg(*aggs)
-
-
-def sample_exclusive_rows(t1: TableSegment, t2: TableSegment, n: int = 10) -> DataFrame:
-    """Random sample of rows present on exactly one side
-    (joindiff_tables.py:356-394: ORDER BY random() LIMIT 10)."""
-    diff = join_diff(t1, t2)
-    return diff.orderBy(F.rand()).limit(n)
-
-
-def materialize_diff(diff: DataFrame, table_name: str, limit: int = 1000, mode: str = "append") -> None:
-    """Persist up to `limit` diff rows (reference _materialize_diff
-    joindiff_tables.py:396-399, default write limit 1000 rows)."""
-    diff.limit(limit).write.mode(mode).saveAsTable(table_name)

@@ -12,16 +12,22 @@ ships rows for matching buckets; it runs ONE digest query
 using the exact checksum formula of the reference's dialects (bit-identical
 to our normalize.py — that equivalence is what the golden tests pin), and
 ships only n_buckets digest rows plus the rows of mismatched buckets.
+Everything after the digest compare is hashdiff's own kernel: the per-key
+_side_digests decision over the Spark side's narrow cached frame and the
+fetched rows, then hashdiff's _emit re-read for the '-' rows.
 
 Three layers, mirroring the reference's dialect/adapter split
 (data_diff/databases/base.py + the 13 per-database files):
 
   RemoteDialect   per-engine SQL rendering (normalization strings, the
-                  md5->int48 checksum, the bucket hash). DuckDBDialect and
-                  PostgresDialect ship; adding an engine = the reference's
-                  md5_as_int/normalize_* recipe for it (~10 lines).
+                  md5->int48 checksum, the bucket hash). Adding an engine
+                  = the reference's md5_as_int/normalize_* recipe for it
+                  (~10 lines).
   RemoteSide      the adapter contract hash_diff_remote consumes:
-                  bucket_digests() + fetch_bucket_rows().
+                  bucket_digests() + fetch_bucket_rows(). It renders the
+                  digest and fetch SQL once for every adapter; an adapter
+                  implements only execution: _query(sql) -> rows (a DB-API
+                  default) and _frame(spark, schema, sql) -> DataFrame.
   DuckDBSide      in-process DB-API adapter (DuckDB stands in for any
                   reference dialect available as a local connection).
   SQLiteSide      in-process stdlib sqlite3 adapter — the THIRD dialect
@@ -32,8 +38,8 @@ Three layers, mirroring the reference's dialect/adapter split
                   mismatched-row fetch are pushed down as JDBC source
                   queries (spark.read.jdbc query=...), so the remote
                   engine does the hashing and only digests + differing
-                  rows cross the wire. No live DB exists in this sandbox;
-                  tests drive JdbcSide end-to-end by injecting a reader
+                  rows cross the wire. Embedded Derby drives it live
+                  (tests/test_jdbc_derby.py); other tests inject a reader
                   that routes the generated SQL to DuckDB.
 
 Scale notes: network transfer is O(n_buckets + differing rows), same as the
@@ -49,22 +55,41 @@ from typing import Callable, List, Mapping, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from data_diff_spark.constants import CHECKSUM_OFFSET
-from data_diff_spark.normalize import md5_as_int, normalized_columns, row_fingerprint
+from data_diff_spark.constants import CHECKSUM_OFFSET, DEFAULT_NUMERIC_PRECISION
+from data_diff_spark.operators.hashdiff import (
+    _AUTO_ROWS_PER_BUCKET,
+    _BROADCAST_KEYS_LIMIT,
+    _BUCKET,
+    _CKS,
+    _annotated_keys,
+    _digests_differ,
+    _emit,
+    _key_norm,
+    _knorm,
+    _side_digests,
+)
 from data_diff_spark.operators.joindiff import SIGN_COL
 from data_diff_spark.table import TableSegment
 
-# Cross-engine bucket id: low 8 hex digits of md5 of the normalized key
-# fingerprint, mod n_buckets. Computable in any engine with md5().
-_BUCKET = "__bucket__"
-_CKS = "__cks__"
-
 _DECIMAL_RE = re.compile(r"(?:DECIMAL|NUMERIC)\s*\(\s*\d+\s*,\s*(\d+)\s*\)")
+_FLOAT_TYPES = ("DOUBLE", "FLOAT", "REAL", "DOUBLE PRECISION", "FLOAT8", "FLOAT4")
+_INT_TYPES = ("BIGINT", "INTEGER", "SMALLINT", "TINYINT", "HUGEINT",
+              "UBIGINT", "UINTEGER", "INT", "INT2", "INT4", "INT8")
+
+
+def _decimal_scale(t: str) -> int:
+    """Declared scale of an upper-cased DECIMAL/NUMERIC type (6 if bare)."""
+    m = _DECIMAL_RE.match(t)
+    return int(m.group(1)) if m else 6
 
 
 def _spark_bucket(key_norm: List, n_buckets: int):
-    joined = F.concat_ws("|", *[F.coalesce(c, F.lit("<null>")) for c in key_norm])
+    """Cross-engine bucket id: first 8 hex digits of md5 of the '|'-joined
+    normalized keys (hashdiff._key_norm output, NULL already '<null>'),
+    mod n_buckets. Computable in any engine with md5()."""
+    joined = F.concat_ws("|", *key_norm)
     return F.pmod(F.conv(F.substring(F.md5(joined), 1, 8), 16, 10).cast("long"), F.lit(n_buckets))
 
 
@@ -126,10 +151,8 @@ class RemoteDialect:
         t = sql_type.upper()
         if t.startswith(("DECIMAL", "NUMERIC")):
             # the column's OWN scale, like Spark normalize_as_string
-            m = _DECIMAL_RE.match(t)
-            scale = int(m.group(1)) if m else 6
-            return f"cast(cast({col} as decimal(38,{scale})) as varchar)"
-        if t in ("DOUBLE", "FLOAT", "REAL", "DOUBLE PRECISION", "FLOAT8", "FLOAT4"):
+            return f"cast(cast({col} as decimal(38,{_decimal_scale(t)})) as varchar)"
+        if t in _FLOAT_TYPES:
             # via varchar: engines convert double->decimal through float
             # multiplication, which is inexact beyond 2^53/10^scale
             # (DuckDB renders 576460752305.0 as ...304.999936); the
@@ -148,8 +171,7 @@ class RemoteDialect:
             return self.norm_date_sql(col)
         if t in ("BOOLEAN", "BOOL"):
             return f"cast(cast({col} as int) as varchar)"
-        if t in ("BIGINT", "INTEGER", "SMALLINT", "TINYINT", "HUGEINT",
-                 "UBIGINT", "UINTEGER", "INT", "INT2", "INT4", "INT8"):
+        if t in _INT_TYPES:
             return f"cast({col} as varchar)"
         return col  # VARCHAR/TEXT
 
@@ -455,9 +477,7 @@ class DerbyDialect(RemoteDialect):
     def norm_sql(self, col: str, sql_type: str) -> str:
         t = sql_type.upper()
         if t.startswith(("DECIMAL", "NUMERIC")):
-            m = _DECIMAL_RE.match(t)
-            scale = int(m.group(1)) if m else 6
-            return f"trim(cast(cast({col} as decimal(31,{scale})) as char(42)))"
+            return f"trim(cast(cast({col} as decimal(31,{_decimal_scale(t)})) as char(42)))"
         if t in ("DOUBLE", "FLOAT", "REAL", "DOUBLE PRECISION"):
             # Double.toString gives the shortest round-trip repr (same
             # contract as the other engines' varchar hop); Derby's
@@ -607,9 +627,7 @@ class SQLiteDialect(RemoteDialect):
             # unavailable; route through the registered dnorm_s at the
             # DECLARED scale so the fingerprint matches Spark's scale-padded
             # decimal string ('1.5' as DECIMAL(10,2) -> '1.50', not '1.5').
-            m = _DECIMAL_RE.match(t)
-            scale = int(m.group(1)) if m else 6
-            return f"dnorm_s({col}, {scale})"
+            return f"dnorm_s({col}, {_decimal_scale(t)})"
         if t in ("DOUBLE", "REAL", "FLOAT", "DOUBLE PRECISION"):
             return f"dnorm({col})"  # BigDecimal.valueOf + HALF_UP mirror
         if "TIMESTAMP" in t or t == "DATETIME":
@@ -695,20 +713,49 @@ def fetch_query_sql(dialect: RemoteDialect, relation_sql: str,
 
 
 class RemoteSide:
-    """Adapter contract consumed by hash_diff_remote."""
+    """Adapter contract consumed by hash_diff_remote. This base renders the
+    digest and fetch SQL for every adapter; a subclass sets dialect,
+    relation_sql, key_columns, columns (keys first, positionally paired
+    with the Spark side's relevant_columns) and types (column -> engine
+    SQL type), and implements only execution: _query and _frame."""
 
+    dialect: RemoteDialect
+    relation_sql: str
     key_columns: List[str]
     columns: List[str]
+    types: Mapping[str, str]
 
-    def bucket_digests(self, n_buckets: int) -> List[Tuple[int, int, Optional[int]]]:
+    def _query(self, sql: str) -> Sequence[Tuple]:
+        """Rows of `sql`. Default: a DB-API connection in self.con."""
+        return self.con.execute(sql).fetchall()
+
+    def _frame(self, spark: SparkSession, schema: T.StructType, sql: str) -> DataFrame:
+        """A Spark DataFrame of `sql`'s rows, one column per schema field
+        in order; values may still carry the engine's own types."""
+        raise NotImplementedError
+
+    def bucket_digests(self, n_buckets: int) -> Sequence[Tuple[int, int, Optional[int]]]:
         """[(bucket, count, checksum_sum)] — ONE remote aggregation query."""
-        raise NotImplementedError
+        return self._query(digest_query_sql(
+            self.dialect, self.relation_sql, self.key_columns, self.columns,
+            self.types, n_buckets))
 
-    def fetch_bucket_rows(self, spark: SparkSession, schema, n_buckets: int,
-                          bucket_ids: Sequence[int]) -> DataFrame:
-        """Spark DataFrame (schema = the annotated Spark side: columns +
-        __cks__ + __bucket__) holding the remote rows of the given buckets."""
-        raise NotImplementedError
+    def fetch_bucket_rows(self, spark: SparkSession, schema: T.StructType,
+                          n_buckets: int,
+                          bucket_ids: Optional[Sequence[int]]) -> DataFrame:
+        """Spark DataFrame (schema = the Spark side's columns + __cks__ +
+        __bucket__) holding the remote rows of the given buckets; an empty
+        bucket list runs no query. Columns are renamed and cast to `schema`
+        by position, like the reference's differing-column-name support."""
+        if bucket_ids is not None and not bucket_ids:
+            return spark.createDataFrame([], schema)
+        df = self._frame(spark, schema, fetch_query_sql(
+            self.dialect, self.relation_sql, self.key_columns, self.columns,
+            self.types, n_buckets, bucket_ids))
+        return df.select(*[
+            F.col(src).cast(f.dataType).alias(f.name)
+            for src, f in zip(df.columns, schema.fields)
+        ])
 
 
 class DuckDBSide(RemoteSide):
@@ -727,40 +774,12 @@ class DuckDBSide(RemoteSide):
         desc = self.con.execute(f"describe select * from {relation_sql}").fetchall()
         self.types = {r[0]: r[1] for r in desc}
 
-    def bucket_digests(self, n_buckets: int):
-        q = digest_query_sql(self.dialect, self.relation_sql, self.key_columns,
-                             self.columns, self.types, n_buckets)
-        return self.con.execute(q).fetchall()
-
-    def fetch_bucket_rows(self, spark, schema, n_buckets, bucket_ids):
-        if bucket_ids is not None and not bucket_ids:
-            return spark.createDataFrame([], schema)
-        q = fetch_query_sql(self.dialect, self.relation_sql, self.key_columns,
-                            self.columns, self.types, n_buckets, bucket_ids)
+    def _frame(self, spark, schema, sql):
         # Arrow transfer: decimals stay decimal128 (exact), timestamps stay
         # us-precision, and no per-row Python objects are built — an order of
         # magnitude faster than the pandas path for large dirty-bucket sets.
-        tbl = self.con.execute(q).fetch_arrow_table()
-        # align remote column names to the Spark side's (positional match,
-        # like the reference's differing-column-name support)
-        tbl = tbl.rename_columns([f.name for f in schema.fields])
-        try:
-            return spark.createDataFrame(tbl, schema=schema)
-        except Exception:
-            # fallback: pandas with exact decimal re-quantization
-            from decimal import Decimal
-
-            import pandas as pd
-            from pyspark.sql import types as T
-
-            pdf = tbl.to_pandas()
-            for f in schema.fields:
-                if isinstance(f.dataType, T.DecimalType) and f.name in pdf.columns:
-                    q_ = Decimal(1).scaleb(-f.dataType.scale)
-                    pdf[f.name] = pdf[f.name].map(
-                        lambda v, q_=q_: None if pd.isna(v) else Decimal(str(v)).quantize(q_)
-                    )
-            return spark.createDataFrame(pdf, schema=schema)
+        tbl = self.con.execute(sql).fetch_arrow_table()
+        return spark.createDataFrame(tbl.rename_columns(schema.names), schema=schema)
 
 
 class SQLiteSide(RemoteSide):
@@ -896,29 +915,14 @@ class SQLiteSide(RemoteSide):
         con.create_function("dnorm", 1, dnorm, **kw)
         con.create_function("dnorm_s", 2, dnorm_s, **kw)
 
-    def bucket_digests(self, n_buckets: int):
-        q = digest_query_sql(self.dialect, self.relation_sql, self.key_columns,
-                             self.columns, self.types, n_buckets)
-        return self.con.execute(q).fetchall()
-
-    def fetch_bucket_rows(self, spark, schema, n_buckets, bucket_ids):
-        from pyspark.sql import types as T
-
-        if bucket_ids is not None and not bucket_ids:
-            return spark.createDataFrame([], schema)
-        q = fetch_query_sql(self.dialect, self.relation_sql, self.key_columns,
-                            self.columns, self.types, n_buckets, bucket_ids)
-        rows = self.con.execute(q).fetchall()
+    def _frame(self, spark, schema, sql):
         # everything travels as strings (SQLite hands back native
-        # int/float/str — stringify uniformly), then cast positionally to
-        # the annotated Spark-side schema; '0'/'1' casts to boolean fine
-        srows = [tuple(None if v is None else str(v) for v in r) for r in rows]
-        names = [f.name for f in schema.fields]
-        sdf = spark.createDataFrame(
-            srows, T.StructType([T.StructField(n, T.StringType()) for n in names]))
-        return sdf.select(*[
-            F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields
-        ])
+        # int/float/str — stringify uniformly); fetch_bucket_rows then
+        # casts to the Spark side's types, and '0'/'1' casts to boolean fine
+        rows = [tuple(None if v is None else str(v) for v in r)
+                for r in self._query(sql)]
+        return spark.createDataFrame(
+            rows, T.StructType([T.StructField(n, T.StringType()) for n in schema.names]))
 
 
 class JdbcSide(RemoteSide):
@@ -959,26 +963,43 @@ class JdbcSide(RemoteSide):
             r = r.option(k, v)
         return r.load()
 
-    def bucket_digests(self, n_buckets: int):
-        q = digest_query_sql(self.dialect, self.relation_sql, self.key_columns,
-                             self.columns, self.types, n_buckets)
-        return [(r["bucket"], r["cnt"], r["cks"]) for r in self._reader(q).collect()]
+    def _query(self, sql):
+        return self._reader(sql).collect()
 
-    def fetch_bucket_rows(self, spark, schema, n_buckets, bucket_ids):
-        if bucket_ids is not None and not bucket_ids:
-            return spark.createDataFrame([], schema)
-        q = fetch_query_sql(self.dialect, self.relation_sql, self.key_columns,
-                            self.columns, self.types, n_buckets, bucket_ids)
-        df = self._reader(q)
-        # positional rename + cast to the annotated Spark-side schema
-        casted = [
-            F.col(src).cast(f.dataType).alias(f.name)
-            for src, f in zip(df.columns, schema.fields)
-        ]
-        return df.select(*casted)
+    def _frame(self, spark, schema, sql):
+        return self._reader(sql)
 
 
 # --- the cross-engine diff --------------------------------------------------
+
+
+def _match_remote_scales(t1: TableSegment, remote: RemoteSide) -> TableSegment:
+    """Render every fractional Spark column at the scale its remote column
+    renders at (norm_sql: a DECIMAL's own scale, 6 for floats, 0 for
+    integers), so equal values fingerprint equal across engines — the
+    cross-engine counterpart of unify_precisions, which cannot reach the
+    remote's SQL. A Spark integer column has no fractional rendering, so
+    pairing it with a remote scale > 0 raises rather than false-diffing
+    every row."""
+    overrides = dict(t1.precision_overrides)
+    for f, rc in zip((t1.schema[c] for c in t1.relevant_columns), remote.columns):
+        t = remote.types[rc].upper()
+        if t.startswith(("DECIMAL", "NUMERIC")):
+            scale = _decimal_scale(t)
+        elif t in _FLOAT_TYPES:
+            scale = DEFAULT_NUMERIC_PRECISION
+        elif t in _INT_TYPES:
+            scale = 0
+        else:
+            continue
+        if isinstance(f.dataType, (T.DecimalType, T.FloatType, T.DoubleType)):
+            overrides[f.name] = scale
+        elif isinstance(f.dataType, T.IntegralType) and scale > 0:
+            raise ValueError(
+                f"column {f.name!r} ({f.dataType.simpleString()}) cannot be "
+                f"compared with remote column {rc!r} ({remote.types[rc]}): the "
+                f"remote renders {scale} fractional digits, a Spark integer none")
+    return t1.with_(precision_overrides=overrides)
 
 
 def hash_diff_remote(
@@ -989,11 +1010,13 @@ def hash_diff_remote(
     """Diff a Spark-side segment against a remote-engine side.
 
     Phase 1: both engines independently compute (bucket, count, sum cks);
-    only digests cross the wire. Phase 2: rows of mismatched buckets are
-    fetched from the remote and diffed against the Spark rows of those
-    buckets with the multiset-per-PK semantics of hashdiff phase 2.
+    only digests cross the wire. Phase 2 is hashdiff's: the rows of
+    mismatched buckets are fetched from the remote, the per-key digest
+    kernel compares them with the Spark side's cached (checksum, normalized
+    key) rows of those buckets, and the differing keys' rows are emitted —
+    '-' by re-reading the Spark source, '+' from the fetched rows.
 
-    n_buckets=None (default) auto-sizes to ~TARGET_ROWS_PER_BUCKET rows per
+    n_buckets=None (default) auto-sizes to ~_AUTO_ROWS_PER_BUCKET rows per
     bucket from a Spark-side count (parquet metadata makes it near-free).
     Too few buckets is the classic trap: at a 0.4% diff rate and 1k rows per
     bucket, nearly EVERY bucket contains a diff and phase 2 degenerates into
@@ -1007,30 +1030,24 @@ def hash_diff_remote(
         raise ValueError(f"n_buckets must be a positive int, got {n_buckets!r}")
     spark = t1.df.sparkSession
     cols = list(t1.relevant_columns)
-    keys = list(t1.key_columns)
     if len(cols) != len(remote.columns):
         raise ValueError(f"column arity mismatch: {cols} vs {remote.columns}")
+    t1 = _match_remote_scales(t1, remote)
 
     if n_buckets is None:
-        TARGET_ROWS_PER_BUCKET = 16
         cnt = t1.make_select().count()
         n_buckets = 1024
-        while n_buckets * TARGET_ROWS_PER_BUCKET < cnt and n_buckets < (1 << 20):
+        while n_buckets * _AUTO_ROWS_PER_BUCKET < cnt and n_buckets < (1 << 20):
             n_buckets <<= 1
 
-    normd = normalized_columns(t1.schema, cols, t1.precision_overrides, t1.kind_overrides)
-    key_norm = normalized_columns(t1.schema, cols[:len(keys)], t1.precision_overrides, t1.kind_overrides)
-    a = (
-        t1.make_select()
-        .select(
-            *cols,
-            # long (not decimal): 49-bit values, and pandas/Arrow int64
-            # round-trips exactly when remote rows are unioned in
-            md5_as_int(row_fingerprint(normd)).cast("long").alias(_CKS),
-            _spark_bucket(key_norm, n_buckets).alias(_BUCKET),
-        )
-        .persist()
-    )
+    # hashdiff's narrow cache shape plus the cross-engine bucket: a long
+    # checksum (the remote sums bigints) and the normalized key strings
+    knames = [_knorm(i) for i in range(len(t1.key_columns))]
+    a = _annotated_keys(t1, cols).select(
+        F.col(_CKS).cast("long").alias(_CKS),
+        *knames,
+        _spark_bucket([F.col(k) for k in knames], n_buckets).alias(_BUCKET),
+    ).persist()
 
     digests = (
         a.groupBy(_BUCKET)
@@ -1064,37 +1081,29 @@ def hash_diff_remote(
     # melts the driver/codegen long before the executors see it.
     bad_df = spark.createDataFrame([(int(b),) for b in bad], f"{_BUCKET} long")
     a_bad = a.join(F.broadcast(bad_df), _BUCKET, "left_semi")
-    b_df = remote.fetch_bucket_rows(spark, a.schema, n_buckets, fetch_ids)
+    schema = T.StructType([t1.schema[c] for c in cols] + [
+        T.StructField(_CKS, T.LongType()), T.StructField(_BUCKET, T.LongType())])
+    fetched = remote.fetch_bucket_rows(spark, schema, n_buckets, fetch_ids)
     if fetch_ids is None:
-        b_df = b_df.join(F.broadcast(bad_df), _BUCKET, "left_semi")
+        fetched = fetched.join(F.broadcast(bad_df), _BUCKET, "left_semi")
+    # Read twice (per-key digests, '+' emission): cached, so a JDBC remote
+    # runs its row query once. The fetched rows carry the Spark side's
+    # types, so t1's key normalization applies to them.
+    fetched = fetched.select(
+        *cols, _CKS, *[k.alias(n) for k, n in zip(_key_norm(t1, cols), knames)]
+    ).persist()
 
-    from pyspark.sql import Window
-
-    u = a_bad.withColumn(SIGN_COL, F.lit("-")).unionByName(
-        b_df.withColumn(SIGN_COL, F.lit("+"))
+    bad_cached = (
+        _side_digests(a_bad, fetched, knames)
+        .filter(_digests_differ()).select(*knames).persist()
     )
-    # Partition the multiset windows by the NORMALIZED key strings — the same
-    # canonical form the bucket digests hash. Raw-value partitioning would
-    # split logically-equal keys (uuid kind_override trims, cross-side type
-    # coercions) into separate windows and emit spurious -/+ pairs. Both
-    # union legs share a.schema (b_df is coerced to it), so t1's
-    # normalization applies to both.
-    # The keys are MATERIALIZED as columns first: four window aggregates over
-    # expression-valued partition specs don't collapse — Catalyst re-projects
-    # the partition expression per aggregate and plans four Window nodes with
-    # four identical shuffles. AttributeReference specs collapse to ONE.
-    key_norm_u = normalized_columns(t1.schema, keys, t1.precision_overrides, t1.kind_overrides)
-    knames = [f"__knorm{i}__" for i in range(len(keys))]
-    u = u.select(
-        "*", *[F.coalesce(c, F.lit("<null>")).alias(n) for c, n in zip(key_norm_u, knames)]
+    bad_keys = (
+        F.broadcast(bad_cached)
+        if bad_cached.count() <= _BROADCAST_KEYS_LIMIT
+        else bad_cached
     )
-    w = Window.partitionBy(*knames)
-    is_a = (F.col(SIGN_COL) == "-").cast("long")
-    ca = F.sum(is_a).over(w)
-    cb = F.sum(1 - is_a).over(w)
-    sa = F.sum(F.when(F.col(SIGN_COL) == "-", F.col(_CKS))).over(w)
-    sb = F.sum(F.when(F.col(SIGN_COL) == "+", F.col(_CKS))).over(w)
-    differs = (ca != cb) | ~sa.eqNullSafe(sb)
-    out = u.withColumn("__emit__", differs).filter("__emit__").select(SIGN_COL, *cols)
-    out._ddspark_persisted = [a]  # released via DiffResult.unpersist()
+    out = _emit(t1, cols, cols, "-", bad_keys).unionAll(
+        fetched.join(bad_keys, knames, "left_semi").select(F.lit("+").alias(SIGN_COL), *cols)
+    )
+    out._ddspark_persisted = [a, fetched, bad_cached]  # released via DiffResult.unpersist()
     return out

@@ -1128,21 +1128,6 @@ from data_diff_spark.functions import text as TX
 from data_diff_spark.operators import dedup as DD
 
 
-def q_text_stats(spark, sf_dir):
-    load_views(spark, sf_dir)
-    c = F.col("text")
-    return spark.table("documents").select(
-        "doc_id",
-        TX.token_count(c).cast("long").alias("n_tokens"),
-        TX.bpe_token_count(c).cast("long").alias("n_bpe_tokens"),
-        TX.lang_id(c).alias("lang_pred"),
-        TX.alpha_ratio(c).alias("alpha_ratio"),
-        TX.mean_token_len(c).alias("mean_token_len"),
-        TX.stopword_ratio(c, "en").alias("stopword_ratio_en"),
-        TX.quality_score(c).alias("quality_score"),
-    )
-
-
 def _text_stats_oracle() -> str:
     p = TX.duckdb_quality_parts("text")
     return f"""
@@ -1157,22 +1142,6 @@ from documents
 """
 
 
-def q_doc_fingerprints(spark, sf_dir):
-    load_views(spark, sf_dir)
-    c = F.col("text")
-    from data_diff_spark.streaming.events_stream import table_rows
-
-    return DD.with_simhash(
-        spark.table("documents"), "text", out="simhash",
-        n_rows=table_rows(spark, sf_dir, "documents"),
-    ).select(
-        "doc_id",
-        TX.set_fingerprint(c).alias("set_fp"),
-        TX.rolling_fingerprint(c).alias("rolling_fp"),
-        "simhash",
-    )
-
-
 def _doc_fingerprints_oracle() -> str:
     return f"""
 select doc_id, {TX.duckdb_set_fingerprint('text')} as set_fp,
@@ -1180,17 +1149,6 @@ select doc_id, {TX.duckdb_set_fingerprint('text')} as set_fp,
        {DD.duckdb_simhash('text')} as simhash
 from documents
 """
-
-
-def q_quality_filter(spark, sf_dir):
-    """Corpus cleaning stage: keep/reject + first-failing-rule annotation
-    per document (token bounds, quality floor, language allowlist) — one
-    map-only pass."""
-    load_views(spark, sf_dir)
-    return TX.quality_filter(
-        spark.table("documents").select("doc_id", "text"),
-        min_tokens=20, min_quality=0.25, allowed_langs=["en", "und"],
-    ).select("doc_id", "keep", "reject_reason")
 
 
 def _quality_filter_oracle() -> str:
@@ -1210,20 +1168,6 @@ select doc_id, text from documents
 union all
 select doc_id + 1000000 as doc_id, text from documents
 """
-
-
-def q_hashed_doc_vectors(spark, sf_dir):
-    """Feature-hashing vectorizer (map-only text -> 64-dim signed count
-    vector); serialized to a canonical string for the value-hash compare."""
-    load_views(spark, sf_dir)
-    from data_diff_spark.streaming.events_stream import table_rows
-
-    return TX.hashed_vector(
-        spark.table("documents"), dim=64,
-        n_rows=table_rows(spark, sf_dir, "documents"),
-    ).select(
-        "doc_id", F.concat_ws(",", F.col("vector")).alias("vector_str")
-    )
 
 
 def _hashed_vectors_oracle() -> str:
@@ -1319,22 +1263,6 @@ select doc_id, lang from ranked where rn <= 20
 """
 
 
-def q_dedup_clusters(spark, sf_dir):
-    """Near-dup clustering end-to-end: LSH pairs -> connected components
-    (min-label + pointer jumping, operators/dedup.py:components) -> every
-    document tagged with its cluster id (own id for singletons)."""
-    load_views(spark, sf_dir)
-    from data_diff_spark.streaming.events_stream import table_rows
-
-    docs = spark.table("documents")
-    pairs = DD.minhash_lsh_dedup(docs, threshold=0.8,
-                                 n_rows=table_rows(spark, sf_dir, "documents"))
-    out = DD.assign_clusters(docs, pairs).select("doc_id", "cluster_id")
-    # derived DataFrames do not inherit the _ddspark_persisted contract;
-    # re-attach so the shingle cache is released with the result
-    return _track_persisted(out, [], pairs)
-
-
 def q_dedup_resolve(spark, sf_dir):
     """The full dedup pipeline's last stage: one surviving document per
     near-dup cluster (highest quality_score, ties -> max doc_id), plus
@@ -1366,32 +1294,6 @@ walk(src, node) as (
   select w.src, e.b from walk w join e on w.node = e.a
 ),
 comp as (select src as doc_id, min(node) as cluster_id from walk group by src)
-"""
-
-
-def _dedup_clusters_oracle() -> str:
-    return f"""
-with recursive {_components_cte()}
-select d.doc_id, coalesce(c.cluster_id, d.doc_id) as cluster_id
-from documents d left join comp c using (doc_id)
-"""
-
-
-def _dedup_resolve_oracle() -> str:
-    q = TX.duckdb_quality_score("text")
-    return f"""
-with recursive {_components_cte()},
-scored as (
-  select coalesce(c.cluster_id, d.doc_id) as cluster_id, d.doc_id as id, {q} as score
-  from documents d left join comp c using (doc_id)
-),
-ranked as (
-  select *, row_number() over (partition by cluster_id order by score desc, id desc) as rn,
-         count(*) over (partition by cluster_id) as n_members
-  from scored
-)
-select cluster_id, id as kept_id, n_members, score as kept_score
-from ranked where rn = 1
 """
 
 
@@ -1705,15 +1607,6 @@ union all
 select 'sem_inc' as scope, id as id_a, dup_of as id_b, dup_cosine as cosine, cell
 from ({{sem_inc}})
 """
-
-
-def q_ann_topk_ivf(spark, sf_dir):
-    """IVF approximate top-k. The coarse quantizer is the deterministic
-    integer Lloyd of train_ivf_centroids (md5-ordered bounded sample, exact
-    int64 assignment/update), so the whole pipeline — training included —
-    is replayed by the DuckDB oracle and hash-matched."""
-    load_views(spark, sf_dir)
-    return SIM.ivf_topk(_emb_base(spark), _emb_queries(spark), k=5, n_cells=16)
 
 
 # ADC candidate depth for the gated re-rank arm (the production knob is
@@ -2814,19 +2707,6 @@ def q_asof_purchase(spark, sf_dir):
     return asof_join(ev, purchases, on="ts", by=["user_id"], prefix="purchase_")
 
 
-ORACLE_ASOF_PURCHASE = """
-select e.event_id, e.user_id, e.ts, e.event_type, e.value,
-       p.ts as purchase_ts, p.value as purchase_value
-from events e
-asof left join (
-  select user_id, ts, max(value) as value
-  from events where event_type = 'purchase'
-  group by user_id, ts
-) p
-  on e.user_id = p.user_id and e.ts >= p.ts
-"""
-
-
 def q_asof_global(spark, sf_dir):
     """Keyless as-of join: every event tagged with the globally most
     recent purchase at-or-before it — no `by` key, so the naive plan is a
@@ -2845,17 +2725,6 @@ def q_asof_global(spark, sf_dir):
         .agg(F.max("value").alias("purchase_value"))
     )
     return asof_join(ev, latest, on="ts", by=[], prefix="purchase_")
-
-
-ORACLE_ASOF_GLOBAL = """
-select e.event_id, e.user_id, e.ts, e.event_type,
-       p.ts as purchase_ts, p.purchase_value
-from events e
-asof left join (
-  select ts, max(value) as purchase_value
-  from events where event_type = 'purchase' group by ts
-) p on e.ts >= p.ts
-"""
 
 
 def q_range_join_attribution(spark, sf_dir):
@@ -3257,39 +3126,6 @@ union all
 union all
 select 'bpe_len', doc_id::varchar, null, bpe_len::double from blen
 """
-
-
-def q_token_vocab(spark, sf_dir):
-    """Corpus vocabulary / heavy hitters: top-100 tokens by total count with
-    document frequency — the tokenizer-vocab / stopword-discovery pass.
-    One explode + one agg: partial (map-side) counts make the shuffle carry
-    one row per (token, map partition), so the plan scales with vocabulary,
-    not corpus size. Ties broken by token for determinism."""
-    load_views(spark, sf_dir)
-    toks = explode_nonnull(
-        spark.table("documents"), ["doc_id"], TX.tokens(F.col("text")), "token"
-    )
-    return (
-        toks.groupBy("token")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("doc_id").alias("doc_freq"),
-        )
-        .orderBy(F.desc("n"), F.asc("token"))
-        .limit(100)
-    )
-
-
-ORACLE_TOKEN_VOCAB = f"""
-with t as (
-  select doc_id, unnest({{toks}}) as token from documents
-)
-select token, count(*) as n, count(distinct doc_id) as doc_freq
-from t
-group by token
-order by n desc, token asc
-limit 100
-""".replace("{toks}", "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')")
 
 
 def q_token_vocab_all(spark, sf_dir):

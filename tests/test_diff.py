@@ -117,24 +117,6 @@ def test_duplicate_pk_semantics_hashdiff(spark):
     )
 
 
-def test_emit_equal_duplicates_compat_mode(spark):
-    # Reference diff_sets: "Either side has 2+ rows → yield it all regardless
-    # of values" — reproduced when the PK's segment (bucket) is downloaded.
-    # n_buckets=1 puts the real diff and the equal-dup PK in one bucket.
-    a = spark.createDataFrame([(1, "x"), (1, "x"), (2, "y")], "id int, data string")
-    b = spark.createDataFrame([(1, "x"), (1, "x"), (2, "z")], "id int, data string")
-    d = hash_diff(table_segment(a, ["id"]), table_segment(b, ["id"]),
-                  n_buckets=1, emit_equal_duplicates=True)
-    got = _sorted_rows(d)
-    assert got == sorted(
-        [("-", 1, "x"), ("-", 1, "x"), ("+", 1, "x"), ("+", 1, "x"),
-         ("-", 2, "y"), ("+", 2, "z")]
-    )
-    # default mode: only the truly-differing PK
-    d2 = hash_diff(table_segment(a, ["id"]), table_segment(b, ["id"]), n_buckets=1)
-    assert _sorted_rows(d2) == sorted([("-", 2, "y"), ("+", 2, "z")])
-
-
 def test_duplicate_pk_equal_multisets_pruned(spark):
     # In the reference, a segment whose count+checksum digests match is
     # pruned BEFORE diff_sets runs (hashdiff_tables.py:210-212), so equal
@@ -144,6 +126,13 @@ def test_duplicate_pk_equal_multisets_pruned(spark):
     b = spark.createDataFrame([(1, "x"), (1, "x")], "id int, data string")
     d = hash_diff(table_segment(a, ["id"]), table_segment(b, ["id"]))
     assert d.count() == 0
+    # ...and inside a DIRTY bucket the per-key digests prune it too:
+    # n_buckets=1 puts the equal-duplicate PK 1 in the one bucket with the
+    # real diff on PK 2, and only PK 2 is emitted
+    a = spark.createDataFrame([(1, "x"), (1, "x"), (2, "y")], "id int, data string")
+    b = spark.createDataFrame([(1, "x"), (1, "x"), (2, "z")], "id int, data string")
+    d = hash_diff(table_segment(a, ["id"]), table_segment(b, ["id"]), n_buckets=1)
+    assert _sorted_rows(d) == sorted([("-", 2, "y"), ("+", 2, "z")])
 
 
 def test_differing_column_names(spark):

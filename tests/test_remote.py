@@ -307,3 +307,131 @@ def test_cross_engine_fast_path_degradation_is_loud(spark, sf_dir, caplog):
     assert W._ORACLE_SCANS["orders"] == fast
     W._INGEST_PATHS.clear()
     W._INGEST_PATHS.update(saved)
+
+
+@pytest.mark.parametrize("sparktype,ducktype", [
+    ("double", "DECIMAL(15,2)"),
+    ("decimal(10,2)", "DECIMAL(18,4)"),
+    ("decimal(18,4)", "DOUBLE"),
+    ("double", "BIGINT"),
+])
+def test_cross_typed_numeric_matches_local_hashdiff(spark, sparktype, ducktype):
+    """A numeric column typed differently on the two engines: the remote
+    renders at its own scale, so the Spark side must render at that scale
+    too. Only key 1 really changed; the cross-engine diff must equal the
+    local hashdiff of the same pair (which unifies precisions) and report
+    no phantom update on key 0."""
+    from decimal import Decimal
+
+    from data_diff_spark import diff_tables
+
+    a_vals, b_vals = [1.5, 2.0, 7.25], [1.5, 3.0, 7.25]
+    if ducktype == "BIGINT":
+        a_vals, b_vals = [1.0, 2.0, 7.0], [1, 3, 7]
+    py = (lambda v: Decimal(str(v))) if sparktype.startswith("decimal") else float
+    df = spark.createDataFrame([(i, py(v)) for i, v in enumerate(a_vals)],
+                               f"id bigint, v {sparktype}")
+    con = duckdb.connect()
+    con.execute(f"create table t (id bigint, v {ducktype})")
+    con.executemany("insert into t values (?, ?)", list(enumerate(b_vals)))
+    t1 = table_segment(df, ["id"], extra_columns=["v"])
+    got = hash_diff_remote(t1, DuckDBSide("t", ["id"], ["id", "v"], con=con), n_buckets=8)
+
+    df2 = spark.createDataFrame(con.execute("select * from t").fetch_arrow_table())
+    local = diff_tables(t1, table_segment(df2, ["id"], extra_columns=["v"]),
+                        algorithm="hashdiff").df
+    key = lambda r: (r["sign"], r["id"], float(r["v"]))
+    assert sorted(map(key, got.collect())) == sorted(map(key, local.collect()))
+    assert {r["id"] for r in got.collect()} == {1}
+
+
+def test_spark_integer_vs_remote_fraction_raises(spark):
+    """A Spark integer column cannot render the remote's fractional digits;
+    the pair must be refused, not diffed into a false update per row."""
+    df = spark.createDataFrame([(0, 1), (1, 2)], "id bigint, v bigint")
+    con = duckdb.connect()
+    con.execute("create table t (id bigint, v DECIMAL(18,2))")
+    con.executemany("insert into t values (?, ?)", [(0, 1), (1, 2)])
+    t1 = table_segment(df, ["id"], extra_columns=["v"])
+    with pytest.raises(ValueError, match="fractional"):
+        hash_diff_remote(t1, DuckDBSide("t", ["id"], ["id", "v"], con=con))
+
+
+def test_remote_phase2_is_hashdiff_kernel_plan(spark, t1, con):
+    """Phase 2 runs hashdiff's aggregation kernel, never a Window; the
+    cached Spark-side frame is hashdiff's narrow shape plus the bucket (no
+    compared column); the '+' rows are read from the cached fetch."""
+    from data_diff_spark.operators import hashdiff as H
+
+    con.execute("""create or replace view pmod as
+      select o_orderkey, o_custkey, o_orderstatus,
+             case when o_orderkey % 50 = 2 then o_totalprice + 1.0 else o_totalprice end as o_totalprice,
+             o_orderdate, o_orderpriority
+      from orders""")
+    out = hash_diff_remote(t1, DuckDBSide("pmod", ["o_orderkey"], COLS, con=con), n_buckets=64)
+    assert out.count() > 0
+
+    def nodes(plan):
+        todo, seen = [plan], []
+        while todo:
+            node = todo.pop()
+            if node.nodeName() == "AdaptiveSparkPlan":
+                node = node.initialPlan()
+            seen.append(node)
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+            if node.nodeName() == "InMemoryTableScan":
+                todo.append(node.relation().cachedPlan())
+        return seen
+
+    def names(attrs):
+        return sorted(attrs.apply(i).name() for i in range(attrs.size()))
+
+    plan = out._jdf.queryExecution().executedPlan()
+    all_nodes = nodes(plan)
+    assert not [n for n in all_nodes if "Window" in n.nodeName()]
+    cached = [names(n.relation().output()) for n in all_nodes
+              if n.nodeName() == "InMemoryTableScan"]
+    spark_side = [c for c in cached if H._BUCKET in c]
+    assert spark_side, cached
+    assert spark_side == [sorted([H._CKS, H._knorm(0), H._BUCKET])] * len(spark_side)
+    # the union's '+' branch scans the cached fetch (compared columns +
+    # checksum + normalized key), not a fresh remote read
+    union = next(n for n in all_nodes if n.nodeName() == "Union")
+    plus = [names(n.relation().output()) for n in nodes(union.children().apply(1))
+            if n.nodeName() == "InMemoryTableScan"]
+    assert sorted(COLS + [H._CKS, H._knorm(0)]) in plus, plus
+    for h in out._ddspark_persisted:
+        h.unpersist()
+
+
+def test_cli_remote_digest_materialize_and_explain(spark, sf_dir, tmp_path, capsys):
+    """--materialize and --explain apply under --remote-digest like on the
+    local path: the diff is written (not printed), and --explain prints
+    the plan instead of rows."""
+    import duckdb as _duckdb
+
+    from data_diff_spark.cli import main
+
+    db = str(tmp_path / "r.duckdb")
+    c = _duckdb.connect(db)
+    c.execute(f"""
+        create table orders_mod as
+        select o_orderkey,
+               case when o_orderkey % 100 = 2 then o_totalprice + 100.0
+                    else o_totalprice end as o_totalprice
+        from read_parquet('{sf_dir}/orders.parquet')
+    """)
+    c.close()
+    argv = [f"parquet://{sf_dir}/orders.parquet", f"duckdb://{db}#orders_mod",
+            "-k", "o_orderkey", "-c", "o_totalprice", "--remote-digest"]
+    out_path = str(tmp_path / "diff.parquet")
+    assert main(argv + ["-m", out_path], spark=spark) == 0
+    assert capsys.readouterr().out == ""
+    got = spark.read.parquet(out_path)
+    assert got.columns == ["sign", "o_orderkey", "o_totalprice"]
+    assert got.count() > 0 and got.filter("o_orderkey % 100 <> 2").count() == 0
+
+    assert main(argv + ["--explain"], spark=spark) == 0
+    plan = capsys.readouterr().out
+    assert "Physical Plan" in plan and "\n- " not in plan and "\n+ " not in plan
