@@ -20,7 +20,7 @@ Flag parity map (reference flag -> here):
     --min-age/--max-age     same duration grammar, e.g. 5min, 2h, 1d
                             (parse_time.py:56-74)
     -l/--limit              same (stop after N diff rows)
-    --stats                 summary block instead of rows
+    --stats                 summary block instead of rows (JSON with -j)
     -j/--json               JSONL rows ({"sign": "-", ...})
     --bisection-factor/--bisection-threshold -> --n-buckets (the Spark
                             hashdiff has one knob, SURVEY.md §4.3)
@@ -105,7 +105,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--min-age", default=None, help="ignore rows updated less than AGE ago (e.g. 5min)")
     p.add_argument("--max-age", default=None, help="ignore rows updated more than AGE ago")
     p.add_argument("-l", "--limit", type=int, default=None)
-    p.add_argument("--stats", action="store_true", help="print summary statistics instead of rows")
+    p.add_argument("--stats", action="store_true",
+                   help="print the 7-key stats summary instead of rows (one JSON object with -j)")
     p.add_argument("-j", "--json", dest="json_output", action="store_true", help="JSONL output")
     p.add_argument("--n-buckets", type=_positive_int, default=None,
                    help="hashdiff checksum buckets (default: auto-sized "
@@ -336,10 +337,9 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
             return 0
 
         if args.stats:
-            # a remote side has no Spark table to count: sign counts only
-            stats = result.diff_by_sign() if args.remote_digest else result.get_stats_dict()
-            for k, v in stats.items():
-                print(f"{k}: {v}")
+            stats = result.get_stats_dict()
+            print(json.dumps(stats) if args.json_output
+                  else "\n".join(f"{k}: {v}" for k, v in stats.items()))
             return 0
 
         df = result.df
@@ -571,7 +571,7 @@ def _remote_digest_diff(spark, args, keys):
         raise SystemExit(
             "error: --remote-digest needs uri2 = duckdb://…, sqlite://… or jdbc:…")
 
-    return DiffResult(RM.hash_diff_remote(t1, side, n_buckets=args.n_buckets), t1, None)
+    return DiffResult(RM.hash_diff_remote(t1, side, n_buckets=args.n_buckets), t1)
 
 
 def _remote_compare_columns(args, t1, remote_cols, keys):

@@ -134,11 +134,22 @@ def _paired_digest(a: DataFrame, b: DataFrame, n_buckets: int):
     The collect also yields the exact row counts that size the fine level.
 
     Returns (dirty bucket ids, rows in dirty buckets on both sides,
-    rows_total_a)."""
+    rows_total_a, rows_total_b)."""
     rows = _side_digests(_bucketed(a, n_buckets), _bucketed(b, n_buckets), [_BUCKET]).collect()
     bad = [r for r in rows if r["ca"] != r["cb"] or r["sa"] != r["sb"]]
     return ([r[_BUCKET] for r in bad], sum(r["ca"] + r["cb"] for r in bad),
-            sum(r["ca"] for r in rows))
+            sum(r["ca"] for r in rows), sum(r["cb"] for r in rows))
+
+
+def _key_stats(per_key: DataFrame, rows_a: int, rows_b: int):
+    """The hashdiff operators' `_ddspark_stats` (DiffResult.get_stats_dict):
+    every row of a differing key is emitted, so over `per_key` (the
+    differing keys' digests) '-' = sum(ca), '+' = sum(cb) and min(ca, cb)
+    rows pair up as updates. Reads only the cached narrow frames."""
+    def stats():
+        row = per_key.agg(F.sum("ca"), F.sum("cb"), F.sum(F.least("ca", "cb"))).collect()[0]
+        return (rows_a, rows_b, *(int(v or 0) for v in row))
+    return stats
 
 
 def _restrict_join(df: DataFrame, ids_df: DataFrame, n: int,
@@ -202,7 +213,7 @@ def hash_diff(
     # 4096-bucket level 80s -> two-level design 36s; the zero-diff case
     # pays only the coarse level (7.9s -> 5.3s).
     coarse_n = n_buckets or DEFAULT_N_BUCKETS
-    bad_ids, dirty_rows, rows_total = _paired_digest(a, b, coarse_n)
+    bad_ids, dirty_rows, rows_a, rows_b = _paired_digest(a, b, coarse_n)
     a_bad = _restrict(a, bad_ids, coarse_n)
     b_bad = _restrict(b, bad_ids, coarse_n)
 
@@ -214,7 +225,7 @@ def hash_diff(
     # coarse digests.
     extra_handles: List[DataFrame] = []
     if n_buckets is None and bad_ids and dirty_rows > _FINE_LEVEL_MIN_ROWS:
-        fine_n = 1 << max(rows_total // _AUTO_ROWS_PER_BUCKET, 1).bit_length()
+        fine_n = 1 << max(rows_a // _AUTO_ROWS_PER_BUCKET, 1).bit_length()
         if fine_n > coarse_n:
             # The dirty fine-bucket set must NEVER round-trip through the
             # Python driver when it is large: at a ~2% uniform diff rate
@@ -250,11 +261,8 @@ def hash_diff(
     # digest kernel per NORMALIZED key over the surviving narrow rows, one
     # map-side-combined aggregation. Only the differing KEY SET is consumed
     # downstream, so no window or join back to the rows is needed.
-    bad_cached = (
-        _side_digests(a_bad, b_bad, knorm_names)
-        .filter(_digests_differ())
-        .select(*knorm_names).persist()
-    )
+    per_key = _side_digests(a_bad, b_bad, knorm_names).filter(_digests_differ())
+    bad_cached = per_key.select(*knorm_names).persist()
     # The differing-key set is proportional to the DIFF count, not the
     # table: broadcast it so the pruned re-read is scan+broadcast-semi,
     # never a full shuffle of both sides (unbroadcast, the semi join
@@ -272,4 +280,5 @@ def hash_diff(
     # frames must outlive it. DiffResult.unpersist() (and the CLI) release
     # them once the diff is materialized.
     out._ddspark_persisted = [a, b, bad_cached, *extra_handles]
+    out._ddspark_stats = _key_stats(per_key, rows_a, rows_b)
     return out

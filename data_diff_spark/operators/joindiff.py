@@ -145,10 +145,11 @@ def join_diff(
     nkeys = len(t1.key_columns)
     diff_cols = [f"__diff_{c}" for c in cols1[nkeys:]]
 
+    xa, xb = F.col("is_exclusive_a"), F.col("is_exclusive_b")
     any_diff = F.lit(False)
     for d in diff_cols:
         any_diff = any_diff | F.coalesce(F.col(d), F.lit(False))
-    row_differs = F.col("is_exclusive_a") | F.col("is_exclusive_b") | any_diff
+    row_differs = xa | xb | any_diff
 
     minus = F.when(
         F.col(_PRESENT_A).isNotNull() & row_differs,
@@ -164,10 +165,20 @@ def join_diff(
             *[F.col(_B + c2).alias(c1) for c1, c2 in zip(cols1, cols2)],
         ),
     )
-    return (
+
+    # DiffResult.get_stats_dict's counts: a joined row is exclusive to one
+    # side or a key-matched pair, so a side's rows are n - the other's exclusives
+    def stats():
+        n, ea, eb, upd = j.agg(F.count(F.lit(1)), F.count_if(xa), F.count_if(xb),
+                               F.count_if(~xa & ~xb & any_diff)).collect()[0]
+        return n - eb, n - ea, ea + upd, eb + upd, upd
+
+    out = (
         j.select(F.explode(F.array_compact(F.array(minus, plus))).alias("r"))
         .select("r.*")
     )
+    out._ddspark_stats = stats
+    return out
 
 
 # ---- guard / stats / sampling operators (reference §2.1) -----------------

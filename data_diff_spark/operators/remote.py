@@ -67,6 +67,7 @@ from data_diff_spark.operators.hashdiff import (
     _digests_differ,
     _emit,
     _key_norm,
+    _key_stats,
     _knorm,
     _side_digests,
 )
@@ -1093,10 +1094,8 @@ def hash_diff_remote(
         *cols, _CKS, *[k.alias(n) for k, n in zip(_key_norm(t1, cols), knames)]
     ).persist()
 
-    bad_cached = (
-        _side_digests(a_bad, fetched, knames)
-        .filter(_digests_differ()).select(*knames).persist()
-    )
+    per_key = _side_digests(a_bad, fetched, knames).filter(_digests_differ())
+    bad_cached = per_key.select(*knames).persist()
     bad_keys = (
         F.broadcast(bad_cached)
         if bad_cached.count() <= _BROADCAST_KEYS_LIMIT
@@ -1106,4 +1105,6 @@ def hash_diff_remote(
         fetched.join(bad_keys, knames, "left_semi").select(F.lit("+").alias(SIGN_COL), *cols)
     )
     out._ddspark_persisted = [a, fetched, bad_cached]  # released via DiffResult.unpersist()
+    out._ddspark_stats = _key_stats(per_key, sum(c for c, _ in local.values()),
+                                    sum(c for c, _ in remote_digests.values()))
     return out

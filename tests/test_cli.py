@@ -57,6 +57,46 @@ def test_cli_stats(spark, sf_dir, mod_orders_path, capsys):
     assert int(out["updated"]) == n // 100
 
 
+def test_cli_stats_json(spark, sf_dir, mod_orders_path, tmp_path, capsys):
+    """--stats -j prints the stats as one JSON object, for a local diff and
+    for a --remote-digest diff of the same pair; without -j the output is
+    the 7 `key: int` lines."""
+    pair = [f"parquet://{sf_dir}/orders.parquet", f"parquet://{mod_orders_path}",
+            "-k", "o_orderkey", "--stats"]
+    assert main(pair, spark=spark) == 0
+    lines = capsys.readouterr().out.strip().splitlines()
+    plain = {k: int(v) for k, v in (line.split(": ") for line in lines)}
+    assert list(plain) == ["rows_A", "rows_B", "exclusive_A", "exclusive_B",
+                           "updated", "unchanged", "total"]
+    assert main(pair + ["-j"], spark=spark) == 0
+    assert json.loads(capsys.readouterr().out) == plain
+
+    db = str(tmp_path / "r.duckdb")
+    con = duckdb.connect(db)
+    con.execute(f"create table orders_mod as select * from read_parquet('{mod_orders_path}')")
+    con.close()
+    rc = main([pair[0], f"duckdb://{db}#orders_mod", *pair[2:], "--remote-digest", "-j"],
+              spark=spark)
+    assert rc == 0
+    assert json.loads(capsys.readouterr().out) == plain
+
+
+def test_cli_skip_null_keys_with_unique_check(spark, tmp_path, capsys):
+    """--skip-null-keys drops repeated NULL keys before the default
+    duplicate-key check runs, instead of failing on them."""
+    a, b = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
+    duckdb.sql(f"copy (select * from (values (1, 'a'), (2, 'b'), (null, 'n'), (null, 'm')) "
+               f"t(id, v)) to '{a}' (format parquet)")
+    duckdb.sql(f"copy (select * from (values (1, 'a'), (2, 'B'), (null, 'n')) t(id, v)) "
+               f"to '{b}' (format parquet)")
+    rc = main([f"parquet://{a}", f"parquet://{b}", "-k", "id", "--skip-null-keys",
+               "--stats", "-j"], spark=spark)
+    assert rc == 0
+    assert json.loads(capsys.readouterr().out) == {
+        "rows_A": 2, "rows_B": 2, "exclusive_A": 0, "exclusive_B": 0,
+        "updated": 1, "unchanged": 1, "total": 2}
+
+
 def test_n_buckets_must_be_positive(spark, sf_dir, capsys):
     """0 and negative bucket counts are rejected, not silently read as
     "auto" (0) or "prune nothing" (negative), by both hashdiff operators

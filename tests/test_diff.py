@@ -272,6 +272,133 @@ def test_stats_dict_single_diff_aggregation(spark):
     r.unpersist()
 
 
+def _plan_nodes(plan):
+    """Physical plan nodes, not descending into cached (InMemoryRelation)
+    plans: what a job actually runs."""
+    todo, seen = [plan], []
+    while todo:
+        node = todo.pop()
+        seen.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return seen
+
+
+def test_stats_cost_one_job_no_cache(spark, tmp_path, monkeypatch):
+    """The stats are counts the diff already has: joindiff's are one job
+    (a global aggregate over its join) and pin no cache; hashdiff's
+    aggregate reads only its cached narrow frames, never the sources."""
+    a = make_ratings(spark, BASE)
+    b = make_ratings(spark, [(2, 2, 2, 1.0)] + BASE[2:] + [(9, 9, 9, 1.0)])
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")  # 1 job per action
+    try:
+        r = diff_tables(table_segment(a, ["id"]), table_segment(b, ["id"]))
+        cached = len(jsc.getRDDStorageInfo())
+        sc.setJobGroup("stats-cost", "stats job counting")
+        try:
+            s = r.get_stats_dict()
+        finally:
+            sc.setJobGroup(None, None)
+        jsc.listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup("stats-cost")) == 1
+        assert len(jsc.getRDDStorageInfo()) == cached
+        level = r.df.storageLevel  # not even marked for a later read
+        assert not (level.useMemory or level.useDisk)
+        assert s["exclusive_A"] == 1 and s["exclusive_B"] == 1 and s["updated"] == 1
+
+        pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
+        a.write.parquet(pa)
+        b.write.parquet(pb)
+        r = diff_tables(table_segment(spark.read.parquet(pa), ["id"]),
+                        table_segment(spark.read.parquet(pb), ["id"]), algorithm="hashdiff")
+        plans = []
+        frame_cls = type(r.df)
+        collect = frame_cls.collect
+
+        def recording(self):
+            plans.append(self._jdf.queryExecution().executedPlan())
+            return collect(self)
+
+        monkeypatch.setattr(frame_cls, "collect", recording)
+        assert r.get_stats_dict() == s
+        monkeypatch.undo()
+        assert len(plans) == 1
+        scans = [n.getClass().getSimpleName() for n in _plan_nodes(plans[0])]
+        assert "InMemoryTableScanExec" in scans
+        assert not [n for n in scans if n in ("FileSourceScanExec", "BatchScanExec")], scans
+        r.unpersist()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+
+def test_stats_without_diff_operator_raises(spark):
+    from data_diff_spark.diff import DiffResult
+
+    t = table_segment(make_ratings(spark, BASE), ["id"])
+    with pytest.raises(ValueError, match="no diff stats"):
+        DiffResult(t.df, t).get_stats_dict()
+
+
+def test_stats_hashdiff_duplicate_and_null_keys(spark):
+    """hashdiff stats count per key: every row of a differing key is
+    emitted and min(rows in A, rows in B) of them pair up as updates;
+    NULL keys group together."""
+    schema = "id int, v string"
+    a = spark.createDataFrame([(1, "a"), (1, "a"), (2, "b"), (3, "c"), (3, "x"),
+                               (4, "d"), (None, "n")], schema)
+    b = spark.createDataFrame([(1, "a"), (2, "B"), (2, "b"), (3, "c"), (5, "e"),
+                               (None, "n"), (None, "m")], schema)
+    r = diff_tables(table_segment(a, ["id"]), table_segment(b, ["id"]), algorithm="hashdiff")
+    assert r.get_stats_dict() == {"rows_A": 7, "rows_B": 7, "exclusive_A": 3,
+                                  "exclusive_B": 3, "updated": 4, "unchanged": 0,
+                                  "total": 14}
+    assert r.df.count() == 14
+    r.unpersist()
+
+
+def test_stats_joindiff_fanout_identity(spark):
+    """Unvalidated duplicate keys: joindiff emits one pair per A row x B
+    row of a key, and the stats count those same pairs, so rows_A ==
+    exclusive_A + updated + unchanged and total == the diff's rows."""
+    schema = "id int, v string"
+    a = spark.createDataFrame([(1, "a"), (1, "b"), (2, "x")], schema)
+    b = spark.createDataFrame([(1, "c"), (1, "d"), (2, "x")], schema)
+    r = diff_tables(table_segment(a, ["id"]), table_segment(b, ["id"]))
+    s = r.get_stats_dict()
+    assert s == {"rows_A": 5, "rows_B": 5, "exclusive_A": 0, "exclusive_B": 0,
+                 "updated": 4, "unchanged": 1, "total": 8}
+    assert s["rows_A"] == s["exclusive_A"] + s["updated"] + s["unchanged"]
+    assert r.df.count() == s["total"]
+    # NULL keys never match under null_safe_keys=False: exclusives
+    n = spark.createDataFrame([(None, "a"), (2, "x")], schema)
+    r = diff_tables(table_segment(n, ["id"]), table_segment(n, ["id"]), null_safe_keys=False)
+    assert r.get_stats_dict() == {"rows_A": 2, "rows_B": 2, "exclusive_A": 1,
+                                  "exclusive_B": 1, "updated": 0, "unchanged": 1,
+                                  "total": 2}
+
+
+@pytest.mark.parametrize("algo", ALGOS)
+def test_skip_null_keys_before_unique_validation(spark, algo):
+    """skip_null_keys drops the NULL keys before validate_unique_key looks
+    for duplicates, so repeated NULL keys do not raise."""
+    schema = "id int, v string"
+    a = spark.createDataFrame([(1, "a"), (2, "b"), (None, "n"), (None, "m")], schema)
+    b = spark.createDataFrame([(1, "a"), (2, "B"), (None, "n")], schema)
+    r = diff_tables(table_segment(a, ["id"]), table_segment(b, ["id"]), algorithm=algo,
+                    validate_unique_key=True, skip_null_keys=True)
+    assert r.get_stats_dict() == {"rows_A": 2, "rows_B": 2, "exclusive_A": 0,
+                                  "exclusive_B": 0, "updated": 1, "unchanged": 1,
+                                  "total": 2}
+    r.unpersist()
+    dup = spark.createDataFrame([(1, "a"), (1, "b"), (None, "n")], schema)
+    with pytest.raises(ValueError, match="duplicate"):
+        diff_tables(table_segment(dup, ["id"]), table_segment(b, ["id"]), algorithm=algo,
+                    validate_unique_key=True, skip_null_keys=True)
+
+
 def test_apply_diff_roundtrip_both_algorithms(spark, sf_dir):
     """apply_diff(A, diff(A, B)) == B, for joindiff and hashdiff output."""
     from data_diff_spark import diff_tables, table_segment

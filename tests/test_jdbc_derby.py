@@ -182,11 +182,13 @@ def test_cli_compound_key_against_live_derby(spark, orders, derby_orders,
         "--remote-digest", "--stats",
     ], spark=spark)
     assert rc == 0
-    out = dict(l.split(": ") for l in capsys.readouterr().out.strip().splitlines())
+    out = {k: int(v) for k, v in (l.split(": ") for l in capsys.readouterr().out.strip().splitlines())}
     n = orders.count()
-    # 1% deleted + 1% updated -> '-'; 1% updated + 1% inserted -> '+'
-    assert int(out["-"]) == 2 * (n // 100)
-    assert int(out["+"]) == 2 * (n // 100)
+    # 1% deleted, 1% updated, 1% inserted (derby_orders)
+    assert out == {
+        "rows_A": n, "rows_B": n, "exclusive_A": n // 100, "exclusive_B": n // 100,
+        "updated": n // 100, "unchanged": n - 2 * (n // 100), "total": 4 * (n // 100),
+    }
 
 
 @pytest.fixture(scope="module")
@@ -228,12 +230,16 @@ def test_cli_update_column_age_window_live(spark, orders, derby_updated,
     ]
     rc = main(base_args + ["--max-age", "1d"], spark=spark)
     assert rc == 0
-    out = dict(l.split(": ") for l in capsys.readouterr().out.strip().splitlines())
-    assert int(out["-"]) == 0 and int(out["+"]) == 0
+    out = {k: int(v) for k, v in (l.split(": ") for l in capsys.readouterr().out.strip().splitlines())}
+    assert out == dict.fromkeys(
+        ["rows_A", "rows_B", "exclusive_A", "exclusive_B", "updated", "unchanged", "total"], 0)
 
     rc = main(base_args + ["--min-age", "5min"], spark=spark)
     assert rc == 0
-    out = dict(l.split(": ") for l in capsys.readouterr().out.strip().splitlines())
+    out = {k: int(v) for k, v in (l.split(": ") for l in capsys.readouterr().out.strip().splitlines())}
     n = orders.count()
-    assert int(out["-"]) == 2 * (n // 100)  # deletes + updates
-    assert int(out["+"]) == n // 100        # updates
+    # 1% deleted, 1% updated (derby_updated)
+    assert out == {
+        "rows_A": n, "rows_B": n - n // 100, "exclusive_A": n // 100, "exclusive_B": 0,
+        "updated": n // 100, "unchanged": n - 2 * (n // 100), "total": 3 * (n // 100),
+    }

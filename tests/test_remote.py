@@ -258,6 +258,7 @@ def test_cli_remote_digest_duckdb(spark, sf_dir, tmp_path, capsys):
     n_deleted = con.execute(
         f"select count(*) from read_parquet('{sf_dir}/orders.parquet') "
         "where o_orderkey % 100 = 1").fetchone()[0]
+    n = con.execute(f"select count(*) from read_parquet('{sf_dir}/orders.parquet')").fetchone()[0]
     con.close()
 
     rc = main([
@@ -269,9 +270,52 @@ def test_cli_remote_digest_duckdb(spark, sf_dir, tmp_path, capsys):
     out = dict(
         line.split(": ") for line in capsys.readouterr().out.strip().splitlines()
     )
-    # '-' side: deleted rows + old versions of updates; '+' side: new versions
-    assert int(out["-"]) == n_deleted + n_changed
-    assert int(out["+"]) == n_changed
+    # the same 7-key block as the local path: the remote side's rows come
+    # from its own bucket digests
+    assert {k: int(v) for k, v in out.items()} == {
+        "rows_A": n, "rows_B": n - n_deleted, "exclusive_A": n_deleted,
+        "exclusive_B": 0, "updated": n_changed,
+        "unchanged": n - n_deleted - n_changed, "total": n_deleted + 2 * n_changed,
+    }
+
+
+def test_stats_contract_three_operators(spark, t1, con, tmp_path):
+    """joindiff, library hashdiff and hash_diff_remote report the same
+    7-key stats for one pair, equal to DuckDB-computed truth: deletes,
+    value updates (one to NULL), inserts."""
+    from data_diff_spark import diff_tables
+    from data_diff_spark.diff import DiffResult
+
+    con.execute("""create or replace view smod as
+      select o_orderkey, o_custkey, o_orderstatus,
+             case when o_orderkey % 100 = 2 then o_totalprice + 100.0 else o_totalprice end as o_totalprice,
+             o_orderdate,
+             case when o_orderkey % 100 = 4 then null else o_orderpriority end as o_orderpriority
+      from orders where o_orderkey % 100 <> 1
+      union all
+      select o_orderkey + 10000000, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority
+      from orders where o_orderkey % 100 = 3""")
+    row_a, row_b = (", ".join(f"{t}.{c}" for c in COLS[1:]) for t in "ab")
+    rows_a, rows_b, xa, xb, upd = con.execute(f"""
+      select (select count(*) from orders), (select count(*) from smod),
+             count(*) filter (b.o_orderkey is null), count(*) filter (a.o_orderkey is null),
+             count(*) filter (a.o_orderkey is not null and b.o_orderkey is not null
+                              and row({row_a}) is distinct from row({row_b}))
+      from orders a full join smod b on a.o_orderkey = b.o_orderkey""").fetchone()
+    truth = {"rows_A": rows_a, "rows_B": rows_b, "exclusive_A": xa, "exclusive_B": xb,
+             "updated": upd, "unchanged": rows_a - xa - upd, "total": xa + xb + 2 * upd}
+    assert xa and xb and upd
+
+    path = str(tmp_path / "smod.parquet")
+    con.execute(f"copy (select * from smod) to '{path}' (format parquet)")
+    t2 = table_segment(spark.read.parquet(path).select(*COLS), ["o_orderkey"],
+                       extra_columns=COLS[1:])
+    results = [diff_tables(t1, t2, algorithm=algo) for algo in ("joindiff", "hashdiff")]
+    remote = DuckDBSide("smod", ["o_orderkey"], COLS, con=con)
+    results.append(DiffResult(hash_diff_remote(t1, remote), t1))
+    for r in results:
+        assert r.get_stats_dict() == truth
+        r.unpersist()
 
 
 def test_cross_engine_fast_path_degradation_is_loud(spark, sf_dir, caplog):

@@ -223,6 +223,10 @@ def test_cli_remote_digest_sqlite(spark, sf_dir, tmp_path, capsys):
     ], spark=spark)
     out = capsys.readouterr().out
     assert rc == 0
-    stats = dict(line.split(": ") for line in out.strip().splitlines())
-    assert int(stats["-"]) == n_changed + n_deleted
-    assert int(stats["+"]) == n_changed
+    stats = {k: int(v) for k, v in (line.split(": ") for line in out.strip().splitlines())}
+    n = len(rows)
+    assert stats == {
+        "rows_A": n, "rows_B": n - n_deleted, "exclusive_A": n_deleted,
+        "exclusive_B": 0, "updated": n_changed,
+        "unchanged": n - n_deleted - n_changed, "total": n_deleted + 2 * n_changed,
+    }
