@@ -12,13 +12,16 @@ with ?-style options.
 Flag parity map (reference flag -> here):
     -k/--key-columns        same (repeatable)
     -c/--columns            same (repeatable, POSIX * ? wildcards expanded
-                            against the schema — __main__.py:439-461)
+                            against the columns both sides share, by name —
+                            __main__.py:439-461)
     -w/--where              same (SQL predicate applied to both sides)
     -a/--algorithm          auto|joindiff|hashdiff (AUTO -> joindiff;
                             reference picks joindiff for same-DB pairs)
     -t/--update-column      same
     --min-age/--max-age     same duration grammar, e.g. 5min, 2h, 1d
-                            (parse_time.py:56-74)
+                            (parse_time.py:56-74); the segments'
+                            max_update/min_update from one instant (_set_age).
+                            Need -t; rejected with --snapshot* and dbt mode
     -l/--limit              same (stop after N diff rows)
     --stats                 summary block instead of rows (JSON with -j)
     -j/--json               JSONL rows ({"sign": "-", ...})
@@ -38,7 +41,7 @@ import fnmatch
 import json
 import re
 import sys
-from typing import List, Optional, Sequence
+from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import SparkSession
 
@@ -83,6 +86,8 @@ def _positive_int(text: str) -> int:
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from data_diff_spark.operators.remote import DIALECTS
+
     p = argparse.ArgumentParser(
         prog="data-diff-spark",
         description="Diff two tables with Spark (joindiff / bucketed hashdiff).",
@@ -145,10 +150,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "digests + mismatched-bucket rows cross the wire "
                         "(the reference's hashdiff deployment shape)")
     p.add_argument("--remote-dialect", default=None,
-                   metavar="|".join(sorted(
-                       ("duckdb", "postgresql", "mysql", "clickhouse", "snowflake",
-                        "mssql", "oracle", "bigquery", "trino", "redshift",
-                        "vertica", "derby", "sqlite"))),
+                   metavar="|".join(sorted(DIALECTS)),
                    help="SQL dialect for the remote side's digest query "
                         "(default: inferred from the URI scheme/subprotocol)")
     p.add_argument("--remote-where", default=None,
@@ -218,22 +220,62 @@ def _apply_config(args) -> None:
             setattr(args, attr, val)
 
 
-def _age_bound(spark: SparkSession, age: str):
-    from pyspark.sql import functions as F
+def _age_window(spark: SparkSession, args) -> dict:
+    """--max-age/--min-age as min_update/max_update (reference _set_age,
+    table_segment.py:166-170) from ONE current_timestamp(), so every side,
+    engine and job windows at the same instant. {} and no job without them."""
+    if not (args.min_age or args.max_age):
+        return {}
+    from datetime import timedelta
 
-    secs = parse_duration_seconds(age)
-    return F.current_timestamp() - F.expr(f"INTERVAL {secs} SECOND")
+    now = spark.sql("select current_timestamp() as t").first()["t"]
+    window = {}
+    if args.max_age:
+        window["min_update"] = now - timedelta(seconds=parse_duration_seconds(args.max_age))
+    if args.min_age:
+        window["max_update"] = now - timedelta(seconds=parse_duration_seconds(args.min_age))
+    return window
+
+
+def _segment(spark: SparkSession, args, uri: str, keys, window: dict):
+    """One Spark-side CLI table: the URI's segment with --where, -t and
+    the age window."""
+    from data_diff_spark.sources.connect import connect_to_table
+
+    return connect_to_table(spark, uri, keys, args.update_column, None, args.where).with_(**window)
+
+
+def _compared(args, t, other_cols, keys) -> Tuple[str, ...]:
+    """The columns to compare: t's non-key columns that the other side also
+    has (diff.shared_columns), narrowed by the -c patterns."""
+    from data_diff_spark.diff import shared_columns
+
+    shared = shared_columns(t.df.columns, other_cols, keys)
+    return tuple(expand_columns(args.columns, shared, keys) if args.columns else shared)
+
+
+def _print_rows(df, args) -> None:
+    """Diff rows to stdout, sign first: `sign v1, v2, ...`, or JSONL with -j."""
+    if args.limit:
+        df = df.limit(args.limit)
+    cols = df.columns[1:]
+    for row in df.toLocalIterator():
+        if args.json_output:
+            print(json.dumps({"sign": row[0], **{c: _jsonable(row[c]) for c in cols}}))
+        else:
+            print(f"{row[0]} {', '.join(repr(row[c]) for c in cols)}")
 
 
 def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = None) -> int:
-    from data_diff_spark.sources.connect import connect_to_table
-
     args = build_parser().parse_args(argv)
     _apply_config(args)
     snapshot_mode = args.snapshot_write or args.snapshot
     if snapshot_mode and (not args.uri1 or not args.key_columns):
         raise SystemExit("error: --snapshot-write/--snapshot need uri1 and -k")
     dbt_mode = args.dbt_manifest or args.dbt_project_dir
+    if (snapshot_mode or dbt_mode) and (args.min_age or args.max_age):
+        raise SystemExit("error: --min-age/--max-age window an update column; "
+                         "a snapshot or a dbt model diff has none to window")
     if not snapshot_mode and not dbt_mode and (
             not args.uri1 or not args.uri2 or not args.key_columns):
         raise SystemExit("error: uri1, uri2 and -k/--key-columns are required "
@@ -289,29 +331,21 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
             return 0
 
         keys = args.key_columns
+        window = _age_window(spark, args)
         if snapshot_mode:
             from data_diff_spark.operators import snapshot as SN
 
-            t1 = connect_to_table(spark, args.uri1, keys, args.update_column, None, args.where)
-            if args.columns:
-                shared = [c for c in t1.df.columns]
-                t1 = t1.with_(extra_columns=tuple(expand_columns(args.columns, shared, keys)))
+            t1 = _segment(spark, args, args.uri1, keys, window)
+            t1 = t1.with_(extra_columns=_compared(args, t1, t1.df.columns, keys))
             if args.snapshot_write:
                 SN.write_snapshot(t1, args.snapshot_write)
                 print(f"snapshot written to {args.snapshot_write}", file=sys.stderr)
                 return 0
-            diff = SN.diff_against_snapshot(t1, SN.load_snapshot(spark, args.snapshot))
-            if args.limit:
-                diff = diff.limit(args.limit)
-            for row in diff.toLocalIterator():
-                if args.json_output:
-                    print(json.dumps({"sign": row[0],
-                                      **{c: _jsonable(row[c]) for c in diff.columns[1:]}}))
-                else:
-                    print(f"{row[0]} {', '.join(repr(row[c]) for c in diff.columns[1:])}")
+            _print_rows(SN.diff_against_snapshot(t1, SN.load_snapshot(spark, args.snapshot)), args)
             return 0
 
-        result = (_remote_digest_diff if args.remote_digest else _local_diff)(spark, args, keys)
+        diff = _remote_digest_diff if args.remote_digest else _local_diff
+        result = diff(spark, args, keys, window)
 
         if args.explain or args.interactive:
             plan = result.df._jdf.queryExecution().explainString(
@@ -342,16 +376,7 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
                   else "\n".join(f"{k}: {v}" for k, v in stats.items()))
             return 0
 
-        df = result.df
-        if args.limit:
-            df = df.limit(args.limit)
-        it = df.toLocalIterator()
-        cols = df.columns[1:]  # first column is the sign
-        for row in it:
-            if args.json_output:
-                print(json.dumps({"sign": row[0], **{c: _jsonable(row[c]) for c in cols}}))
-            else:
-                print(f"{row[0]} {', '.join(repr(row[c]) for c in cols)}")
+        _print_rows(result.df, args)
         return 0
     finally:
         if "result" in locals():
@@ -360,28 +385,20 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
             spark.stop()
 
 
-def _local_diff(spark, args, keys):
+def _local_diff(spark, args, keys, window):
     """Both URIs read into Spark: joindiff or hashdiff via diff_tables."""
-    from pyspark.sql import functions as F
-
     from data_diff_spark.diff import Algorithm, diff_schemas, diff_tables
-    from data_diff_spark.sources.connect import connect_to_table
 
-    t1 = connect_to_table(spark, args.uri1, keys, args.update_column, None, args.where)
-    t2 = connect_to_table(spark, args.uri2, keys, args.update_column, None, args.where)
+    t1 = _segment(spark, args, args.uri1, keys, window)
+    t2 = _segment(spark, args, args.uri2, keys, window)
 
     for col, ta, tb, status in diff_schemas(t1.df, t2.df):
         if status != "common":
             print(f"warning: schema difference on {col!r}: {ta} vs {tb} ({status})",
                   file=sys.stderr)
 
-    shared = [c for c in t1.df.columns if c in set(t2.df.columns)]
-    if args.columns:
-        compare = expand_columns(args.columns, shared, keys)
-    else:
-        compare = [c for c in shared if c not in keys]
-    t1 = t1.with_(extra_columns=tuple(compare))
-    t2 = t2.with_(extra_columns=tuple(compare))
+    compare = _compared(args, t1, t2.df.columns, keys)
+    t1, t2 = t1.with_(extra_columns=compare), t2.with_(extra_columns=compare)
 
     if not args.no_refine:
         # sampling refinement of string columns (reference
@@ -394,14 +411,6 @@ def _local_diff(spark, args, keys):
             for col, kind in sorted(seg.kind_overrides.items()):
                 print(f"refined: table {side} column {col!r} detected as {kind}",
                       file=sys.stderr)
-
-    if args.update_column and (args.min_age or args.max_age):
-        upd = F.col(args.update_column)
-        for seg_attr, pred in (("min_age", upd < _age_bound(spark, args.min_age) if args.min_age else None),
-                               ("max_age", upd > _age_bound(spark, args.max_age) if args.max_age else None)):
-            if pred is not None:
-                t1 = t1.with_(df=t1.df.filter(pred))
-                t2 = t2.with_(df=t2.df.filter(pred))
 
     return diff_tables(
         t1,
@@ -439,62 +448,35 @@ def _spark_type_to_sql(dt) -> str:
     }.get(type(dt), "VARCHAR")
 
 
-def _remote_age_bounds(spark, args) -> dict:
-    """min/max-age boundaries computed ONCE client-side, so both engines
-    compare against the SAME instant — two engine-local now() calls would
-    disagree by query latency and misalign the windows (the reference also
-    computes min_update/max_update client-side, table_segment.py)."""
-    out = {}
-    if args.update_column and (args.min_age or args.max_age):
-        from datetime import timedelta
-
-        now = spark.sql("select current_timestamp() as t").first()["t"]
-        if args.min_age:
-            out["lt"] = now - timedelta(seconds=parse_duration_seconds(args.min_age))
-        if args.max_age:
-            out["gt"] = now - timedelta(seconds=parse_duration_seconds(args.max_age))
-    return out
-
-
-def _remote_relation(rel: str, args, bounds: dict, dialect) -> str:
+def _remote_relation(rel: str, args, window: dict, dialect) -> str:
     """Wrap the remote relation in a subquery applying the SAME restriction
-    the Spark side gets: --remote-where (or --where) verbatim, plus the
-    update-column age window as shared literal boundaries. Without this,
-    every row outside the Spark side's window would surface as a spurious
-    exclusive '+' row."""
+    the Spark side gets: --remote-where (or --where) verbatim, plus the age
+    window's literal bounds under the segment's own rule
+    (TableSegment._range_predicate). Without this, every row outside the
+    Spark side's window would surface as a spurious exclusive '+' row."""
     preds = []
     where = args.remote_where or args.where
     if where:
         preds.append(f"({where})")
-    if bounds:
+    if window:
         u = dialect.ident(args.update_column)
-        if "lt" in bounds:
-            preds.append(f"{u} < {dialect.ts_literal(bounds['lt'])}")
-        if "gt" in bounds:
-            preds.append(f"{u} > {dialect.ts_literal(bounds['gt'])}")
+        if "min_update" in window:
+            preds.append(f"{u} >= {dialect.ts_literal(window['min_update'])}")
+        if "max_update" in window:
+            preds.append(f"{u} < {dialect.ts_literal(window['max_update'])}")
     if not preds:
         return rel
     return f"(select * from {rel} where {' and '.join(preds)}) seg0"
 
 
-def _remote_digest_diff(spark, args, keys):
+def _remote_digest_diff(spark, args, keys, window):
     """uri1 stays a Spark-side segment; uri2 becomes a RemoteSide that
     computes its own bucket digests (reference hashdiff deployment shape:
     only checksums + mismatched-bucket rows cross the wire)."""
-    from pyspark.sql import functions as F
-
     from data_diff_spark.diff import DiffResult
     from data_diff_spark.operators import remote as RM
-    from data_diff_spark.sources.connect import connect_to_table
 
-    t1 = connect_to_table(spark, args.uri1, keys, args.update_column, None, args.where)
-    bounds = _remote_age_bounds(spark, args)
-    if bounds:  # batch mode applies this after its own branch; remote here
-        upd = F.col(args.update_column)
-        if "lt" in bounds:
-            t1 = t1.with_(df=t1.df.filter(upd < F.lit(bounds["lt"])))
-        if "gt" in bounds:
-            t1 = t1.with_(df=t1.df.filter(upd > F.lit(bounds["gt"])))
+    t1 = _segment(spark, args, args.uri1, keys, window)
     uri = args.uri2
     if uri.startswith("duckdb://"):
         import duckdb
@@ -503,10 +485,9 @@ def _remote_digest_diff(spark, args, keys):
         if not rel:
             raise SystemExit("error: duckdb remote needs '#<table-or-query>'")
         con = duckdb.connect(db) if db else duckdb.connect()
-        rel = _remote_relation(rel, args, bounds, RM.DuckDBDialect())
+        rel = _remote_relation(rel, args, window, RM.DuckDBDialect())
         remote_cols = [r[0] for r in con.execute(f"describe select * from {rel}").fetchall()]
-        compare = _remote_compare_columns(args, t1, remote_cols, keys)
-        t1 = t1.with_(extra_columns=tuple(compare))
+        t1 = t1.with_(extra_columns=_compared(args, t1, remote_cols, keys))
         # the remote column list mirrors the Spark side's relevant_columns
         # (keys, update column, extras) POSITIONALLY — with -t set, a plain
         # keys+compare order would misalign every checksum column
@@ -527,10 +508,8 @@ def _remote_digest_diff(spark, args, keys):
                 "error: sqlite remote needs a plain table name "
                 f"({rel!r} has no pragma table_info)")
         types = {r[1]: (r[2] or "TEXT").upper() for r in info}
-        remote_cols = [r[1] for r in info]
-        compare = _remote_compare_columns(args, t1, remote_cols, keys)
-        t1 = t1.with_(extra_columns=tuple(compare))
-        relq = _remote_relation(rel, args, bounds, RM.SQLiteDialect())
+        t1 = t1.with_(extra_columns=_compared(args, t1, [r[1] for r in info], keys))
+        relq = _remote_relation(rel, args, window, RM.SQLiteDialect())
         side = RM.SQLiteSide(con, relq, keys, list(t1.relevant_columns), types)
     elif uri.startswith("jdbc:"):
         sub = uri.split(":", 2)[1]
@@ -559,10 +538,8 @@ def _remote_digest_diff(spark, args, keys):
         # upper-fold only reaches quoted (verified live in test_cli_derby)
         types = {dia.ident(f.name): _spark_type_to_sql(f.dataType)
                  for f in probe.schema.fields}
-        raw_cols = [f.name for f in probe.schema.fields]
-        compare = _remote_compare_columns(args, t1, raw_cols, keys)
-        t1 = t1.with_(extra_columns=tuple(compare))
-        rel = _remote_relation(dbtable, args, bounds, dia)
+        t1 = t1.with_(extra_columns=_compared(args, t1, probe.columns, keys))
+        rel = _remote_relation(dbtable, args, window, dia)
         side = RM.JdbcSide(spark, uri, rel,
                            [dia.ident(k) for k in keys],
                            [dia.ident(c) for c in t1.relevant_columns], types,
@@ -572,13 +549,6 @@ def _remote_digest_diff(spark, args, keys):
             "error: --remote-digest needs uri2 = duckdb://…, sqlite://… or jdbc:…")
 
     return DiffResult(RM.hash_diff_remote(t1, side, n_buckets=args.n_buckets), t1)
-
-
-def _remote_compare_columns(args, t1, remote_cols, keys):
-    shared = [c for c in t1.df.columns if c in set(remote_cols)]
-    if args.columns:
-        return expand_columns(args.columns, shared, keys)
-    return [c for c in shared if c not in keys]
 
 
 def _jsonable(v):

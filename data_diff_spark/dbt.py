@@ -33,7 +33,7 @@ from typing import Callable, Dict, List, Optional, Sequence, Set, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_diff_spark.diff import DiffResult, diff_tables
+from data_diff_spark.diff import DiffResult, diff_tables, shared_columns
 from data_diff_spark.table import table_segment
 
 logger = logging.getLogger(__name__)
@@ -189,6 +189,10 @@ def dbt_diff(
     blocks on remote databases; here each diff is a lazy Spark plan and
     Spark schedules the actual work, so the fan-out is a simple loop —
     consume result.df / stats per model as needed.
+
+    Columns pair by name: each model compares the non-key columns prod
+    and dev both have, in prod's order, so a reordered or added dev
+    column does not misalign the comparison.
     """
     m = DbtManifest.load(manifest_path) if manifest_path else DbtManifest(manifest or {})
     uniq = m.unique_columns()
@@ -211,7 +215,9 @@ def dbt_diff(
             logger.info("Skipping %s: %s", model.name, e)
             out.append(DbtDiffResult(model.name, prod, dev, pks, skipped=f"unresolved: {e}"))
             continue
-        r = diff_tables(table_segment(df_prod, pks), table_segment(df_dev, pks), **diff_kwargs)
+        cols = shared_columns(df_prod.columns, df_dev.columns, pks)
+        r = diff_tables(table_segment(df_prod, pks, extra_columns=cols),
+                        table_segment(df_dev, pks, extra_columns=cols), **diff_kwargs)
         stats = r.get_stats_dict() if with_stats else None
         out.append(DbtDiffResult(model.name, prod, dev, pks, result=r, stats=stats))
     return out

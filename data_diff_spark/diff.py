@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import enum
 from dataclasses import dataclass
-from typing import Dict, Optional
+from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,6 +67,15 @@ class DiffResult:
             "unchanged": rows_a - minus,
             "total": minus + plus,
         }
+
+
+def shared_columns(cols_a: Sequence[str], cols_b: Sequence[str],
+                   keys: Sequence[str]) -> List[str]:
+    """The non-key columns both sides have, in side A's order: the two
+    schemas intersected by name (reference _get_expanded_columns), never
+    paired by position."""
+    b, skip = set(cols_b), set(keys)
+    return [c for c in cols_a if c in b and c not in skip]
 
 
 def diff_schemas(df1: DataFrame, df2: DataFrame) -> list:

@@ -234,9 +234,3 @@ def row_checksum(
     """
     normd = normalized_columns(schema, columns, precision_overrides, kind_overrides)
     return md5_as_int(row_fingerprint(normd))
-
-
-def checksum_agg(checksum_col: Column) -> Column:
-    """sum() aggregate over row checksums; decimal(38,0) never overflows for
-    any realistic row count (48-bit terms leave ~10^23 headroom)."""
-    return F.sum(checksum_col)

@@ -203,10 +203,9 @@ def check_null_keys(t: TableSegment, skip: bool = False) -> Optional[DataFrame]:
     for k in t.key_columns:
         p = F.col(k).isNull()
         pred = p if pred is None else pred | p
-    nulls = t.make_select().filter(pred)
     if skip:
         return t.make_select().filter(~pred)
-    if not nulls.isEmpty():
+    if not t.make_select().filter(pred).isEmpty():
         raise ValueError("NULL values in one or more primary keys")
     return None
 

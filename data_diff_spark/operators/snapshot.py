@@ -39,12 +39,17 @@ from data_diff_spark.table import TableSegment
 
 SIGN_COL = "sign"
 CKS_COL = "__row_cks"
+# field-metadata key on CKS_COL: the column list the checksum hashed, in order
+HASHED_COLUMNS = "hashed_columns"
 
 
 def snapshot_frame(segment: TableSegment) -> DataFrame:
-    """(keys..., __row_cks) for the segment — what gets persisted."""
+    """(keys..., __row_cks) for the segment — what gets persisted.
+    __row_cks records the hashed column list as field metadata, which
+    parquet keeps."""
+    hashed = {HASHED_COLUMNS: list(segment.relevant_columns)}
     return segment.make_select().select(
-        *segment.key_columns, segment.checksum_column().alias(CKS_COL)
+        *segment.key_columns, segment.checksum_column().alias(CKS_COL, metadata=hashed)
     )
 
 
@@ -59,7 +64,17 @@ def diff_against_snapshot(segment: TableSegment, snapshot: DataFrame) -> DataFra
     """(sign, *keys) for every key that was inserted ('+'), deleted ('-'),
     or updated ('!') since the snapshot was taken. One full-outer join of
     two narrow frames; unchanged keys are filtered before anything wide
-    happens."""
+    happens.
+
+    ValueError if the snapshot recorded a hashed column list other than
+    the segment's: every row checksum would differ. A snapshot without the
+    record is diffed as is."""
+    hashed = snapshot.schema[CKS_COL].metadata.get(HASHED_COLUMNS)
+    if hashed is not None and hashed != list(segment.relevant_columns):
+        raise ValueError(
+            f"snapshot hashed columns {hashed}, this segment hashes "
+            f"{list(segment.relevant_columns)}: build the segment with the same "
+            f"update_column and columns, in the same order")
     keys = list(segment.key_columns)
     cur = segment.make_select().select(
         *keys, segment.checksum_column().alias("__cks_new"), F.lit(True).alias("__in_new")

@@ -58,6 +58,9 @@ class TableSegment:
             if self.update_column:
                 object.__setattr__(self, "update_column", fix(self.update_column))
             object.__setattr__(self, "extra_columns", tuple(fix(c) for c in self.extra_columns))
+        if self.update_column is None and (self.min_update is not None
+                                           or self.max_update is not None):
+            raise ValueError("min_update/max_update need an update_column to window")
         missing = [c for c in self.relevant_columns if c not in self.df.columns]
         if missing:
             raise ValueError(f"columns not in DataFrame: {missing} (have {self.df.columns})")
@@ -84,11 +87,10 @@ class TableSegment:
             preds.append(self._vector_cmp(self.min_key, ">="))
         if self.max_key is not None:
             preds.append(self._vector_cmp(self.max_key, "<"))
-        if self.update_column is not None:
-            if self.min_update is not None:
-                preds.append(F.col(self.update_column) >= F.lit(self.min_update))
-            if self.max_update is not None:
-                preds.append(F.col(self.update_column) < F.lit(self.max_update))
+        if self.min_update is not None:
+            preds.append(F.col(self.update_column) >= F.lit(self.min_update))
+        if self.max_update is not None:
+            preds.append(F.col(self.update_column) < F.lit(self.max_update))
         if not preds:
             return None
         out = preds[0]

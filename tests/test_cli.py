@@ -261,6 +261,11 @@ def test_cli_snapshot_write_and_diff(spark, sf_dir, mod_orders_path, capsys):
     # snapshot flags require uri1 + keys
     with pytest.raises(SystemExit, match="snapshot"):
         main(["--snapshot", snap], spark=spark)
+    # a stored snapshot has no update column to window
+    for mode in (["--snapshot", snap], ["--snapshot-write", snap]):
+        with pytest.raises(SystemExit, match="min-age"):
+            main([f"parquet://{mod_orders_path}", "-k", "o_orderkey", *mode,
+                  "-t", "o_orderdate", "--max-age", "1d"], spark=spark)
 
 
 def test_cli_materialize(spark, sf_dir, mod_orders_path, tmp_path):
@@ -274,3 +279,100 @@ def test_cli_materialize(spark, sf_dir, mod_orders_path, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 10
     assert got.columns[0] == "sign"
+
+
+@pytest.fixture(scope="module")
+def aged_pair(spark, tmp_path_factory):
+    """10 rows (id, s, u) with historic update timestamps u; B changes only
+    key 3's s."""
+    import datetime as dt
+
+    rows = [(i, f"v{i}", dt.datetime(2020, 1, i + 1)) for i in range(10)]
+    changed = [(i, "changed" if i == 3 else s, u) for i, s, u in rows]
+    d = tmp_path_factory.mktemp("aged")
+    paths = []
+    for name, data in (("a", rows), ("b", changed)):
+        spark.createDataFrame(data, "id long, s string, u timestamp") \
+            .write.mode("overwrite").parquet(str(d / name))
+        paths.append(f"parquet://{d / name}")
+    return paths
+
+
+def _stats(capsys):
+    return {k: int(v) for k, v in
+            (line.split(": ") for line in capsys.readouterr().out.strip().splitlines())}
+
+
+def test_cli_local_age_window(spark, aged_pair, capsys, monkeypatch):
+    """--min-age/--max-age on the local path: both sides get the same
+    min_update/max_update, from one current_timestamp query."""
+    from data_diff_spark import diff
+
+    base = [*aged_pair, "-k", "id", "-t", "u", "--stats"]
+    assert main(base + ["--max-age", "1d"], spark=spark) == 0
+    assert _stats(capsys) == dict.fromkeys(
+        ["rows_A", "rows_B", "exclusive_A", "exclusive_B", "updated", "unchanged", "total"], 0)
+    full = {"rows_A": 10, "rows_B": 10, "exclusive_A": 0, "exclusive_B": 0,
+            "updated": 1, "unchanged": 9, "total": 2}
+    assert main(base + ["--min-age", "5min"], spark=spark) == 0
+    assert _stats(capsys) == full
+
+    segments, now_queries = [], []
+    diff_tables, sql = diff.diff_tables, spark.sql
+
+    def spy_diff_tables(t1, t2, **kw):
+        segments.append((t1, t2))
+        return diff_tables(t1, t2, **kw)
+
+    def spy_sql(query, *a, **kw):
+        if "current_timestamp" in query:
+            now_queries.append(query)
+        return sql(query, *a, **kw)
+
+    monkeypatch.setattr(diff, "diff_tables", spy_diff_tables)
+    monkeypatch.setattr(spark, "sql", spy_sql)
+    assert main(base + ["--min-age", "5min", "--max-age", "36500d"], spark=spark) == 0
+    assert _stats(capsys) == full
+    [(t1, t2)] = segments
+    assert t1.min_update is not None and t1.max_update is not None
+    assert (t1.min_update, t1.max_update) == (t2.min_update, t2.max_update)
+    assert len(now_queries) == 1
+
+
+def test_cli_age_window_needs_update_column(spark, aged_pair):
+    """A window with no update column to apply it to raises, in the library
+    and through the CLI, instead of diffing every row."""
+    import datetime as dt
+
+    from data_diff_spark import table_segment
+
+    with pytest.raises(ValueError, match="update_column"):
+        table_segment(spark.range(3), ["id"], max_update=dt.datetime(2020, 1, 1))
+    with pytest.raises(ValueError, match="update_column"):
+        main([*aged_pair, "-k", "id", "--max-age", "1d"], spark=spark)
+
+
+def test_cli_snapshot_hashed_columns_must_match(spark, aged_pair, tmp_path, capsys):
+    """-t and -c reorder the hashed columns: a snapshot read with another
+    column list raises instead of reporting every key as updated."""
+    from pyspark.sql import functions as F
+
+    from data_diff_spark.operators.snapshot import CKS_COL
+
+    a, b = aged_pair
+    snap = str(tmp_path / "snap")
+    assert main([a, "-k", "id", "--snapshot-write", snap], spark=spark) == 0
+    for flags in (["-t", "u"], ["-c", "u", "-c", "s"]):
+        with pytest.raises(ValueError, match="hashed columns"):
+            main([b, "-k", "id", "--snapshot", snap, *flags], spark=spark)
+    capsys.readouterr()
+    assert main([b, "-k", "id", "--snapshot", snap], spark=spark) == 0
+    assert capsys.readouterr().out.splitlines() == ["! 3"]
+
+    # a snapshot without the record diffs as before
+    bare = str(tmp_path / "bare")
+    spark.read.parquet(snap).select("id", F.col(CKS_COL).alias(CKS_COL, metadata={})) \
+        .write.parquet(bare)
+    assert not spark.read.parquet(bare).schema[CKS_COL].metadata
+    assert main([b, "-k", "id", "--snapshot", bare], spark=spark) == 0
+    assert capsys.readouterr().out.splitlines() == ["! 3"]

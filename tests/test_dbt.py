@@ -123,3 +123,18 @@ def test_dbt_diff_fanout(spark, sf_dir, manifest):
     for r in results:
         if r.result:
             r.result.unpersist()
+
+
+@pytest.mark.parametrize("dev_columns", [["id", "b", "a"], ["id", "a", "b", "c"]])
+def test_dbt_diff_pairs_columns_by_name(spark, dev_columns):
+    """dev reorders or adds columns: the shared columns pair by name, so
+    the unchanged rows read unchanged."""
+    rows = spark.createDataFrame([(1, "a1", "b1", "c1"), (2, "a2", "b2", "c2")],
+                                 "id long, a string, b string, c string")
+    frames = {"prod": rows.select("id", "a", "b"), "dev": rows.select(*dev_columns)}
+    manifest = {"nodes": {"model.p.items": {
+        "resource_type": "model", "name": "items", "schema": "dev",
+        "columns": {"id": {"meta": {"primary-key": True}}}}}}
+    [r] = dbt_diff(spark, manifest=manifest, prod_schema="prod",
+                   resolver=lambda path: frames[path[0]])
+    assert r.stats["total"] == 0 and r.stats["unchanged"] == 2

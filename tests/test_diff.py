@@ -186,6 +186,10 @@ def test_update_column_window(spark):
     d = join_diff(t1, t2)
     got = _sorted_rows(d)
     assert got == [("-", 3, dt.datetime(2023, 1, 1), "c")]
+    # min_update is inclusive, max_update exclusive
+    at = dt.datetime(2022, 6, 1)
+    assert table_segment(a, ["id"], update_column="updated", min_update=at).count() == 2
+    assert table_segment(a, ["id"], update_column="updated", max_update=at).count() == 1
 
 
 def test_key_range_restriction(spark):
