@@ -9,8 +9,9 @@ verification): /root/reference/data_diff/databases/base.py:1271-1286.
 MD5_HEXDIGITS = 32
 
 # Must be 12 or lower, otherwise SUM() of many checksums overflows 64-bit
-# accumulators in the reference's target databases. We keep 12 for parity even
-# though Spark sums into decimal(38,0) and could afford more.
+# accumulators in the reference's target databases. We keep 12 for parity:
+# a 48-bit checksum is one Spark long per row, and normalize.checksum_sum
+# adds them exactly as two long halves.
 CHECKSUM_HEXDIGITS = 12
 
 _CHECKSUM_BITSIZE = CHECKSUM_HEXDIGITS << 2  # 48 bits
@@ -20,6 +21,11 @@ CHECKSUM_MASK = (2**_CHECKSUM_BITSIZE) - 1
 # and SUM() can add many more terms before overflowing (reference
 # base.py:1277-1286 explains the rationale).
 CHECKSUM_OFFSET = CHECKSUM_MASK // 2
+
+# normalize.checksum_sum splits each checksum at this bit: the high part
+# (c >> 24, |.| <= 2**23) and the low part (c & 0xFFFFFF, < 2**24) are summed
+# as separate longs, which overflow only past 2**39 rows in one group.
+CHECKSUM_SUM_LO_BITS = 24
 
 # 1-indexed start position of the low hex digits inside the md5 digest
 # (SQL substring is 1-indexed): 21 for 12 hex digits.

@@ -18,7 +18,7 @@ codegen'd, no Python in the hot path.
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping, Optional, Sequence, Union
+from typing import Iterable, Mapping, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 from data_diff_spark.constants import (
     CHECKSUM_OFFSET,
     CHECKSUM_SUBSTR_POS,
+    CHECKSUM_SUM_LO_BITS,
     DEFAULT_DATETIME_PRECISION,
     DEFAULT_NUMERIC_PRECISION,
     FINGERPRINT_SEP,
@@ -211,14 +212,38 @@ def row_fingerprint(normalized: Iterable[Column]) -> Column:
 
 
 def md5_as_int(col: ColumnOrName) -> Column:
-    """Low 12 hex digits of md5, as an integer centered at 0.
+    """Low 12 hex digits of md5, as a long centered at 0.
 
     Reference Spark-SQL recipe databricks.py:87-88:
         cast(conv(substr(md5(s), 21), 16, 10) as decimal(38, 0)) - OFFSET
+    Here the cast is to long instead: 12 hex digits are 48 bits, so the
+    centered value lies in [-(2**47 - 1), 2**47] and one 8-byte long holds
+    it exactly. The reference needs decimal(38,0) only for headroom in
+    sum(); sum these with checksum_sum, which is exact without it.
     """
     col = _to_col(col)
     raw = F.conv(F.substring(F.md5(col), CHECKSUM_SUBSTR_POS, 1000), 16, 10)
-    return raw.cast(T.DecimalType(38, 0)) - F.lit(CHECKSUM_OFFSET).cast(T.DecimalType(38, 0))
+    return raw.cast("long") - F.lit(CHECKSUM_OFFSET)
+
+
+def checksum_sum(cks: ColumnOrName) -> Tuple[Column, Column]:
+    """Exact sum(cks) of a long checksum column as two long aggregates
+    (hi, lo) with sum = hi * 2**24 + lo and 0 <= lo < 2**24. Both halves
+    are summed separately and lo's overflow is carried into hi, so the pair
+    is canonical: equal sums give equal pairs. A single long sum could
+    overflow (and raise, under ANSI) once ~2**16 same-sign 48-bit values
+    share a group; the halves overflow only past 2**39 rows. NULL pair if
+    the group holds no non-NULL value. Python-side value: checksum_value."""
+    cks = _to_col(cks)
+    mask = (1 << CHECKSUM_SUM_LO_BITS) - 1
+    hi = F.sum(F.shiftright(cks, CHECKSUM_SUM_LO_BITS))
+    lo = F.sum(cks.bitwiseAND(F.lit(mask)))
+    return hi + F.shiftright(lo, CHECKSUM_SUM_LO_BITS), lo.bitwiseAND(F.lit(mask))
+
+
+def checksum_value(hi: Optional[int], lo: Optional[int]) -> Optional[int]:
+    """The Python int that checksum_sum's (hi, lo) pair encodes."""
+    return None if hi is None else (hi << CHECKSUM_SUM_LO_BITS) + lo
 
 
 def row_checksum(
@@ -227,10 +252,12 @@ def row_checksum(
     precision_overrides: Optional[Mapping[str, int]] = None,
     kind_overrides: Optional[Mapping[str, str]] = None,
 ) -> Column:
-    """Per-row checksum column: md5_as_int(fingerprint(normalized columns)).
+    """Per-row checksum column: md5_as_int(fingerprint(normalized columns)),
+    a long (the reference's decimal(38,0), narrowed: 48 bits fit).
 
-    sum() of this column over any row set is the reference's segment checksum
-    (table_segment.py:239-258); equal row multisets ⇒ equal sums.
+    The sum of this column over any row set is the reference's segment
+    checksum (table_segment.py:239-258); equal row multisets ⇒ equal sums.
+    Take that sum with checksum_sum, not a single long sum().
     """
     normd = normalized_columns(schema, columns, precision_overrides, kind_overrides)
     return md5_as_int(row_fingerprint(normd))

@@ -7,10 +7,13 @@ count+md5-checksum SQL query per segment per side per level, because each
 round-trip to a remote database is expensive. In Spark a single shuffle
 replaces the whole recursion tree (SURVEY.md §4.3):
 
-  1. per row: checksum = md5_as_int(fingerprint(normalized cols)),
-     bucket = pmod(xxhash64(normalized keys), n_buckets)
+  1. per row: checksum = md5_as_int(fingerprint(normalized cols)), one
+     8-byte long; only it and the normalized key strings are cached, and
+     bucket = pmod(xxhash64(normalized keys), n_buckets) is recomputed
+     from those strings at each level
   2. both sides: one groupBy(bucket) over the side-tagged union, giving
-     each side's (count, sum(checksum)) -- map-side combined partial
+     each side's (count, sum(checksum)) -- the sum exact as two long
+     halves (normalize.checksum_sum), map-side combined partial
      aggregation; the shuffle moves only partial digest rows
   3. compare the two tiny digest tables; equal digests prune the bucket
      (the reference's checksum-equality pruning, hashdiff_tables.py:210-212)
@@ -35,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_diff_spark.normalize import (
+    checksum_sum,
     md5_as_int,
     normalized_columns,
     row_fingerprint,
@@ -50,7 +54,6 @@ _FINE_LEVEL_MIN_ROWS = 2_000_000  # below this many dirty-coarse rows, go straig
 
 _CKS = "__cks__"
 _BUCKET = "__bucket__"
-_H = "__keyhash__"
 
 
 def _knorm(i: int) -> str:
@@ -58,7 +61,7 @@ def _knorm(i: int) -> str:
 
 
 def _key_norm(t: TableSegment, cols: List[str]) -> List[Column]:
-    """Normalized key strings (NULL as '<null>'). Both the key hash and the
+    """Normalized key strings (NULL as '<null>'). Both the bucket hash and the
     phase-2 grouping use this one canonical form, so the sides align by key
     VALUE even when key columns differ in name, physical type or kind
     override (the reference aligns segments by key value,
@@ -71,17 +74,15 @@ def _key_norm(t: TableSegment, cols: List[str]) -> List[Column]:
 
 
 def _annotated_keys(t: TableSegment, cols: List[str]) -> DataFrame:
-    """Per-row checksum + normalized key strings + key hash ONLY — no raw
-    columns. This is the frame hash_diff caches: a handful of strings and
-    two numbers per row no matter how wide the table. Bucket ids at any
-    granularity derive from the stored hash (pmod), so the digest levels
-    are chosen after annotation."""
+    """(__cks__, __knorm0__ ... __knormK__) ONLY — no raw columns. This is
+    the frame hash_diff caches: a handful of strings and one long per row
+    no matter how wide the table. Bucket ids at any granularity are hashed
+    from the cached key strings (_bucket_id), so the digest levels are
+    chosen after annotation."""
     normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
-    key_norm = _key_norm(t, cols)
     return t.make_select().select(
         md5_as_int(row_fingerprint(normd)).alias(_CKS),
-        *[k.alias(_knorm(i)) for i, k in enumerate(key_norm)],
-        F.xxhash64(*key_norm).alias(_H),
+        *[k.alias(_knorm(i)) for i, k in enumerate(_key_norm(t, cols))],
     )
 
 
@@ -99,44 +100,56 @@ def _emit(t: TableSegment, cols: List[str], out_names: List[str], sign: str,
     return joined.select(F.lit(sign).alias(SIGN_COL), *out_names)
 
 
-def _bucketed(df: DataFrame, n: int) -> DataFrame:
-    return df.withColumn(_BUCKET, F.pmod(F.col(_H), F.lit(n)))
+def _bucket_id(keys: List[str], n: int) -> Column:
+    """Bucket of a row among n, from its cached normalized key columns."""
+    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n))
+
+
+def _bucketed(df: DataFrame, keys: List[str], n: int) -> DataFrame:
+    return df.withColumn(_BUCKET, _bucket_id(keys, n))
 
 
 def _side_digests(a: DataFrame, b: DataFrame, by: List[str]) -> DataFrame:
     """THE digest kernel, used at every level: per `by` group, each side's
-    row count and checksum sum -> (*by, ca, cb, sa, sb). One aggregation
-    over the side-tagged union, so both sides are scanned in one stage and
-    only map-side partial aggregates cross the one shuffle. A group absent
-    from a side reads count 0 and sum NULL there."""
+    row count and exact checksum sum -> (*by, ca, cb, sa_hi, sa_lo, sb_hi,
+    sb_lo), each sum a canonical checksum_sum pair. One aggregation over
+    the side-tagged union, so both sides are scanned in one stage and only
+    map-side partial aggregates cross the one shuffle. A group absent from
+    a side reads count 0 and a NULL sum pair there."""
     side = "__side__"
     u = a.select(*by, _CKS, F.lit(0).alias(side)).unionAll(
         b.select(*by, _CKS, F.lit(1).alias(side))
     )
     is_a = (F.col(side) == 0).cast("long")
+    sa_hi, sa_lo = checksum_sum(F.when(F.col(side) == 0, F.col(_CKS)))
+    sb_hi, sb_lo = checksum_sum(F.when(F.col(side) == 1, F.col(_CKS)))
     return u.groupBy(*by).agg(
         F.sum(is_a).alias("ca"),
         F.sum(1 - is_a).alias("cb"),
-        F.sum(F.when(F.col(side) == 0, F.col(_CKS))).alias("sa"),
-        F.sum(F.when(F.col(side) == 1, F.col(_CKS))).alias("sb"),
+        sa_hi.alias("sa_hi"), sa_lo.alias("sa_lo"),
+        sb_hi.alias("sb_hi"), sb_lo.alias("sb_lo"),
     )
 
 
 def _digests_differ() -> Column:
     """A group's row multiset differs iff its (count, checksum-sum) digests
     differ (hashdiff_tables.py:210-212)."""
-    return (F.col("ca") != F.col("cb")) | ~F.col("sa").eqNullSafe(F.col("sb"))
+    return ((F.col("ca") != F.col("cb"))
+            | ~F.col("sa_hi").eqNullSafe(F.col("sb_hi"))
+            | ~F.col("sa_lo").eqNullSafe(F.col("sb_lo")))
 
 
-def _paired_digest(a: DataFrame, b: DataFrame, n_buckets: int):
+def _paired_digest(a: DataFrame, b: DataFrame, keys: List[str], n_buckets: int):
     """Coarse level: the bucket digests of BOTH sides in ONE job, collected
     to the driver (<= n_buckets rows) and compared there — no digest join.
     The collect also yields the exact row counts that size the fine level.
 
     Returns (dirty bucket ids, rows in dirty buckets on both sides,
     rows_total_a, rows_total_b)."""
-    rows = _side_digests(_bucketed(a, n_buckets), _bucketed(b, n_buckets), [_BUCKET]).collect()
-    bad = [r for r in rows if r["ca"] != r["cb"] or r["sa"] != r["sb"]]
+    a, b = _bucketed(a, keys, n_buckets), _bucketed(b, keys, n_buckets)
+    rows = _side_digests(a, b, [_BUCKET]).collect()
+    bad = [r for r in rows
+           if (r["ca"], r["sa_hi"], r["sa_lo"]) != (r["cb"], r["sb_hi"], r["sb_lo"])]
     return ([r[_BUCKET] for r in bad], sum(r["ca"] + r["cb"] for r in bad),
             sum(r["ca"] for r in rows), sum(r["cb"] for r in rows))
 
@@ -152,7 +165,7 @@ def _key_stats(per_key: DataFrame, rows_a: int, rows_b: int):
     return stats
 
 
-def _restrict_join(df: DataFrame, ids_df: DataFrame, n: int,
+def _restrict_join(df: DataFrame, keys: List[str], ids_df: DataFrame, n: int,
                    broadcast: bool) -> DataFrame:
     """Restrict `df` to the buckets in `ids_df` (a single-`_BUCKET`-column
     frame) via left-semi join — the large-id-set sibling of _restrict's
@@ -160,18 +173,18 @@ def _restrict_join(df: DataFrame, ids_df: DataFrame, n: int,
     (one long column; ~16 bytes/id); above _BROADCAST_KEYS_LIMIT the
     caller leaves the join shape to AQE."""
     rhs = F.broadcast(ids_df) if broadcast else ids_df
-    return _bucketed(df, n).join(rhs, _BUCKET, "left_semi").drop(_BUCKET)
+    return _bucketed(df, keys, n).join(rhs, _BUCKET, "left_semi").drop(_BUCKET)
 
 
-def _restrict(df: DataFrame, ids: List[int], n: int) -> DataFrame:
+def _restrict(df: DataFrame, keys: List[str], ids: List[int], n: int) -> DataFrame:
     """Restrict `df` to the driver-side bucket ids `ids` (of n buckets)."""
     if len(ids) >= n:
         return df
     if len(ids) <= _ISIN_LIMIT:
         # isin over a literal set compiles to a hash-set probe (InSet)
-        return df.filter(F.pmod(F.col(_H), F.lit(n)).isin(ids))
+        return df.filter(_bucket_id(keys, n).isin(ids))
     ids_df = df.sparkSession.createDataFrame([(int(x),) for x in ids], f"{_BUCKET} long")
-    return _restrict_join(df, ids_df, n, broadcast=True)
+    return _restrict_join(df, keys, ids_df, n, broadcast=True)
 
 
 def hash_diff(
@@ -188,11 +201,11 @@ def hash_diff(
     n_buckets=None auto-sizes a two-level digest scheme (coarse prune +
     fine isolate); an explicit positive int forces one fixed level.
 
-    Cache shape: only (checksum, normalized keys, key hash) per row is
-    persisted — a few strings and two numbers no matter how wide the table,
-    so the cache never becomes the table. The rows of the differing PKs are
-    then re-read from the sources with a left-semi join: the sources are
-    scanned twice, but the second scan is pruned to the differing keys.
+    Cache shape: only (checksum, normalized keys) per row is persisted —
+    a few strings and one long no matter how wide the table, so the cache
+    never becomes the table. The rows of the differing PKs are then re-read
+    from the sources with a left-semi join: the sources are scanned twice,
+    but the second scan is pruned to the differing keys.
     """
     if n_buckets is not None and n_buckets < 1:
         raise ValueError(f"n_buckets must be a positive int, got {n_buckets!r}")
@@ -213,9 +226,9 @@ def hash_diff(
     # 4096-bucket level 80s -> two-level design 36s; the zero-diff case
     # pays only the coarse level (7.9s -> 5.3s).
     coarse_n = n_buckets or DEFAULT_N_BUCKETS
-    bad_ids, dirty_rows, rows_a, rows_b = _paired_digest(a, b, coarse_n)
-    a_bad = _restrict(a, bad_ids, coarse_n)
-    b_bad = _restrict(b, bad_ids, coarse_n)
+    bad_ids, dirty_rows, rows_a, rows_b = _paired_digest(a, b, knorm_names, coarse_n)
+    a_bad = _restrict(a, knorm_names, bad_ids, coarse_n)
+    b_bad = _restrict(b, knorm_names, bad_ids, coarse_n)
 
     # --- level 2: fine digests over the dirty-coarse rows only --------------
     # ...unless the dirty-coarse rows are ALREADY few: phase 2's per-key
@@ -240,19 +253,20 @@ def hash_diff(
             # through to a plain left-semi under AQE; a fully-dirty set
             # prunes nothing and is skipped.
             ids_df = (
-                _side_digests(_bucketed(a_bad, fine_n), _bucketed(b_bad, fine_n), [_BUCKET])
+                _side_digests(_bucketed(a_bad, knorm_names, fine_n),
+                              _bucketed(b_bad, knorm_names, fine_n), [_BUCKET])
                 .filter(_digests_differ()).select(_BUCKET).persist()
             )
             n_ids = ids_df.count()
             if n_ids <= _ISIN_LIMIT:
                 fine_ids = [r[_BUCKET] for r in ids_df.collect()]
                 ids_df.unpersist()
-                a_bad = _restrict(a_bad, fine_ids, fine_n)
-                b_bad = _restrict(b_bad, fine_ids, fine_n)
+                a_bad = _restrict(a_bad, knorm_names, fine_ids, fine_n)
+                b_bad = _restrict(b_bad, knorm_names, fine_ids, fine_n)
             elif n_ids < fine_n:
                 bcast = n_ids <= _BROADCAST_KEYS_LIMIT
-                a_bad = _restrict_join(a_bad, ids_df, fine_n, bcast)
-                b_bad = _restrict_join(b_bad, ids_df, fine_n, bcast)
+                a_bad = _restrict_join(a_bad, knorm_names, ids_df, fine_n, bcast)
+                b_bad = _restrict_join(b_bad, knorm_names, ids_df, fine_n, bcast)
                 extra_handles.append(ids_df)
             else:
                 ids_df.unpersist()

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_diff_spark.constants import CHECKSUM_OFFSET, DEFAULT_NUMERIC_PRECISION
+from data_diff_spark.normalize import checksum_sum, checksum_value
 from data_diff_spark.operators.hashdiff import (
     _AUTO_ROWS_PER_BUCKET,
     _BROADCAST_KEYS_LIMIT,
@@ -1041,26 +1042,23 @@ def hash_diff_remote(
         while n_buckets * _AUTO_ROWS_PER_BUCKET < cnt and n_buckets < (1 << 20):
             n_buckets <<= 1
 
-    # hashdiff's narrow cache shape plus the cross-engine bucket: a long
-    # checksum (the remote sums bigints) and the normalized key strings
+    # hashdiff's narrow cache shape (long checksum, normalized key strings)
+    # plus the cross-engine bucket
     knames = [_knorm(i) for i in range(len(t1.key_columns))]
-    a = _annotated_keys(t1, cols).select(
-        F.col(_CKS).cast("long").alias(_CKS),
-        *knames,
-        _spark_bucket([F.col(k) for k in knames], n_buckets).alias(_BUCKET),
+    a = _annotated_keys(t1, cols).withColumn(
+        _BUCKET, _spark_bucket([F.col(k) for k in knames], n_buckets)
     ).persist()
 
+    cks_hi, cks_lo = checksum_sum(_CKS)
     digests = (
         a.groupBy(_BUCKET)
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum(_CKS).cast("long").alias("cks"))
+        .agg(F.count(F.lit(1)).alias("cnt"), cks_hi.alias("hi"), cks_lo.alias("lo"))
         .toArrow()  # columnar driver transfer: no per-row Row objects
     )
     local = {
-        b: (c, k)
-        for b, c, k in zip(
-            digests.column(_BUCKET).to_pylist(),
-            digests.column("cnt").to_pylist(),
-            digests.column("cks").to_pylist(),
+        b: (c, checksum_value(hi, lo))
+        for b, c, hi, lo in zip(
+            *[digests.column(name).to_pylist() for name in (_BUCKET, "cnt", "hi", "lo")]
         )
     }
     remote_digests = {int(b): (int(c), int(s) if s is not None else None)

@@ -13,8 +13,8 @@ digests against it:
 
 Scale notes (100 TB):
   - The snapshot is NARROW: a 100 TB / 200-column table snapshots to
-    roughly keys + 16 bytes of digest per row. Checksum computation is the
-    one full scan (map-only, inside codegen — normalize.row_checksum);
+    roughly keys + one 8-byte long checksum per row. Checksum computation
+    is the one full scan (map-only, inside codegen — normalize.row_checksum);
     the diff joins two narrow frames on the keys.
   - Write the snapshot with write_bucketed (sources/connect.py) and the
     recurring diff is Exchange-free on the snapshot side — the same
@@ -64,7 +64,8 @@ def diff_against_snapshot(segment: TableSegment, snapshot: DataFrame) -> DataFra
     """(sign, *keys) for every key that was inserted ('+'), deleted ('-'),
     or updated ('!') since the snapshot was taken. One full-outer join of
     two narrow frames; unchanged keys are filtered before anything wide
-    happens.
+    happens. Snapshots store __row_cks as bigint; older ones stored the
+    same values as decimal(38,0), and the comparison widens to it.
 
     ValueError if the snapshot recorded a hashed column list other than
     the segment's: every row checksum would differ. A snapshot without the

@@ -17,7 +17,12 @@ from typing import Any, Mapping, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_diff_spark.normalize import normalized_columns, row_checksum
+from data_diff_spark.normalize import (
+    checksum_sum,
+    checksum_value,
+    normalized_columns,
+    row_checksum,
+)
 
 
 @dataclass(frozen=True)
@@ -136,17 +141,14 @@ class TableSegment:
 
     def count_and_checksum(self) -> Tuple[int, Optional[int]]:
         """One-pass count(*) + sum(md5_as_int(fingerprint))
-        (table_segment.py:239-258)."""
+        (table_segment.py:239-258); the sum is exact (checksum_sum)."""
+        hi, lo = checksum_sum(self.checksum_column())
         row = (
             self.make_select()
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum(self.checksum_column()).alias("cks"),
-            )
+            .agg(F.count(F.lit(1)).alias("cnt"), hi.alias("hi"), lo.alias("lo"))
             .collect()[0]
         )
-        cks = row["cks"]
-        return row["cnt"], (int(cks) if cks is not None else None)
+        return row["cnt"], checksum_value(row["hi"], row["lo"])
 
     def query_key_range(self, normalized: bool = False) -> Tuple[Tuple[Any, ...], Tuple[Any, ...]]:
         """min/max per key column (table_segment.py:260-275).

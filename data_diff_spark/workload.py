@@ -20,10 +20,12 @@ from typing import Callable, Dict, Optional, Tuple
 
 logger = logging.getLogger(__name__)
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_diff_spark import diff_tables, table_segment
+from data_diff_spark.constants import CHECKSUM_SUM_LO_BITS
+from data_diff_spark.normalize import checksum_sum
 from data_diff_spark.sources.connect import normalize_event_ts
 from data_diff_spark.operators import joindiff as jd
 from data_diff_spark.operators import hashdiff as hd
@@ -816,6 +818,14 @@ where a.o_orderkey is null or {differs}
 """
 
 
+def checksum_digits(cks: Column) -> Column:
+    """Exact sum of a long checksum column, as the decimal digits the
+    DuckDB oracles print (NULL over no rows): checksum_sum's (hi, lo)
+    pair recombined in decimal(38,0) on the one aggregate row."""
+    hi, lo = checksum_sum(cks)
+    return (hi.cast("decimal(38,0)") * F.lit(1 << CHECKSUM_SUM_LO_BITS) + lo).cast("string")
+
+
 def q_checksum_orders_keyrange(spark, sf_dir):
     """Segment checksum under a key-range restriction (reference
     make_select key bounds, table_segment.py:158-179): [1000, 9000)."""
@@ -825,7 +835,7 @@ def q_checksum_orders_keyrange(spark, sf_dir):
                       min_key=(1000,), max_key=(9000,))
     return t.make_select().agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum(t.checksum_column()).cast("string").alias("cks"),
+        checksum_digits(t.checksum_column()).alias("cks"),
     )
 
 
@@ -839,7 +849,7 @@ def q_checksum_orders(spark, sf_dir):
     t = table_segment(spark.table("orders"), ["o_orderkey"], extra_columns=ORDERS_COLS[1:])
     agg = t.make_select().agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum(t.checksum_column()).cast("string").alias("cks"),
+        checksum_digits(t.checksum_column()).alias("cks"),
     )
     return agg
 
@@ -3457,7 +3467,7 @@ def q_apply_diff_roundtrip(spark, sf_dir):
     seg = table_segment(applied, ["o_orderkey"], extra_columns=ORDERS_COLS[1:])
     return seg.make_select().agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum(seg.checksum_column()).cast("string").alias("cks"),
+        checksum_digits(seg.checksum_column()).alias("cks"),
     )
 
 
@@ -4250,7 +4260,7 @@ def q_export_roundtrip_checksums(spark, sf_dir):
             "|", *[F.coalesce(F.col(c), F.lit(NULL_LITERAL)) for c in ORDERS_COLS])
         return df.agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.sum(md5_as_int(fp)).cast("string").alias("cks"),
+            checksum_digits(md5_as_int(fp)).alias("cks"),
         )
 
     back_a = read_arrow_shards(spark, a_dir).select(*ORDERS_COLS)

@@ -539,3 +539,68 @@ def test_digest_kernel_shape_and_fine_level_branches(spark, monkeypatch):
     assert d.count() == 200000
     assert [by for by, _ in calls] == levels
     assert len(d._ddspark_persisted) == 3
+
+
+def test_checksum_sums_exact_past_long_overflow(spark):
+    """2**17 copies of one row whose checksum c is >= 2**46 sum to >= 2**63:
+    a single long sum overflows (and raises under ANSI), the two-halves sum
+    does not. Side B adds one differing row, the only row emitted."""
+    from tests.test_checksum import str_to_checksum as checksum
+
+    s = next(f"overflow-{i}" for i in range(1000) if checksum(f"overflow-{i}") >= 1 << 46)
+    n = 1 << 17
+    assert n * checksum(s) >= 1 << 63
+    a = spark.range(n).select(F.lit(s).alias("s"))
+    b = a.unionAll(spark.createDataFrame([("extra",)], "s string"))
+    t1, t2 = table_segment(a, ["s"]), table_segment(b, ["s"])
+    assert t1.count_and_checksum() == (n, n * checksum(s))
+    d = hash_diff(t1, t2)
+    assert _sorted_rows(d) == [("+", "extra")]
+    for h in d._ddspark_persisted:
+        h.unpersist(True)
+
+
+def test_hashdiff_cache_and_digests_hold_no_decimal(spark, monkeypatch):
+    """hash_diff caches (__cks__ long, __knorm0__ ...) and no key hash, and
+    no plan node of its cached relations or digest aggregates carries a
+    decimal: one 8-byte checksum per row, summed as longs."""
+    from pyspark.sql import types as T
+
+    from data_diff_spark.operators import hashdiff as H
+
+    digests = []
+    real = H._side_digests
+
+    def spy(a, b, by):
+        out = real(a, b, by)
+        digests.append(out)
+        return out
+
+    def plan_types(df):
+        types, todo = set(), [df._jdf.queryExecution().optimizedPlan()]
+        while todo:
+            node = todo.pop()
+            exprs = [node.expressions().apply(i) for i in range(node.expressions().size())]
+            exprs += [node.output().apply(i) for i in range(node.output().size())]
+            while exprs:
+                e = exprs.pop()
+                types.add(e.dataType().simpleString())
+                exprs.extend(e.children().apply(i) for i in range(e.children().size()))
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+        return types
+
+    monkeypatch.setattr(H, "_side_digests", spy)
+    a = spark.range(0, 2000).selectExpr("id", "cast(id * 3 as string) as data")
+    b = spark.range(0, 2000).selectExpr("id", "cast(id * 3 + cast(id = 7 as int) as string) as data")
+    d = hash_diff(table_segment(a, ["id"]), table_segment(b, ["id"]))
+    assert _sorted_rows(d) == [("+", 7, "22"), ("-", 7, "21")]
+    cached = d._ddspark_persisted[:2]
+    for c in cached:
+        assert c.columns == [H._CKS, H._knorm(0)]
+        assert c.schema[H._CKS].dataType == T.LongType()
+    assert len(digests) == 2  # coarse level and per key
+    for df in cached + digests:
+        assert not [t for t in plan_types(df) if t.startswith("decimal")], df.columns
+    for h in d._ddspark_persisted:
+        h.unpersist(True)

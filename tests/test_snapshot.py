@@ -103,3 +103,28 @@ def test_zorder_write_files_cover_disjoint_ranges(spark, sf_dir):
         assert hi1 <= lo2  # disjoint slices of the curve
     # and the rows themselves round-trip
     assert spark.read.parquet(out).count() == ev.count()
+
+
+def test_snapshot_decimal_checksum_still_diffs(spark, tmp_path):
+    """Snapshots written before the checksum became a long stored __row_cks
+    as decimal(38,0); diffed against the live table they still mark only
+    the changed key. New snapshots write a bigint."""
+    from pyspark.sql import types as T
+
+    old = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "id long, s string"
+    )
+    new = spark.createDataFrame(
+        [(1, "a"), (2, "B"), (3, "c")], "id long, s string"
+    )
+    frame = SN.snapshot_frame(table_segment(old, ["id"]))
+    assert frame.schema[SN.CKS_COL].dataType == T.LongType()
+    meta = frame.schema[SN.CKS_COL].metadata
+    path = str(tmp_path / "snap_decimal")
+    frame.select(
+        "id", F.col(SN.CKS_COL).cast("decimal(38,0)").alias(SN.CKS_COL, metadata=meta)
+    ).write.parquet(path)
+    snap = SN.load_snapshot(spark, path)
+    assert snap.schema[SN.CKS_COL].dataType == T.DecimalType(38, 0)
+    rows = SN.diff_against_snapshot(table_segment(new, ["id"]), snap).collect()
+    assert [(r["id"], r["sign"]) for r in rows] == [(2, "!")]
