@@ -137,8 +137,8 @@ def diff_tables(
         table1 = table1.with_(df=joindiff.check_null_keys(table1, skip=True))
         table2 = table2.with_(df=joindiff.check_null_keys(table2, skip=True))
     if validate_unique_key:
-        joindiff.check_duplicate_keys(table1)
-        joindiff.check_duplicate_keys(table2)
+        joindiff.check_duplicate_keys(table1, "A")
+        joindiff.check_duplicate_keys(table2, "B")
 
     if algorithm in (Algorithm.AUTO, Algorithm.JOINDIFF):
         df = joindiff.join_diff(table1, table2, null_safe_keys=null_safe_keys)

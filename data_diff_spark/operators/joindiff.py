@@ -184,16 +184,20 @@ def join_diff(
 # ---- guard / stats / sampling operators (reference §2.1) -----------------
 
 
-def check_duplicate_keys(t: TableSegment) -> None:
-    """Raise if any PK occurs more than once (joindiff_tables.py:228-248)."""
+def check_duplicate_keys(t: TableSegment, side: str = "") -> None:
+    """Raise if any PK occurs more than once (joindiff_tables.py:228-248),
+    naming ``side`` ('A' or 'B') and up to 5 repeated keys. One action."""
     dup = (
         t.make_select()
         .groupBy(*t.key_columns)
         .count()
         .filter(F.col("count") > 1)
+        .limit(5)
+        .collect()
     )
-    if not dup.isEmpty():
-        raise ValueError(f"duplicate key values found ({dup.limit(5).collect()})")
+    if dup:
+        where = f" on side {side}" if side else ""
+        raise ValueError(f"duplicate key values found{where} ({dup})")
 
 
 def check_null_keys(t: TableSegment, skip: bool = False) -> Optional[DataFrame]:

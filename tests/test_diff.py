@@ -403,6 +403,19 @@ def test_skip_null_keys_before_unique_validation(spark, algo):
                     validate_unique_key=True, skip_null_keys=True)
 
 
+@pytest.mark.parametrize("algo", ALGOS)
+@pytest.mark.parametrize("dup_side", ["A", "B"])
+def test_duplicate_key_error_names_side(spark, algo, dup_side):
+    schema = "id int, v string"
+    clean = spark.createDataFrame([(1, "a"), (2, "b")], schema)
+    dup = spark.createDataFrame([(1, "a"), (2, "b"), (2, "c")], schema)
+    a, b = (dup, clean) if dup_side == "A" else (clean, dup)
+    with pytest.raises(ValueError, match=rf"duplicate key values found on side {dup_side} "
+                                         r"\(\[Row\(id=2, count=2\)\]\)"):
+        diff_tables(table_segment(a, ["id"]), table_segment(b, ["id"]), algorithm=algo,
+                    validate_unique_key=True)
+
+
 def test_apply_diff_roundtrip_both_algorithms(spark, sf_dir):
     """apply_diff(A, diff(A, B)) == B, for joindiff and hashdiff output."""
     from data_diff_spark import diff_tables, table_segment
@@ -604,3 +617,32 @@ def test_hashdiff_cache_and_digests_hold_no_decimal(spark, monkeypatch):
         assert not [t for t in plan_types(df) if t.startswith("decimal")], df.columns
     for h in d._ddspark_persisted:
         h.unpersist(True)
+
+
+def test_canonical_strings_by_cast_up_to_scale_6(spark):
+    """Decimals at scale <= 6, doubles and dates reach hash_diff's cached
+    relations and count_and_checksum's aggregate as plain casts: no
+    format_number, no date_format. A decimal(38,10) column still renders
+    through format_number, so both normalize_number branches run here."""
+    from data_diff_spark.normalize import checksum_sum
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    a = spark.range(0, 400).selectExpr(
+        "id", "cast(id / 3 as decimal(12,2)) as price", "id / 7D as ratio",
+        "date_add(date'2020-01-01', cast(id as int)) as day",
+        "cast(id / 9 as decimal(38,10)) as wide")
+    b = a.withColumn("price", F.when(F.col("id") == 7, F.lit(1).cast("decimal(12,2)"))
+                     .otherwise(F.col("price")))
+    for cols, wide in ((["price", "ratio", "day"], False), (["price", "ratio", "day", "wide"], True)):
+        t1, t2 = (table_segment(x, ["id"], extra_columns=cols) for x in (a, b))
+        d = hash_diff(t1, t2)
+        assert sorted(r[1] for r in d.collect()) == [7, 7]
+        agg = t1.make_select().agg(*checksum_sum(t1.checksum_column()))  # count_and_checksum's
+        assert t1.count_and_checksum()[0] == 400
+        for df in d._ddspark_persisted[:2] + [agg]:
+            assert "date_format(" not in plan(df)
+            assert ("format_number(" in plan(df)) == wide
+        for h in d._ddspark_persisted:
+            h.unpersist(True)
