@@ -8,9 +8,10 @@ round-trip to a remote database is expensive. In Spark a single shuffle
 replaces the whole recursion tree (SURVEY.md §4.3):
 
   1. per row: checksum = md5_as_int(fingerprint(normalized cols)), one
-     8-byte long; only it and the normalized key strings are cached, and
-     bucket = pmod(xxhash64(normalized keys), n_buckets) is recomputed
-     from those strings at each level
+     8-byte long; only it and the keys are cached, and
+     bucket = pmod(xxhash64(keys), n_buckets) is recomputed from them at
+     each level. A key pair of one exact type on both sides (_raw_keys) is
+     cached raw; any other pair as its normalized string
   2. both sides: one groupBy(bucket) over the side-tagged union, giving
      each side's (count, sum(checksum)) -- the sum exact as two long
      halves (normalize.checksum_sum), map-side combined partial
@@ -36,6 +37,7 @@ from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_diff_spark.normalize import (
     checksum_sum,
@@ -60,48 +62,75 @@ def _knorm(i: int) -> str:
     return f"__knorm{i}__"
 
 
-def _key_norm(t: TableSegment, cols: List[str]) -> List[Column]:
-    """Normalized key strings (NULL as '<null>'). Both the bucket hash and the
-    phase-2 grouping use this one canonical form, so the sides align by key
-    VALUE even when key columns differ in name, physical type or kind
-    override (the reference aligns segments by key value,
-    diff_tables.py:377-391)."""
+# key types whose raw values are equal exactly when their canonical strings
+# are (floats are not: their canonical string rounds to 6 digits)
+_RAW_KEY_TYPES = (T.IntegralType, T.DecimalType, T.StringType, T.DateType, T.TimestampType,
+                  T.TimestampNTZType, T.BooleanType, T.BinaryType)
+
+
+def _raw_keys(t1: TableSegment, t2: TableSegment) -> List[bool]:
+    """Per key column pair: True when both sides hold it in the same
+    _RAW_KEY_TYPES type with no precision or kind override, so the raw
+    values can be hashed, grouped and joined as they are. A raw key only
+    separates what the canonical strings merge (a NULL vs a literal
+    '<null>' string key, two instants of a DST fall-back hour), as
+    join_diff's raw key equality does. Such rows still share a row
+    checksum, so only digests that bucket their keys apart see them."""
+    def plain(t: TableSegment, k: str) -> bool:
+        return t.precision_overrides.get(k) is None and not t.kind_overrides.get(k)
+    return [t1.schema[k1].dataType == t2.schema[k2].dataType and plain(t1, k1) and plain(t2, k2)
+            and isinstance(t1.schema[k1].dataType, _RAW_KEY_TYPES)
+            for k1, k2 in zip(t1.key_columns, t2.key_columns)]
+
+
+def _key_norm(t: TableSegment, cols: List[str], raw: Optional[List[bool]] = None) -> List[Column]:
+    """The key columns as hashed, grouped and joined: the raw column where
+    `raw` says so, else the normalized string (NULL as '<null>'). The
+    string form aligns the sides by key VALUE even when key columns differ
+    in name, physical type or kind override (the reference aligns segments
+    by key value, diff_tables.py:377-391); like the reference, it merges
+    keys whose strings collide, e.g. a NULL int key with a '<null>' string
+    key."""
     nkeys = len(t.key_columns)
+    normd = normalized_columns(t.schema, cols[:nkeys], t.precision_overrides, t.kind_overrides)
     return [
-        F.coalesce(c, F.lit("<null>")) for c in
-        normalized_columns(t.schema, cols[:nkeys], t.precision_overrides, t.kind_overrides)
+        F.col(c) if raw and raw[i] else F.coalesce(n, F.lit("<null>"))
+        for i, (c, n) in enumerate(zip(cols, normd))
     ]
 
 
-def _annotated_keys(t: TableSegment, cols: List[str]) -> DataFrame:
-    """(__cks__, __knorm0__ ... __knormK__) ONLY — no raw columns. This is
-    the frame hash_diff caches: a handful of strings and one long per row
-    no matter how wide the table. Bucket ids at any granularity are hashed
-    from the cached key strings (_bucket_id), so the digest levels are
-    chosen after annotation."""
+def _annotated_keys(t: TableSegment, cols: List[str], raw: Optional[List[bool]] = None) -> DataFrame:
+    """(__cks__, __knorm0__ ... __knormK__) ONLY — no other columns. This
+    is the frame hash_diff caches: the keys (raw or normalized strings,
+    _key_norm) and one long per row no matter how wide the table. Bucket
+    ids at any granularity are hashed from the cached keys (_bucket_id),
+    so the digest levels are chosen after annotation."""
     normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
     return t.make_select().select(
         md5_as_int(row_fingerprint(normd)).alias(_CKS),
-        *[k.alias(_knorm(i)) for i, k in enumerate(_key_norm(t, cols))],
+        *[k.alias(_knorm(i)) for i, k in enumerate(_key_norm(t, cols, raw))],
     )
 
 
 def _emit(t: TableSegment, cols: List[str], out_names: List[str], sign: str,
-          bad_keys: DataFrame) -> DataFrame:
-    """Re-read a side restricted (left-semi on normalized keys) to the PKs
-    phase 2 decided differ; all rows of a differing PK come back, so the
-    emission is the PK's whole row multiset."""
-    key_norm = _key_norm(t, cols)
+          bad_keys: DataFrame, raw: Optional[List[bool]] = None) -> DataFrame:
+    """Re-read a side restricted (null-safe left-semi on the keys in
+    _key_norm's form, as cached) to the PKs phase 2 decided differ; all
+    rows of a differing PK come back, so the emission is the PK's whole
+    row multiset."""
+    key_norm = _key_norm(t, cols, raw)
     annotated = t.make_select().select(
         *[F.col(c).alias(o) for c, o in zip(cols, out_names)],
         *[k.alias(_knorm(i)) for i, k in enumerate(key_norm)],
     )
-    joined = annotated.join(bad_keys, [_knorm(i) for i in range(len(key_norm))], "left_semi")
+    on = [F.col(f"row.{_knorm(i)}").eqNullSafe(F.col(f"bad.{_knorm(i)}"))
+          for i in range(len(key_norm))]
+    joined = annotated.alias("row").join(bad_keys.alias("bad"), on, "left_semi")
     return joined.select(F.lit(sign).alias(SIGN_COL), *out_names)
 
 
 def _bucket_id(keys: List[str], n: int) -> Column:
-    """Bucket of a row among n, from its cached normalized key columns."""
+    """Bucket of a row among n, from its cached key columns."""
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n))
 
 
@@ -201,8 +230,9 @@ def hash_diff(
     n_buckets=None auto-sizes a two-level digest scheme (coarse prune +
     fine isolate); an explicit positive int forces one fixed level.
 
-    Cache shape: only (checksum, normalized keys) per row is persisted —
-    a few strings and one long no matter how wide the table, so the cache
+    Cache shape: only (checksum, keys) per row is persisted — the keys raw
+    where both sides share an exact key type (_raw_keys), else normalized
+    strings — and one long no matter how wide the table, so the cache
     never becomes the table. The rows of the differing PKs are then re-read
     from the sources with a left-semi join: the sources are scanned twice,
     but the second scan is pruned to the differing keys.
@@ -212,9 +242,10 @@ def hash_diff(
     cols1, cols2 = _check_consistent(t1, t2)
     out_names = cols1
     knorm_names = [_knorm(i) for i in range(len(t1.key_columns))]
+    raw = _raw_keys(t1, t2)
 
-    a = _annotated_keys(t1, cols1).persist()
-    b = _annotated_keys(t2, cols2).persist()
+    a = _annotated_keys(t1, cols1, raw).persist()
+    b = _annotated_keys(t2, cols2, raw).persist()
 
     # --- level 1: coarse digests (DEFAULT_N_BUCKETS) ------------------------
     # The reference recursively bisects because remote round-trips dominate;
@@ -272,7 +303,7 @@ def hash_diff(
                 ids_df.unpersist()
 
     # Phase 2 — the diff_sets decision (hashdiff_tables.py:30-84): the same
-    # digest kernel per NORMALIZED key over the surviving narrow rows, one
+    # digest kernel per cached key over the surviving narrow rows, one
     # map-side-combined aggregation. Only the differing KEY SET is consumed
     # downstream, so no window or join back to the rows is needed.
     per_key = _side_digests(a_bad, b_bad, knorm_names).filter(_digests_differ())
@@ -287,8 +318,8 @@ def hash_diff(
         if bad_cached.count() <= _BROADCAST_KEYS_LIMIT
         else bad_cached
     )
-    out = _emit(t1, cols1, out_names, "-", bad_keys).unionAll(
-        _emit(t2, cols2, out_names, "+", bad_keys)
+    out = _emit(t1, cols1, out_names, "-", bad_keys, raw).unionAll(
+        _emit(t2, cols2, out_names, "+", bad_keys, raw)
     )
     # Caller-managed cache lifecycle: the result is lazy, so the persisted
     # frames must outlive it. DiffResult.unpersist() (and the CLI) release

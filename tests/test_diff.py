@@ -646,3 +646,99 @@ def test_canonical_strings_by_cast_up_to_scale_6(spark):
             assert ("format_number(" in plan(df)) == wide
         for h in d._ddspark_persisted:
             h.unpersist(True)
+
+
+def _by_repr(rows):
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+_NULL_KEY_CASES = [
+    # a NULL string key and a literal '<null>' string key are two keys
+    ("string", [(None, "x")], [("<null>", "x")], [("-", None, "x"), ("+", "<null>", "x")]),
+    # an int NULL key on both sides whose row changed: both signs
+    ("int", [(None, "x"), (1, "a")], [(None, "y"), (1, "a")], [("-", None, "x"), ("+", None, "y")]),
+    # an int NULL key on both sides with equal rows: nothing
+    ("int", [(None, "x"), (1, "a")], [(None, "x"), (1, "b")], [("-", 1, "a"), ("+", 1, "b")]),
+    # duplicate NULL keys: every row of the key whose row multiset differs
+    ("int", [(None, "x"), (None, "x")], [(None, "x")],
+     [("-", None, "x"), ("-", None, "x"), ("+", None, "x")]),
+    ("int", [(None, "x"), (None, "x"), (2, "c")], [(None, "x"), (None, "x"), (2, "d")],
+     [("-", 2, "c"), ("+", 2, "d")]),
+]
+
+
+# The NULL vs '<null>' rows have equal row fingerprints, so their digests
+# differ only where the keys fall in different buckets: one bucket for
+# both is pruned on equal digests, as any checksum collision would be.
+@pytest.mark.parametrize("key_type,rows_a,rows_b,expect,n_buckets", [
+    (*c, n) for c in _NULL_KEY_CASES for n in (None, 1) if n is None or c[0] == "int"
+])
+def test_hashdiff_null_keys_match_joindiff(spark, key_type, rows_a, rows_b, expect, n_buckets):
+    """NULL keys give hash_diff's answer on every path: the same rows as
+    join_diff on unique keys, and the key's whole row multiset on
+    duplicate keys (join_diff pairs duplicates instead). A NULL string key
+    is not the literal string '<null>'."""
+    schema = f"k {key_type}, v string"
+    t1 = table_segment(spark.createDataFrame(rows_a, schema), ["k"])
+    t2 = table_segment(spark.createDataFrame(rows_b, schema), ["k"])
+    d = hash_diff(t1, t2, n_buckets=n_buckets)
+    assert _by_repr(d.collect()) == _by_repr(expect)
+    if len({r[0] for r in rows_a}) == len(rows_a) and len({r[0] for r in rows_b}) == len(rows_b):
+        assert _by_repr(join_diff(t1, t2).collect()) == _by_repr(expect)
+    for h in d._ddspark_persisted:
+        h.unpersist(True)
+
+
+@pytest.mark.parametrize("case", ["bigint", "int_vs_bigint", "double", "uuid", "unified_ts"])
+def test_hashdiff_key_form_per_pair(spark, case):
+    """hash_diff caches a key pair raw only when both sides hold it in one
+    exact type with no override; every other pair caches the canonical
+    string. Each form gives join_diff's rows on unique keys, and the raw
+    form's emission (cached relations aside) renders no '<null>'."""
+    from pyspark.sql import types as T
+
+    from data_diff_spark.operators import hashdiff as H
+    from data_diff_spark.unify import unify_precisions
+
+    # nullif: nullable keys, so a string form keeps its '<null>' coalesce
+    base = spark.range(0, 300).selectExpr("nullif(id, -1) as id").selectExpr(
+        "id", "cast(id * 3 as string) as v",
+        "nullif(concat(' ', uuid()), '') as u",
+        "timestamp_seconds(id * 3600) + make_interval(0, 0, 0, 0, 0, 0, 0.25) as ts")
+    base = base.selectExpr("*", "cast(id as int) as id32", "id / 4D as dbl").localCheckpoint()
+    changed = base.withColumn("v", F.when(F.col("id") % 40 == 7, F.lit("new")).otherwise(F.col("v")))
+    changed = changed.filter("id != 11").unionByName(
+        base.filter("id = 0").selectExpr("id + 1000 as id", "v", "concat(u, 'z') as u",
+                                         "ts + make_interval(1) as ts", "id32 + 1000 as id32",
+                                         "dbl + 1000 as dbl"))
+    key_a, key_b, form = {
+        "bigint": ("id", "id", T.LongType()),
+        "int_vs_bigint": ("id32", "id", T.StringType()),
+        "double": ("dbl", "dbl", T.StringType()),
+        "uuid": ("u", "u", T.StringType()),
+        "unified_ts": ("ts", "ts", T.StringType()),
+    }[case]
+    t1 = table_segment(base, [key_a], extra_columns=["v"])
+    t2 = table_segment(changed, [key_b], extra_columns=["v"])
+    if case == "uuid":
+        t1, t2 = (t.with_(kind_overrides={"u": "uuid"}) for t in (t1, t2))
+    if case == "unified_ts":
+        t1, t2 = unify_precisions(t1.with_(precision_overrides={"ts": 3}), t2)
+        assert t2.precision_overrides == {"ts": 3}
+    d = hash_diff(t1, t2)
+    assert d._ddspark_persisted[0].schema[H._knorm(0)].dataType == form
+    got = _by_repr(d.collect())
+    assert got == _by_repr(join_diff(t1, t2).collect())
+    assert len(got) == 2 * 8 + 2
+
+    exprs, todo = [], [d._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "InMemoryRelation":
+            continue
+        exprs += [node.expressions().apply(i).toString() for i in range(node.expressions().size())]
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    assert any("<null>" in e for e in exprs) == (form == T.StringType())
+    for h in d._ddspark_persisted:
+        h.unpersist(True)

@@ -380,3 +380,28 @@ def test_components_local_matches_min_label_reference(spark, edges):
                 lbl[a] = lbl[b] = m
                 changed = True
     assert got == lbl
+
+
+@settings(**COMMON)
+@given(
+    rows_a=st.lists(st.tuples(st.one_of(st.none(), st.integers(0, 30)), VALUES),
+                    max_size=10, unique_by=lambda r: r[0]),
+    rows_b=st.lists(st.tuples(st.one_of(st.none(), st.integers(0, 30)), VALUES),
+                    max_size=10, unique_by=lambda r: r[0]),
+)
+def test_hashdiff_equals_joindiff_on_unique_nullable_keys(spark, rows_a, rows_b):
+    """On unique keys, NULL among them, hash_diff emits exactly join_diff's
+    rows."""
+    from data_diff_spark import table_segment
+    from data_diff_spark.operators.hashdiff import hash_diff
+    from data_diff_spark.operators.joindiff import join_diff
+
+    def seg(rows):
+        return table_segment(_mk(spark, [(i, None if v is None else str(v)) for i, v in rows]), ["id"])
+
+    t1, t2 = seg(rows_a), seg(rows_b)
+    d = hash_diff(t1, t2, n_buckets=8)
+    got = sorted((tuple(r) for r in d.collect()), key=repr)
+    assert got == sorted((tuple(r) for r in join_diff(t1, t2).collect()), key=repr)
+    for h in d._ddspark_persisted:
+        h.unpersist(True)
