@@ -7,11 +7,12 @@ count+md5-checksum SQL query per segment per side per level, because each
 round-trip to a remote database is expensive. In Spark a single shuffle
 replaces the whole recursion tree (SURVEY.md §4.3):
 
-  1. per row: checksum = md5_as_int(fingerprint(normalized cols)), one
-     8-byte long; only it and the keys are cached, and
-     bucket = pmod(xxhash64(keys), n_buckets) is recomputed from them at
-     each level. A key pair of one exact type on both sides (_raw_keys) is
-     cached raw; any other pair as its normalized string
+  1. per row: one 8-byte checksum, the pair's own (_annotated_keys):
+     xxhash64 over each column in the form join_diff compares it -- raw
+     where both sides hold one exact type (_raw_columns), else its
+     normalized string. Only it and the keys (in that same form) are
+     cached, and bucket = pmod(xxhash64(keys), n_buckets) is recomputed
+     from them at each level
   2. both sides: one groupBy(bucket) over the side-tagged union, giving
      each side's (count, sum(checksum)) -- the sum exact as two long
      halves (normalize.checksum_sum), map-side combined partial
@@ -25,10 +26,11 @@ Cost on a cluster: two scans with count/sum partial aggs (the Spark analogue
 of "within an order of magnitude of count(*)", README.md:191) plus work
 proportional to the number of *differing* buckets — not to table size.
 
-The checksum formula is bit-identical to every reference dialect (see
-normalize.py), so step 2's digests can also be computed by a remote
-PostgreSQL/DuckDB/Snowflake via the reference's segment SQL
-(table_segment.py:239-258) for true cross-engine comparisons.
+The cross-engine diff (remote.hash_diff_remote) keeps the reference
+checksum, md5_as_int(fingerprint(normalized cols)), which is bit-identical
+to every reference dialect (see normalize.py), so step 2's digests can
+also be computed by a remote PostgreSQL/DuckDB/Snowflake via the
+reference's segment SQL (table_segment.py:239-258).
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_diff_spark.constants import CHECKSUM_MASK, CHECKSUM_OFFSET
 from data_diff_spark.normalize import (
     checksum_sum,
     md5_as_int,
@@ -62,25 +65,25 @@ def _knorm(i: int) -> str:
     return f"__knorm{i}__"
 
 
-# key types whose raw values are equal exactly when their canonical strings
+# types whose raw values are equal exactly when their canonical strings
 # are (floats are not: their canonical string rounds to 6 digits)
-_RAW_KEY_TYPES = (T.IntegralType, T.DecimalType, T.StringType, T.DateType, T.TimestampType,
-                  T.TimestampNTZType, T.BooleanType, T.BinaryType)
+_RAW_TYPES = (T.IntegralType, T.DecimalType, T.StringType, T.DateType, T.TimestampType,
+              T.TimestampNTZType, T.BooleanType, T.BinaryType)
 
 
-def _raw_keys(t1: TableSegment, t2: TableSegment) -> List[bool]:
-    """Per key column pair: True when both sides hold it in the same
-    _RAW_KEY_TYPES type with no precision or kind override, so the raw
-    values can be hashed, grouped and joined as they are. A raw key only
-    separates what the canonical strings merge (a NULL vs a literal
-    '<null>' string key, two instants of a DST fall-back hour), as
-    join_diff's raw key equality does. Such rows still share a row
-    checksum, so only digests that bucket their keys apart see them."""
-    def plain(t: TableSegment, k: str) -> bool:
-        return t.precision_overrides.get(k) is None and not t.kind_overrides.get(k)
-    return [t1.schema[k1].dataType == t2.schema[k2].dataType and plain(t1, k1) and plain(t2, k2)
-            and isinstance(t1.schema[k1].dataType, _RAW_KEY_TYPES)
-            for k1, k2 in zip(t1.key_columns, t2.key_columns)]
+def _raw_columns(t1: TableSegment, t2: TableSegment,
+                 cols1: List[str], cols2: List[str]) -> List[bool]:
+    """Per compared column pair (the keys first): True when both sides
+    hold it in the same _RAW_TYPES type with no precision or kind
+    override, so its raw values are hashed, grouped and joined as they
+    are, as join_diff compares them. A raw column only separates what the
+    canonical strings merge (a NULL vs a literal '<null>' string, two
+    instants of a DST fall-back hour)."""
+    def plain(t: TableSegment, c: str) -> bool:
+        return t.precision_overrides.get(c) is None and not t.kind_overrides.get(c)
+    return [t1.schema[c1].dataType == t2.schema[c2].dataType and plain(t1, c1) and plain(t2, c2)
+            and isinstance(t1.schema[c1].dataType, _RAW_TYPES)
+            for c1, c2 in zip(cols1, cols2)]
 
 
 def _key_norm(t: TableSegment, cols: List[str], raw: Optional[List[bool]] = None) -> List[Column]:
@@ -104,10 +107,23 @@ def _annotated_keys(t: TableSegment, cols: List[str], raw: Optional[List[bool]] 
     is the frame hash_diff caches: the keys (raw or normalized strings,
     _key_norm) and one long per row no matter how wide the table. Bucket
     ids at any granularity are hashed from the cached keys (_bucket_id),
-    so the digest levels are chosen after annotation."""
+    so the digest levels are chosen after annotation.
+
+    raw=None (the cross-engine diff) keeps the reference checksum,
+    md5_as_int of the row fingerprint. Given one flag per column, the
+    checksum is the pair's own: xxhash64(v1, isnull(v1), v2, ...) over
+    each column raw or as its normalized string, masked to 48 bits and
+    centred like md5_as_int. The NULL flags keep (x, NULL) apart from
+    (NULL, x): xxhash64 skips NULLs."""
     normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
+    if raw is None:
+        cks = md5_as_int(row_fingerprint(normd))
+    else:
+        vals = [F.col(c) if r else n for c, n, r in zip(cols, normd, raw)]
+        cks = (F.xxhash64(*[x for v in vals for x in (v, v.isNull())])
+               .bitwiseAND(F.lit(CHECKSUM_MASK)) - F.lit(CHECKSUM_OFFSET))
     return t.make_select().select(
-        md5_as_int(row_fingerprint(normd)).alias(_CKS),
+        cks.alias(_CKS),
         *[k.alias(_knorm(i)) for i, k in enumerate(_key_norm(t, cols, raw))],
     )
 
@@ -230,10 +246,11 @@ def hash_diff(
     n_buckets=None auto-sizes a two-level digest scheme (coarse prune +
     fine isolate); an explicit positive int forces one fixed level.
 
-    Cache shape: only (checksum, keys) per row is persisted — the keys raw
-    where both sides share an exact key type (_raw_keys), else normalized
-    strings — and one long no matter how wide the table, so the cache
-    never becomes the table. The rows of the differing PKs are then re-read
+    Cache shape: only (checksum, keys) per row is persisted — one long and
+    the keys no matter how wide the table, so the cache never becomes the
+    table. Both take each column in the form join_diff compares it: raw
+    where both sides share an exact type (_raw_columns), else its
+    normalized string. The rows of the differing PKs are then re-read
     from the sources with a left-semi join: the sources are scanned twice,
     but the second scan is pruned to the differing keys.
     """
@@ -242,7 +259,7 @@ def hash_diff(
     cols1, cols2 = _check_consistent(t1, t2)
     out_names = cols1
     knorm_names = [_knorm(i) for i in range(len(t1.key_columns))]
-    raw = _raw_keys(t1, t2)
+    raw = _raw_columns(t1, t2, cols1, cols2)
 
     a = _annotated_keys(t1, cols1, raw).persist()
     b = _annotated_keys(t2, cols2, raw).persist()

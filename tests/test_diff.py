@@ -573,6 +573,32 @@ def test_checksum_sums_exact_past_long_overflow(spark):
         h.unpersist(True)
 
 
+def test_pair_checksum_sums_exact_past_long_overflow(spark):
+    """The same for hash_diff's own row checksum: 2**17 copies per side of
+    a row whose cached __cks__ is >= 2**46 in magnitude, plus one extra
+    row on side B. Only the extra row is emitted, and the stats are exact."""
+    from data_diff_spark.operators import hashdiff as H
+
+    words = spark.createDataFrame([(f"overflow-{i}",) for i in range(64)], "s string")
+    probe = hash_diff(table_segment(words, ["s"]), table_segment(words, ["s"]))
+    cks = sorted(tuple(r) for r in probe._ddspark_persisted[0].select(H._knorm(0), H._CKS).collect())
+    for h in probe._ddspark_persisted:
+        h.unpersist(True)
+    s, c = next((w, c) for w, c in cks if abs(c) >= 1 << 46)
+    n = 1 << 17
+    assert n * abs(c) >= 1 << 63
+    a = spark.range(n).select(F.lit(s).alias("s"))
+    b = spark.range(n).select(F.lit(s).alias("s")).unionAll(
+        spark.createDataFrame([("extra",)], "s string"))
+    r = diff_tables(table_segment(a, ["s"]), table_segment(b, ["s"]), algorithm="hashdiff")
+    assert r.df._ddspark_persisted[0].select(H._CKS).distinct().collect() == [(c,)]
+    assert _sorted_rows(r.df) == [("+", "extra")]
+    assert r.get_stats_dict() == {"rows_A": n, "rows_B": n + 1, "exclusive_A": 0,
+                                  "exclusive_B": 1, "updated": 0, "unchanged": n,
+                                  "total": 1}
+    r.unpersist()
+
+
 def test_hashdiff_cache_and_digests_hold_no_decimal(spark, monkeypatch):
     """hash_diff caches (__cks__ long, __knorm0__ ...) and no key hash, and
     no plan node of its cached relations or digest aggregates carries a
@@ -620,10 +646,11 @@ def test_hashdiff_cache_and_digests_hold_no_decimal(spark, monkeypatch):
 
 
 def test_canonical_strings_by_cast_up_to_scale_6(spark):
-    """Decimals at scale <= 6, doubles and dates reach hash_diff's cached
-    relations and count_and_checksum's aggregate as plain casts: no
-    format_number, no date_format. A decimal(38,10) column still renders
-    through format_number, so both normalize_number branches run here."""
+    """Decimals at scale <= 6, doubles and dates reach count_and_checksum's
+    aggregate as plain casts: no format_number, no date_format. A
+    decimal(38,10) column still renders through format_number there, so
+    both normalize_number branches run here. hash_diff's cached relations
+    hash same-typed decimals and dates raw: neither recipe, wide or not."""
     from data_diff_spark.normalize import checksum_sum
 
     def plan(df):
@@ -641,9 +668,10 @@ def test_canonical_strings_by_cast_up_to_scale_6(spark):
         assert sorted(r[1] for r in d.collect()) == [7, 7]
         agg = t1.make_select().agg(*checksum_sum(t1.checksum_column()))  # count_and_checksum's
         assert t1.count_and_checksum()[0] == 400
-        for df in d._ddspark_persisted[:2] + [agg]:
-            assert "date_format(" not in plan(df)
-            assert ("format_number(" in plan(df)) == wide
+        for df in d._ddspark_persisted[:2]:
+            assert "date_format(" not in plan(df) and "format_number(" not in plan(df)
+        assert "date_format(" not in plan(agg)
+        assert ("format_number(" in plan(agg)) == wide
         for h in d._ddspark_persisted:
             h.unpersist(True)
 
@@ -667,12 +695,14 @@ _NULL_KEY_CASES = [
 ]
 
 
-# The NULL vs '<null>' rows have equal row fingerprints, so their digests
-# differ only where the keys fall in different buckets: one bucket for
-# both is pruned on equal digests, as any checksum collision would be.
+# Every case at the default bucketing and at n_buckets=1, where all keys
+# share one bucket: the NULL vs '<null>' string keys enter the row checksum
+# raw, with a NULL flag, so even one bucket for both sees them differ. (The
+# string case's n_buckets=1 run comes last so the other ids keep their
+# indices.)
 @pytest.mark.parametrize("key_type,rows_a,rows_b,expect,n_buckets", [
     (*c, n) for c in _NULL_KEY_CASES for n in (None, 1) if n is None or c[0] == "int"
-])
+] + [(*_NULL_KEY_CASES[0], 1)])
 def test_hashdiff_null_keys_match_joindiff(spark, key_type, rows_a, rows_b, expect, n_buckets):
     """NULL keys give hash_diff's answer on every path: the same rows as
     join_diff on unique keys, and the key's whole row multiset on
@@ -685,6 +715,26 @@ def test_hashdiff_null_keys_match_joindiff(spark, key_type, rows_a, rows_b, expe
     assert _by_repr(d.collect()) == _by_repr(expect)
     if len({r[0] for r in rows_a}) == len(rows_a) and len({r[0] for r in rows_b}) == len(rows_b):
         assert _by_repr(join_diff(t1, t2).collect()) == _by_repr(expect)
+    for h in d._ddspark_persisted:
+        h.unpersist(True)
+
+
+@pytest.mark.parametrize("n_buckets", [None, 1])
+@pytest.mark.parametrize("rows_a,rows_b", [
+    # a NULL value and a literal '<null>' value: one reference fingerprint
+    ([(1, None, "x"), (2, "a", "b")], [(1, "<null>", "x"), (2, "a", "b")]),
+    # NULL moves to the other column: xxhash64 alone skips NULLs
+    ([(1, "x", None), (2, "a", "b")], [(1, None, "x"), (2, "a", "b")]),
+], ids=["null_vs_literal", "null_swapped"])
+def test_hashdiff_null_values_match_joindiff(spark, rows_a, rows_b, n_buckets):
+    """A NULL value is not the string '<null>', and (x, NULL) is not
+    (NULL, x): hash_diff emits join_diff's rows at any bucketing."""
+    schema = "k int, v string, w string"
+    t1, t2 = (table_segment(spark.createDataFrame(r, schema), ["k"]) for r in (rows_a, rows_b))
+    d = hash_diff(t1, t2, n_buckets=n_buckets)
+    got = _by_repr(d.collect())
+    assert got == _by_repr(join_diff(t1, t2).collect())
+    assert [r[:2] for r in got] == [("+", 1), ("-", 1)]
     for h in d._ddspark_persisted:
         h.unpersist(True)
 
@@ -742,3 +792,92 @@ def test_hashdiff_key_form_per_pair(spark, case):
     assert any("<null>" in e for e in exprs) == (form == T.StringType())
     for h in d._ddspark_persisted:
         h.unpersist(True)
+
+
+def _hash_inputs(df):
+    """(node name, type) of each xxhash64 argument in df's cached plan."""
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "InMemoryRelation":
+            todo.append(node.cachedPlan())
+            continue
+        exprs = [node.expressions().apply(i) for i in range(node.expressions().size())]
+        while exprs:
+            e = exprs.pop()
+            kids = [e.children().apply(i) for i in range(e.children().size())]
+            if e.prettyName() == "xxhash64":
+                return [(k.nodeName(), k.dataType().simpleString()) for k in kids]
+            exprs.extend(kids)
+        todo.extend(node.children().apply(i) for i in range(node.children().size()))
+    return []
+
+
+@pytest.mark.parametrize("case", ["exact", "double", "int_vs_bigint", "uuid"])
+def test_hashdiff_checksum_form_per_pair(spark, case):
+    """hash_diff's row checksum is xxhash64 over each column raw when both
+    sides hold it in one exact type with no override, else over its
+    canonical string: no md5, no fingerprint, no rendering recipe for the
+    exact columns. Each form gives join_diff's rows on unique keys."""
+    exact = ["s", "price", "day", "ts", "flag", "bin"]
+    base = spark.range(0, 300).selectExpr(
+        "id", "cast(id * 3 as string) as s", "cast(id / 3 as decimal(12,2)) as price",
+        "date_add(date'2020-01-01', cast(id as int)) as day", "timestamp_seconds(id * 3600) as ts",
+        "id % 2 = 0 as flag", "cast(cast(id as string) as binary) as bin", "id / 4D as dbl",
+        "cast(id as int) as id32", "concat(' ', uuid()) as u").localCheckpoint()
+    extra = {"exact": None, "double": "dbl", "int_vs_bigint": "id32", "uuid": "u"}[case]
+    changed = base.withColumn("s", F.when(F.col("id") % 40 == 7, F.lit("new")).otherwise(F.col("s")))
+    if extra:
+        changed = changed.withColumn(extra, {
+            "dbl": F.when(F.col("id") == 11, F.col("dbl") + 1).otherwise(F.col("dbl")),
+            "id32": F.col("id32").cast("bigint") + (F.col("id") == 11).cast("bigint"),
+            # a trimmed uuid is the same uuid: only id 11 differs
+            "u": F.when(F.col("id") == 11, F.concat("u", F.lit("z")))
+                  .otherwise(F.when(F.col("id") == 12, F.trim("u")).otherwise(F.col("u"))),
+        }[extra])
+    cols = exact + ([extra] if extra else [])
+    t1, t2 = (table_segment(x, ["id"], extra_columns=cols) for x in (base, changed.localCheckpoint()))
+    if case == "uuid":
+        t1, t2 = (t.with_(kind_overrides={"u": "uuid"}) for t in (t1, t2))
+    d = hash_diff(t1, t2)
+    got = _by_repr(d.collect())
+    assert got == _by_repr(join_diff(t1, t2).collect())
+    assert len(got) == 2 * 8 + (2 if extra else 0)
+    for df in d._ddspark_persisted[:2]:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "xxhash64(" in plan
+        assert not [f for f in ("md5(", "concat_ws(", "format_number(", "date_format(") if f in plan]
+        values = _hash_inputs(df)[::2]  # each column's value, then its NULL flag
+        assert len(values) == 1 + len(cols)
+        for c, (node, typ) in zip(["id"] + cols, values):
+            raw = ("AttributeReference", base.schema[c].dataType.simpleString())
+            if c == extra:
+                assert node != raw[0] and typ == "string", (c, node, typ)
+            else:
+                assert (node, typ) == raw, c
+    for h in d._ddspark_persisted:
+        h.unpersist(True)
+
+
+def test_hashdiff_remote_keeps_reference_checksum(spark):
+    """The cross-engine diff's Spark side keeps the reference checksum,
+    md5 over the row fingerprint, which the remote engine computes too.
+    Its rows are join_diff's on unique keys."""
+    import duckdb
+
+    from data_diff_spark.operators.remote import DuckDBSide, hash_diff_remote
+
+    rows = [(i, None if i % 5 == 0 else f"v{i}") for i in range(40)]
+    con = duckdb.connect()
+    con.execute("create table t (id bigint, v varchar)")
+    con.executemany("insert into t values (?, ?)", [(i, "w" if i == 3 else v) for i, v in rows if i != 7])
+    t1 = table_segment(spark.createDataFrame(rows, "id bigint, v string"), ["id"])
+    t2 = table_segment(spark.createDataFrame(con.execute("select * from t").fetch_arrow_table()), ["id"])
+    d = hash_diff_remote(t1, DuckDBSide("t", ["id"], ["id", "v"], con=con), n_buckets=8)
+    assert "md5(" in d._ddspark_persisted[0]._jdf.queryExecution().optimizedPlan().toString()
+    got = _by_repr(d.collect())
+    assert got == _by_repr(join_diff(t1, t2).collect())
+    assert [r[:2] for r in got] == [("+", 3), ("-", 3), ("-", 7)]
+    for h in d._ddspark_persisted:
+        h.unpersist(True)
+    con.close()

@@ -405,3 +405,28 @@ def test_hashdiff_equals_joindiff_on_unique_nullable_keys(spark, rows_a, rows_b)
     assert got == sorted((tuple(r) for r in join_diff(t1, t2).collect()), key=repr)
     for h in d._ddspark_persisted:
         h.unpersist(True)
+
+
+NULL_LIKE = st.one_of(st.none(), st.sampled_from(["<null>", "", "|", "a", "a|", "|a"]))
+NULL_LIKE_ROWS = st.lists(st.tuples(st.integers(0, 8), NULL_LIKE, NULL_LIKE),
+                          max_size=8, unique_by=lambda r: r[0])
+
+
+@settings(**COMMON)
+@given(rows_a=NULL_LIKE_ROWS, rows_b=NULL_LIKE_ROWS)
+def test_hashdiff_equals_joindiff_on_null_like_strings(spark, rows_a, rows_b):
+    """Strings that the reference fingerprint renders alike (NULL and
+    '<null>', values that move across the '|' separator) are diffed as
+    join_diff diffs them, in one bucket and at the default bucketing."""
+    from data_diff_spark import table_segment
+    from data_diff_spark.operators.hashdiff import hash_diff
+    from data_diff_spark.operators.joindiff import join_diff
+
+    schema = "id int, v string, w string"
+    t1, t2 = (table_segment(spark.createDataFrame(r, schema), ["id"]) for r in (rows_a, rows_b))
+    want = sorted((tuple(r) for r in join_diff(t1, t2).collect()), key=repr)
+    for n_buckets in (1, None):
+        d = hash_diff(t1, t2, n_buckets=n_buckets)
+        assert sorted((tuple(r) for r in d.collect()), key=repr) == want
+        for h in d._ddspark_persisted:
+            h.unpersist(True)
