@@ -115,8 +115,11 @@ def diff_tables(
     AUTO resolves to joindiff: inside one Spark engine the join is always
     available and AQE-optimized (the reference picks joindiff only when both
     sides share a database, __init__.py:152-155 — here they always do).
-    hashdiff remains the right choice when checksums must also be verifiable
-    against an external reference-dialect database.
+    hashdiff of two Spark segments hashes each column in the form joindiff
+    compares it, so its checksums are not the reference's; the reference
+    checksum, verifiable against a reference-dialect database, comes from
+    operators.remote.hash_diff_remote (the second side in that database)
+    and TableSegment.count_and_checksum.
 
     n_buckets=None (the default) lets hashdiff auto-size its two-level
     digest scheme (coarse prune + fine isolate — measured 80s→36s at 6M

@@ -26,16 +26,20 @@ Cost on a cluster: two scans with count/sum partial aggs (the Spark analogue
 of "within an order of magnitude of count(*)", README.md:191) plus work
 proportional to the number of *differing* buckets — not to table size.
 
-The cross-engine diff (remote.hash_diff_remote) keeps the reference
-checksum, md5_as_int(fingerprint(normalized cols)), which is bit-identical
-to every reference dialect (see normalize.py), so step 2's digests can
-also be computed by a remote PostgreSQL/DuckDB/Snowflake via the
-reference's segment SQL (table_segment.py:239-258).
+The second side is a Spark segment or a remote engine (remote.RemoteSide,
+via remote.hash_diff_remote), and one level policy runs for both: coarse at
+DEFAULT_N_BUCKETS, then, when auto-sized, a fine level nested inside it,
+then phase 2. A remote pair keeps the reference's checksum,
+md5_as_int(fingerprint(normalized cols)), bit-identical to every reference
+dialect (see normalize.py), and buckets rows by the md5 prefix of the key
+fingerprint (RemoteDialect.bucket_sql), so the remote computes its own
+digests with the reference's segment SQL (table_segment.py:239-258) and
+ships only digests and the rows of the dirty buckets.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -44,6 +48,7 @@ from pyspark.sql import types as T
 from data_diff_spark.constants import CHECKSUM_MASK, CHECKSUM_OFFSET
 from data_diff_spark.normalize import (
     checksum_sum,
+    checksum_value,
     md5_as_int,
     normalized_columns,
     row_fingerprint,
@@ -56,19 +61,23 @@ _AUTO_ROWS_PER_BUCKET = 16  # target bucket size so a dirty row dirties ~1 bucke
 _ISIN_LIMIT = 8192  # above this, filter dirty buckets with a join, not a literal list
 _BROADCAST_KEYS_LIMIT = 2_000_000  # differing-PK sets up to this broadcast for the narrow re-read
 _FINE_LEVEL_MIN_ROWS = 2_000_000  # below this many dirty-coarse rows, go straight to phase 2
+_REMOTE_FINE_MIN_ROWS = 16384  # a remote pair's: the reference's row-download threshold
 
 _CKS = "__cks__"
 _BUCKET = "__bucket__"
+_KHASH = "__khash__"
 
 
 def _knorm(i: int) -> str:
     return f"__knorm{i}__"
 
 
-# types whose raw values are equal exactly when their canonical strings
-# are (floats are not: their canonical string rounds to 6 digits)
-_RAW_TYPES = (T.IntegralType, T.DecimalType, T.StringType, T.DateType, T.TimestampType,
-              T.TimestampNTZType, T.BooleanType, T.BinaryType)
+# types whose raw values join_diff compares as they are. Floats too: their
+# canonical string rounds to 6 digits, but join_diff compares same-typed
+# floats raw, and xxhash64, groupBy and the null-safe semi-join all treat
+# 0.0 as -0.0 and every NaN as one value, as eqNullSafe does
+_RAW_TYPES = (T.IntegralType, T.DecimalType, T.FloatType, T.DoubleType, T.StringType,
+              T.DateType, T.TimestampType, T.TimestampNTZType, T.BooleanType, T.BinaryType)
 
 
 def _raw_columns(t1: TableSegment, t2: TableSegment,
@@ -106,15 +115,17 @@ def _annotated_keys(t: TableSegment, cols: List[str], raw: Optional[List[bool]] 
     """(__cks__, __knorm0__ ... __knormK__) ONLY — no other columns. This
     is the frame hash_diff caches: the keys (raw or normalized strings,
     _key_norm) and one long per row no matter how wide the table. Bucket
-    ids at any granularity are hashed from the cached keys (_bucket_id),
-    so the digest levels are chosen after annotation.
+    ids at any granularity come from the pair's key hash (hash_diff), so
+    the digest levels are chosen after annotation.
 
-    raw=None (the cross-engine diff) keeps the reference checksum,
-    md5_as_int of the row fingerprint. Given one flag per column, the
-    checksum is the pair's own: xxhash64(v1, isnull(v1), v2, ...) over
-    each column raw or as its normalized string, masked to 48 bits and
-    centred like md5_as_int. The NULL flags keep (x, NULL) apart from
-    (NULL, x): xxhash64 skips NULLs."""
+    raw=None (a remote pair) keeps the reference checksum, md5_as_int of
+    the row fingerprint, and adds __khash__: the remote's key hash, the
+    first 8 md5 hex digits of the '|'-joined key strings as a long
+    (RemoteDialect.bucket_sql before its modulo), computed once per row.
+    Given one flag per column, the checksum is the pair's own:
+    xxhash64(v1, isnull(v1), v2, ...) over each column raw or as its
+    normalized string, masked to 48 bits and centred like md5_as_int. The
+    NULL flags keep (x, NULL) apart from (NULL, x): xxhash64 skips NULLs."""
     normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
     if raw is None:
         cks = md5_as_int(row_fingerprint(normd))
@@ -122,36 +133,42 @@ def _annotated_keys(t: TableSegment, cols: List[str], raw: Optional[List[bool]] 
         vals = [F.col(c) if r else n for c, n, r in zip(cols, normd, raw)]
         cks = (F.xxhash64(*[x for v in vals for x in (v, v.isNull())])
                .bitwiseAND(F.lit(CHECKSUM_MASK)) - F.lit(CHECKSUM_OFFSET))
-    return t.make_select().select(
-        cks.alias(_CKS),
-        *[k.alias(_knorm(i)) for i, k in enumerate(_key_norm(t, cols, raw))],
-    )
+    keys = [_knorm(i) for i in range(len(t.key_columns))]
+    out = t.make_select().select(
+        cks.alias(_CKS), *[k.alias(n) for k, n in zip(_key_norm(t, cols, raw), keys)])
+    if raw is None:
+        fp = F.concat_ws("|", *keys)
+        out = out.withColumn(_KHASH, F.conv(F.substring(F.md5(fp), 1, 8), 16, 10).cast("long"))
+    return out
 
 
 def _emit(t: TableSegment, cols: List[str], out_names: List[str], sign: str,
           bad_keys: DataFrame, raw: Optional[List[bool]] = None) -> DataFrame:
-    """Re-read a side restricted (null-safe left-semi on the keys in
-    _key_norm's form, as cached) to the PKs phase 2 decided differ; all
+    """Re-read a side restricted to the PKs phase 2 decided differ; all
     rows of a differing PK come back, so the emission is the PK's whole
     row multiset."""
-    key_norm = _key_norm(t, cols, raw)
     annotated = t.make_select().select(
         *[F.col(c).alias(o) for c, o in zip(cols, out_names)],
-        *[k.alias(_knorm(i)) for i, k in enumerate(key_norm)],
+        *[k.alias(_knorm(i)) for i, k in enumerate(_key_norm(t, cols, raw))],
     )
-    on = [F.col(f"row.{_knorm(i)}").eqNullSafe(F.col(f"bad.{_knorm(i)}"))
-          for i in range(len(key_norm))]
-    joined = annotated.alias("row").join(bad_keys.alias("bad"), on, "left_semi")
+    return _emit_rows(annotated, out_names, sign, bad_keys)
+
+
+def _emit_rows(rows: DataFrame, out_names: List[str], sign: str, bad_keys: DataFrame) -> DataFrame:
+    """`rows` (out_names + the keys in _key_norm's form, as cached)
+    restricted to the differing PKs by a null-safe left-semi join."""
+    on = [F.col(f"row.{k}").eqNullSafe(F.col(f"bad.{k}")) for k in bad_keys.columns]
+    joined = rows.alias("row").join(bad_keys.alias("bad"), on, "left_semi")
     return joined.select(F.lit(sign).alias(SIGN_COL), *out_names)
 
 
-def _bucket_id(keys: List[str], n: int) -> Column:
-    """Bucket of a row among n, from its cached key columns."""
-    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n))
+def _bucket_id(kh: Column, n: int) -> Column:
+    """Bucket of a row among n, from its key hash."""
+    return F.pmod(kh, F.lit(n))
 
 
-def _bucketed(df: DataFrame, keys: List[str], n: int) -> DataFrame:
-    return df.withColumn(_BUCKET, _bucket_id(keys, n))
+def _bucketed(df: DataFrame, kh: Column, n: int) -> DataFrame:
+    return df.withColumn(_BUCKET, _bucket_id(kh, n))
 
 
 def _side_digests(a: DataFrame, b: DataFrame, by: List[str]) -> DataFrame:
@@ -184,19 +201,35 @@ def _digests_differ() -> Column:
             | ~F.col("sa_lo").eqNullSafe(F.col("sb_lo")))
 
 
-def _paired_digest(a: DataFrame, b: DataFrame, keys: List[str], n_buckets: int):
-    """Coarse level: the bucket digests of BOTH sides in ONE job, collected
-    to the driver (<= n_buckets rows) and compared there — no digest join.
-    The collect also yields the exact row counts that size the fine level.
+def _paired_digest(a: DataFrame, b, kh: Column, n: int,
+                   within: Optional[Tuple[int, List[int]]] = None):
+    """One level's bucket digests of both sides, collected to the driver
+    (<= n rows a side) and compared there — no digest join. The collect
+    also yields the exact row counts that size the fine level.
+
+    b is side B's cached frame, digested in the SAME job as `a` (one
+    _side_digests over the union), or a remote.RemoteSide, whose digests
+    come from one remote query restricted, as `a` already is, to the
+    buckets `within` = (coarser n, ids) names.
 
     Returns (dirty bucket ids, rows in dirty buckets on both sides,
-    rows_total_a, rows_total_b)."""
-    a, b = _bucketed(a, keys, n_buckets), _bucketed(b, keys, n_buckets)
-    rows = _side_digests(a, b, [_BUCKET]).collect()
-    bad = [r for r in rows
-           if (r["ca"], r["sa_hi"], r["sa_lo"]) != (r["cb"], r["sb_hi"], r["sb_lo"])]
-    return ([r[_BUCKET] for r in bad], sum(r["ca"] + r["cb"] for r in bad),
-            sum(r["ca"] for r in rows), sum(r["cb"] for r in rows))
+    rows_a, rows_b)."""
+    a = _bucketed(a, kh, n)
+    if isinstance(b, DataFrame):
+        rows = _side_digests(a, _bucketed(b, kh, n), [_BUCKET]).collect()
+        sides = {r[_BUCKET]: ((r["ca"], r["sa_hi"], r["sa_lo"]), (r["cb"], r["sb_hi"], r["sb_lo"]))
+                 for r in rows}
+    else:
+        hi, lo = checksum_sum(_CKS)
+        own = a.groupBy(_BUCKET).agg(F.count(F.lit(1)), hi, lo).toArrow()  # no Row objects
+        da = {k: (c, checksum_value(h, l))
+              for k, c, h, l in zip(*(col.to_pylist() for col in own.columns))}
+        db = {int(k): (int(c), None if s is None else int(s))
+              for k, c, s in b.bucket_digests(n, within)}
+        sides = {k: (da.get(k, (0, None)), db.get(k, (0, None))) for k in da.keys() | db.keys()}
+    bad = [k for k, (x, y) in sides.items() if x != y]
+    return (bad, sum(sides[k][0][0] + sides[k][1][0] for k in bad),
+            sum(x[0] for x, _ in sides.values()), sum(y[0] for _, y in sides.values()))
 
 
 def _key_stats(per_key: DataFrame, rows_a: int, rows_b: int):
@@ -210,7 +243,7 @@ def _key_stats(per_key: DataFrame, rows_a: int, rows_b: int):
     return stats
 
 
-def _restrict_join(df: DataFrame, keys: List[str], ids_df: DataFrame, n: int,
+def _restrict_join(df: DataFrame, kh: Column, ids_df: DataFrame, n: int,
                    broadcast: bool) -> DataFrame:
     """Restrict `df` to the buckets in `ids_df` (a single-`_BUCKET`-column
     frame) via left-semi join — the large-id-set sibling of _restrict's
@@ -218,51 +251,66 @@ def _restrict_join(df: DataFrame, keys: List[str], ids_df: DataFrame, n: int,
     (one long column; ~16 bytes/id); above _BROADCAST_KEYS_LIMIT the
     caller leaves the join shape to AQE."""
     rhs = F.broadcast(ids_df) if broadcast else ids_df
-    return _bucketed(df, keys, n).join(rhs, _BUCKET, "left_semi").drop(_BUCKET)
+    return _bucketed(df, kh, n).join(rhs, _BUCKET, "left_semi").drop(_BUCKET)
 
 
-def _restrict(df: DataFrame, keys: List[str], ids: List[int], n: int) -> DataFrame:
+def _restrict(df: DataFrame, kh: Column, ids: List[int], n: int) -> DataFrame:
     """Restrict `df` to the driver-side bucket ids `ids` (of n buckets)."""
     if len(ids) >= n:
         return df
+    if not ids:
+        return df.filter(F.lit(False))
     if len(ids) <= _ISIN_LIMIT:
-        # isin over a literal set compiles to a hash-set probe (InSet)
-        return df.filter(_bucket_id(keys, n).isin(ids))
+        # a literal IN list compiles to a hash-set probe (InSet). Parsed as
+        # one expression: Column.isin makes py4j round trips per literal,
+        # ~2.5 s to build a filter on 4000 ids
+        listed = F.expr(f"{_BUCKET} IN ({', '.join(str(int(i)) for i in ids)})")
+        return _bucketed(df, kh, n).filter(listed).drop(_BUCKET)
     ids_df = df.sparkSession.createDataFrame([(int(x),) for x in ids], f"{_BUCKET} long")
-    return _restrict_join(df, keys, ids_df, n, broadcast=True)
+    return _restrict_join(df, kh, ids_df, n, broadcast=True)
 
 
-def hash_diff(
-    t1: TableSegment,
-    t2: TableSegment,
-    n_buckets: Optional[int] = None,
-) -> DataFrame:
+def hash_diff(t1: TableSegment, t2, n_buckets: Optional[int] = None) -> DataFrame:
     """Diff DataFrame (sign, *columns-of-table-1's-names), duplicate-PK-aware:
     emit ALL rows of every PK whose row *multiset* differs between sides —
     deterministic regardless of bucketing. (The reference's diff_sets also
     emits a PK with 2+ equal rows per side when its segment was downloaded,
     hashdiff_tables.py:62-69 — an artifact of segmentation, not reproduced.)
 
+    t2 is a TableSegment (a Spark pair) or a remote.RemoteSide (a remote
+    pair, normally through remote.hash_diff_remote, which first renders
+    t1's numbers at the remote's scales). The level policy is the same for
+    both; the pair decides the column form, the key hash, where B's
+    digests (_paired_digest) and rows come from, and the fine gate.
+
     n_buckets=None auto-sizes a two-level digest scheme (coarse prune +
-    fine isolate); an explicit positive int forces one fixed level.
+    fine isolate, the fine buckets nested in the coarse ones); an explicit
+    positive int forces one fixed level.
 
     Cache shape: only (checksum, keys) per row is persisted — one long and
     the keys no matter how wide the table, so the cache never becomes the
-    table. Both take each column in the form join_diff compares it: raw
-    where both sides share an exact type (_raw_columns), else its
-    normalized string. The rows of the differing PKs are then re-read
-    from the sources with a left-semi join: the sources are scanned twice,
-    but the second scan is pruned to the differing keys.
+    table. A Spark pair takes both in the form join_diff compares each
+    column: raw where both sides share an exact type (_raw_columns), else
+    its normalized string. A remote pair, whose engine hashes canonical
+    strings, takes the strings and the reference checksum, plus the cached
+    key hash. The rows of the differing PKs are then re-read from the
+    sources with a left-semi join: the sources are scanned twice, but the
+    second scan is pruned to the differing keys; a remote pair's '+' rows
+    are its fetched dirty-bucket rows, cached.
     """
     if n_buckets is not None and n_buckets < 1:
         raise ValueError(f"n_buckets must be a positive int, got {n_buckets!r}")
-    cols1, cols2 = _check_consistent(t1, t2)
+    remote = not isinstance(t2, TableSegment)
+    cols1, cols2 = [list(t1.relevant_columns)] * 2 if remote else _check_consistent(t1, t2)
+    raw = None if remote else _raw_columns(t1, t2, cols1, cols2)
     out_names = cols1
     knorm_names = [_knorm(i) for i in range(len(t1.key_columns))]
-    raw = _raw_columns(t1, t2, cols1, cols2)
+    # each level's bucket is pmod(kh, n), so power-of-two levels nest; kh
+    # is the remote's md5 key prefix (cached) or xxhash64 of the cached keys
+    kh = F.col(_KHASH) if remote else F.xxhash64(*[F.col(k) for k in knorm_names])
 
     a = _annotated_keys(t1, cols1, raw).persist()
-    b = _annotated_keys(t2, cols2, raw).persist()
+    b = t2 if remote else _annotated_keys(t2, cols2, raw).persist()
 
     # --- level 1: coarse digests (DEFAULT_N_BUCKETS) ------------------------
     # The reference recursively bisects because remote round-trips dominate;
@@ -274,20 +322,28 @@ def hash_diff(
     # 4096-bucket level 80s -> two-level design 36s; the zero-diff case
     # pays only the coarse level (7.9s -> 5.3s).
     coarse_n = n_buckets or DEFAULT_N_BUCKETS
-    bad_ids, dirty_rows, rows_a, rows_b = _paired_digest(a, b, knorm_names, coarse_n)
-    a_bad = _restrict(a, knorm_names, bad_ids, coarse_n)
-    b_bad = _restrict(b, knorm_names, bad_ids, coarse_n)
+    bad_ids, dirty_rows, rows_a, rows_b = _paired_digest(a, b, kh, coarse_n)
+    a_bad = _restrict(a, kh, bad_ids, coarse_n)
+    b_bad = b if remote else _restrict(b, kh, bad_ids, coarse_n)
+    level_n = coarse_n
 
     # --- level 2: fine digests over the dirty-coarse rows only --------------
-    # ...unless the dirty-coarse rows are ALREADY few: phase 2's per-key
-    # multiset compare over <2M narrow rows costs less than another
-    # digest round-trip, so the fine level only pays for itself when it
-    # can prune a big set. Exact dirty-row count comes free from the
-    # coarse digests.
+    # ...unless the dirty-coarse rows are ALREADY few: for a Spark pair,
+    # phase 2's per-key multiset compare over <2M narrow rows costs less
+    # than another digest round-trip, so the fine level only pays for
+    # itself when it can prune a big set; a remote pair downloads up to
+    # the reference's segment threshold. Exact dirty-row count comes free
+    # from the coarse digests.
     extra_handles: List[DataFrame] = []
-    if n_buckets is None and bad_ids and dirty_rows > _FINE_LEVEL_MIN_ROWS:
+    fine_min = _REMOTE_FINE_MIN_ROWS if remote else _FINE_LEVEL_MIN_ROWS
+    if n_buckets is None and bad_ids and dirty_rows > fine_min:
         fine_n = 1 << max(rows_a // _AUTO_ROWS_PER_BUCKET, 1).bit_length()
-        if fine_n > coarse_n:
+        if fine_n > coarse_n and remote:
+            # the remote's SQL needs the fine ids, so they are compared on
+            # the driver; the remote digests only the dirty coarse buckets
+            bad_ids = _paired_digest(a_bad, b, kh, fine_n, within=(coarse_n, bad_ids))[0]
+            a_bad, level_n = _restrict(a_bad, kh, bad_ids, fine_n), fine_n
+        elif fine_n > coarse_n:
             # The dirty fine-bucket set must NEVER round-trip through the
             # Python driver when it is large: at a ~2% uniform diff rate
             # over 60M rows/side, ~2M of the 8.4M fine buckets mismatch,
@@ -301,23 +357,38 @@ def hash_diff(
             # through to a plain left-semi under AQE; a fully-dirty set
             # prunes nothing and is skipped.
             ids_df = (
-                _side_digests(_bucketed(a_bad, knorm_names, fine_n),
-                              _bucketed(b_bad, knorm_names, fine_n), [_BUCKET])
+                _side_digests(_bucketed(a_bad, kh, fine_n),
+                              _bucketed(b_bad, kh, fine_n), [_BUCKET])
                 .filter(_digests_differ()).select(_BUCKET).persist()
             )
             n_ids = ids_df.count()
             if n_ids <= _ISIN_LIMIT:
                 fine_ids = [r[_BUCKET] for r in ids_df.collect()]
                 ids_df.unpersist()
-                a_bad = _restrict(a_bad, knorm_names, fine_ids, fine_n)
-                b_bad = _restrict(b_bad, knorm_names, fine_ids, fine_n)
+                a_bad = _restrict(a_bad, kh, fine_ids, fine_n)
+                b_bad = _restrict(b_bad, kh, fine_ids, fine_n)
             elif n_ids < fine_n:
                 bcast = n_ids <= _BROADCAST_KEYS_LIMIT
-                a_bad = _restrict_join(a_bad, knorm_names, ids_df, fine_n, bcast)
-                b_bad = _restrict_join(b_bad, knorm_names, ids_df, fine_n, bcast)
+                a_bad = _restrict_join(a_bad, kh, ids_df, fine_n, bcast)
+                b_bad = _restrict_join(b_bad, kh, ids_df, fine_n, bcast)
                 extra_handles.append(ids_df)
             else:
                 ids_df.unpersist()
+
+    if remote:
+        # B's rows come from the remote: the dirty buckets' rows by an IN
+        # list, or every row once most buckets are dirty (a giant IN list
+        # makes the remote re-hash every row to keep rows it would keep
+        # anyway), and then A's rows are not restricted either. Cached: read
+        # by phase 2 and by the '+' emission, so the remote runs the fetch
+        # once. The fetched rows carry t1's types, so t1's key form applies.
+        fetch_ids = bad_ids if len(bad_ids) <= max(1024, level_n // 4) else None
+        if fetch_ids is None:
+            a_bad = a
+        schema = T.StructType([t1.schema[c] for c in cols1] + [T.StructField(_CKS, T.LongType())])
+        b = b_bad = t2.fetch_bucket_rows(t1.df.sparkSession, schema, level_n, fetch_ids).select(
+            *cols1, _CKS, *[k.alias(n) for k, n in zip(_key_norm(t1, cols1), knorm_names)]
+        ).persist()
 
     # Phase 2 — the diff_sets decision (hashdiff_tables.py:30-84): the same
     # digest kernel per cached key over the surviving narrow rows, one
@@ -335,9 +406,9 @@ def hash_diff(
         if bad_cached.count() <= _BROADCAST_KEYS_LIMIT
         else bad_cached
     )
-    out = _emit(t1, cols1, out_names, "-", bad_keys, raw).unionAll(
-        _emit(t2, cols2, out_names, "+", bad_keys, raw)
-    )
+    plus = (_emit_rows(b, out_names, "+", bad_keys) if remote
+            else _emit(t2, cols2, out_names, "+", bad_keys, raw))
+    out = _emit(t1, cols1, out_names, "-", bad_keys, raw).unionAll(plus)
     # Caller-managed cache lifecycle: the result is lazy, so the persisted
     # frames must outlive it. DiffResult.unpersist() (and the CLI) release
     # them once the diff is materialized.

@@ -4,17 +4,16 @@ engine that computes its own bucket digests.
 This is the reference's core scenario — diff a table you can scan with
 Spark against one that lives in PostgreSQL/Snowflake/DuckDB — re-expressed
 for the bucketed algorithm (operators/hashdiff.py): the remote side never
-ships rows for matching buckets; it runs ONE digest query
+ships rows for matching buckets; per digest level it runs ONE query
 
     SELECT bucket, count(*), sum(md5_as_int(fingerprint(normalized cols)))
-    GROUP BY bucket
+    [WHERE coarse bucket IN (dirty coarse ids)]  GROUP BY bucket
 
 using the exact checksum formula of the reference's dialects (bit-identical
 to our normalize.py — that equivalence is what the golden tests pin), and
-ships only n_buckets digest rows plus the rows of mismatched buckets.
-Everything after the digest compare is hashdiff's own kernel: the per-key
-_side_digests decision over the Spark side's narrow cached frame and the
-fetched rows, then hashdiff's _emit re-read for the '-' rows.
+ships only digest rows plus the rows of mismatched buckets. The diff is
+hashdiff.hash_diff with this side as its second side: its levels, phase 2
+and emission; hash_diff_remote only matches the scales first.
 
 Three layers, mirroring the reference's dialect/adapter split
 (data_diff/databases/base.py + the 13 per-database files):
@@ -23,11 +22,13 @@ Three layers, mirroring the reference's dialect/adapter split
                   md5->int48 checksum, the bucket hash). Adding an engine
                   = the reference's md5_as_int/normalize_* recipe for it
                   (~10 lines).
-  RemoteSide      the adapter contract hash_diff_remote consumes:
-                  bucket_digests() + fetch_bucket_rows(). It renders the
-                  digest and fetch SQL once for every adapter; an adapter
-                  implements only execution: _query(sql) -> rows (a DB-API
-                  default) and _frame(spark, schema, sql) -> DataFrame.
+  RemoteSide      the second-side contract hash_diff consumes:
+                  bucket_digests(n, within) + fetch_bucket_rows(). It
+                  renders the digest and fetch SQL once for every adapter
+                  (within= restricts a digest to dirty coarse buckets with
+                  the fetch's where clause); an adapter implements only
+                  execution: _query(sql) -> rows (a DB-API default) and
+                  _frame(spark, schema, sql) -> DataFrame.
   DuckDBSide      in-process DB-API adapter (DuckDB stands in for any
                   reference dialect available as a local connection).
   SQLiteSide      in-process stdlib sqlite3 adapter — the THIRD dialect
@@ -42,10 +43,11 @@ Three layers, mirroring the reference's dialect/adapter split
                   (tests/test_jdbc_derby.py); other tests inject a reader
                   that routes the generated SQL to DuckDB.
 
-Scale notes: network transfer is O(n_buckets + differing rows), same as the
-reference's checksum-then-download model; the Spark side stays fully
-distributed. Bucket alignment uses a cross-engine-stable key hash
-(md5-based, not xxhash64 — xxhash64 exists only in Spark).
+Scale notes: network transfer is O(digest rows + differing rows), same as
+the reference's checksum-then-download model (4096 digest rows on a clean
+pair); the Spark side stays fully distributed. Bucket alignment uses a
+cross-engine-stable key hash (md5-based, not xxhash64 — xxhash64 exists
+only in Spark).
 """
 
 from __future__ import annotations
@@ -58,21 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_diff_spark.constants import CHECKSUM_OFFSET, DEFAULT_NUMERIC_PRECISION
-from data_diff_spark.normalize import checksum_sum, checksum_value
-from data_diff_spark.operators.hashdiff import (
-    _AUTO_ROWS_PER_BUCKET,
-    _BROADCAST_KEYS_LIMIT,
-    _BUCKET,
-    _CKS,
-    _annotated_keys,
-    _digests_differ,
-    _emit,
-    _key_norm,
-    _key_stats,
-    _knorm,
-    _side_digests,
-)
-from data_diff_spark.operators.joindiff import SIGN_COL
+from data_diff_spark.operators.hashdiff import _CKS, hash_diff
 from data_diff_spark.table import TableSegment
 
 _DECIMAL_RE = re.compile(r"(?:DECIMAL|NUMERIC)\s*\(\s*\d+\s*,\s*(\d+)\s*\)")
@@ -85,14 +73,6 @@ def _decimal_scale(t: str) -> int:
     """Declared scale of an upper-cased DECIMAL/NUMERIC type (6 if bare)."""
     m = _DECIMAL_RE.match(t)
     return int(m.group(1)) if m else 6
-
-
-def _spark_bucket(key_norm: List, n_buckets: int):
-    """Cross-engine bucket id: first 8 hex digits of md5 of the '|'-joined
-    normalized keys (hashdiff._key_norm output, NULL already '<null>'),
-    mod n_buckets. Computable in any engine with md5()."""
-    joined = F.concat_ws("|", *key_norm)
-    return F.pmod(F.conv(F.substring(F.md5(joined), 1, 8), 16, 10).cast("long"), F.lit(n_buckets))
 
 
 # --- dialects ---------------------------------------------------------------
@@ -190,7 +170,7 @@ class RemoteDialect:
 
     def bucket_sql(self, key_fp: str, n_buckets: int) -> str:
         """First 8 md5 hex digits of the key fingerprint, mod n_buckets —
-        must match _spark_bucket bit-for-bit."""
+        must match pmod of hashdiff's cached __khash__ bit-for-bit."""
         raise NotImplementedError
 
 
@@ -665,12 +645,26 @@ def _fingerprint_sql(dialect: RemoteDialect, columns: Sequence[str],
     return dialect.concat_ws_sql(parts)
 
 
+def _bucket_where_sql(dialect: RemoteDialect, key_columns: Sequence[str],
+                      types: Mapping[str, str], n_buckets: int,
+                      bucket_ids: Optional[Sequence[int]]) -> str:
+    """' where <bucket among n_buckets> in (ids)', or '' when ids=None or
+    names every bucket."""
+    if bucket_ids is None or len(bucket_ids) >= n_buckets:
+        return ""
+    bucket = dialect.bucket_sql(_fingerprint_sql(dialect, key_columns, types), n_buckets)
+    return f" where {bucket} in ({', '.join(str(int(b)) for b in bucket_ids)})"
+
+
 def digest_query_sql(dialect: RemoteDialect, relation_sql: str,
                      key_columns: Sequence[str], columns: Sequence[str],
-                     types: Mapping[str, str], n_buckets: int) -> str:
-    """The ONE remote aggregation query: (bucket, count, checksum-sum)."""
+                     types: Mapping[str, str], n_buckets: int,
+                     within: Optional[Tuple[int, Sequence[int]]] = None) -> str:
+    """The ONE remote aggregation query: (bucket, count, checksum-sum),
+    restricted to the coarser buckets within = (n, ids) when given."""
     cks = dialect.md5_as_int_sql(_fingerprint_sql(dialect, columns, types))
     bucket = dialect.bucket_sql(_fingerprint_sql(dialect, key_columns, types), n_buckets)
+    where = _bucket_where_sql(dialect, key_columns, types, *within) if within else ""
     a = dialect.alias_sql
     if not dialect.group_by_ordinal:
         # Engines whose GROUP BY can't reference select-list ordinals (and
@@ -680,12 +674,12 @@ def digest_query_sql(dialect: RemoteDialect, relation_sql: str,
             f"select {a('bucket')}, count(*) as {a('cnt')}, "
             f"cast(sum({a('cks')}) as bigint) as {a('cks')} "
             f"from (select {bucket} as {a('bucket')}, {cks} as {a('cks')} "
-            f"from {relation_sql}) t group by {a('bucket')}"
+            f"from {relation_sql}{where}) t group by {a('bucket')}"
         )
     return (
         f"select {bucket} as {a('bucket')}, count(*) as {a('cnt')}, "
         f"cast(sum({cks}) as bigint) as {a('cks')} "
-        f"from {relation_sql} group by 1"
+        f"from {relation_sql}{where} group by 1"
     )
 
 
@@ -693,29 +687,21 @@ def fetch_query_sql(dialect: RemoteDialect, relation_sql: str,
                     key_columns: Sequence[str], columns: Sequence[str],
                     types: Mapping[str, str], n_buckets: int,
                     bucket_ids: Optional[Sequence[int]]) -> str:
-    """Rows (plus per-row checksum + bucket) of the given buckets — the only
+    """Rows (plus per-row checksum) of the given buckets — the only
     row download, proportional to differing data. bucket_ids=None fetches
     every row (the most-buckets-dirty degenerate case, where a per-row
     bucket filter costs more than it saves)."""
     cks = dialect.md5_as_int_sql(_fingerprint_sql(dialect, columns, types))
-    bucket = dialect.bucket_sql(_fingerprint_sql(dialect, key_columns, types), n_buckets)
-    where = ""
-    if bucket_ids is not None:
-        ids = ", ".join(str(int(b)) for b in bucket_ids)
-        where = f" where {bucket} in ({ids})"
-    a = dialect.alias_sql
+    where = _bucket_where_sql(dialect, key_columns, types, n_buckets, bucket_ids)
     sel = ", ".join(dialect.select_col_sql(c, types[c]) for c in columns)
-    return (
-        f"select {sel}, {cks} as {a(_CKS)}, {bucket} as {a(_BUCKET)} "
-        f"from {relation_sql}{where}"
-    )
+    return f"select {sel}, {cks} as {dialect.alias_sql(_CKS)} from {relation_sql}{where}"
 
 
 # --- adapters ---------------------------------------------------------------
 
 
 class RemoteSide:
-    """Adapter contract consumed by hash_diff_remote. This base renders the
+    """Second-side contract consumed by hash_diff. This base renders the
     digest and fetch SQL for every adapter; a subclass sets dialect,
     relation_sql, key_columns, columns (keys first, positionally paired
     with the Spark side's relevant_columns) and types (column -> engine
@@ -736,17 +722,20 @@ class RemoteSide:
         in order; values may still carry the engine's own types."""
         raise NotImplementedError
 
-    def bucket_digests(self, n_buckets: int) -> Sequence[Tuple[int, int, Optional[int]]]:
-        """[(bucket, count, checksum_sum)] — ONE remote aggregation query."""
+    def bucket_digests(self, n_buckets: int,
+                       within: Optional[Tuple[int, Sequence[int]]] = None,
+                       ) -> Sequence[Tuple[int, int, Optional[int]]]:
+        """[(bucket, count, checksum_sum)] — ONE remote aggregation query,
+        over the rows of the coarser buckets within = (n, ids) if given."""
         return self._query(digest_query_sql(
             self.dialect, self.relation_sql, self.key_columns, self.columns,
-            self.types, n_buckets))
+            self.types, n_buckets, within))
 
     def fetch_bucket_rows(self, spark: SparkSession, schema: T.StructType,
                           n_buckets: int,
                           bucket_ids: Optional[Sequence[int]]) -> DataFrame:
-        """Spark DataFrame (schema = the Spark side's columns + __cks__ +
-        __bucket__) holding the remote rows of the given buckets; an empty
+        """Spark DataFrame (schema = the Spark side's columns + __cks__)
+        holding the remote rows of the given buckets; an empty
         bucket list runs no query. Columns are renamed and cast to `schema`
         by position, like the reference's differing-column-name support."""
         if bucket_ids is not None and not bucket_ids:
@@ -1009,100 +998,24 @@ def hash_diff_remote(
     remote: RemoteSide,
     n_buckets: Optional[int] = None,
 ) -> DataFrame:
-    """Diff a Spark-side segment against a remote-engine side.
+    """Diff a Spark-side segment against a remote-engine side: hash_diff
+    with the remote as its second side, after rendering t1's numbers at
+    the remote's scales (_match_remote_scales).
 
-    Phase 1: both engines independently compute (bucket, count, sum cks);
-    only digests cross the wire. Phase 2 is hashdiff's: the rows of
-    mismatched buckets are fetched from the remote, the per-key digest
-    kernel compares them with the Spark side's cached (checksum, normalized
-    key) rows of those buckets, and the differing keys' rows are emitted —
-    '-' by re-reading the Spark source, '+' from the fetched rows.
-
-    n_buckets=None (default) auto-sizes to ~_AUTO_ROWS_PER_BUCKET rows per
-    bucket from a Spark-side count (parquet metadata makes it near-free).
-    Too few buckets is the classic trap: at a 0.4% diff rate and 1k rows per
-    bucket, nearly EVERY bucket contains a diff and phase 2 degenerates into
-    downloading the whole remote table. Small buckets keep the download
-    proportional to the diff count; the digest rows themselves stay cheap
-    (24 bytes each). If most buckets end up dirty anyway, the per-row bucket
-    filter is dropped and the remote side streams the relation once without
-    re-hashing every row against a giant IN list.
+    Both engines compute (bucket, count, sum cks) per level, so only
+    digests cross the wire: at most 4096 rows on a clean pair. When the
+    dirty coarse buckets hold more than 16384 rows (the reference's
+    download threshold), an auto-sized diff (n_buckets=None) digests them
+    again at ~16 rows per bucket. The rows of the dirty buckets are then
+    fetched from the remote, by an IN list or, once most buckets are
+    dirty, the whole relation; the per-key digest kernel compares them with
+    the Spark side's cached (checksum, normalized key) rows, and the
+    differing keys' rows are emitted — '-' by re-reading the Spark source,
+    '+' from the fetched rows.
     """
     if n_buckets is not None and n_buckets < 1:
         raise ValueError(f"n_buckets must be a positive int, got {n_buckets!r}")
-    spark = t1.df.sparkSession
     cols = list(t1.relevant_columns)
     if len(cols) != len(remote.columns):
         raise ValueError(f"column arity mismatch: {cols} vs {remote.columns}")
-    t1 = _match_remote_scales(t1, remote)
-
-    if n_buckets is None:
-        cnt = t1.make_select().count()
-        n_buckets = 1024
-        while n_buckets * _AUTO_ROWS_PER_BUCKET < cnt and n_buckets < (1 << 20):
-            n_buckets <<= 1
-
-    # hashdiff's narrow cache shape (long checksum, normalized key strings)
-    # plus the cross-engine bucket
-    knames = [_knorm(i) for i in range(len(t1.key_columns))]
-    a = _annotated_keys(t1, cols).withColumn(
-        _BUCKET, _spark_bucket([F.col(k) for k in knames], n_buckets)
-    ).persist()
-
-    cks_hi, cks_lo = checksum_sum(_CKS)
-    digests = (
-        a.groupBy(_BUCKET)
-        .agg(F.count(F.lit(1)).alias("cnt"), cks_hi.alias("hi"), cks_lo.alias("lo"))
-        .toArrow()  # columnar driver transfer: no per-row Row objects
-    )
-    local = {
-        b: (c, checksum_value(hi, lo))
-        for b, c, hi, lo in zip(
-            *[digests.column(name).to_pylist() for name in (_BUCKET, "cnt", "hi", "lo")]
-        )
-    }
-    remote_digests = {int(b): (int(c), int(s) if s is not None else None)
-                      for b, c, s in remote.bucket_digests(n_buckets)}
-
-    bad = sorted(
-        b for b in set(local) | set(remote_digests)
-        if local.get(b) != remote_digests.get(b)
-    )
-
-    # Degenerate case: most buckets dirty -> a giant IN list makes the
-    # remote re-hash every row just to keep rows it would keep anyway.
-    fetch_ids: Optional[List[int]] = [int(b) for b in bad]
-    if len(bad) > max(1024, n_buckets // 4):
-        fetch_ids = None
-
-    # Broadcast semi-join, not .isin(literal list): the dirty-bucket set is
-    # proportional to the diff count, and a million-literal IN expression
-    # melts the driver/codegen long before the executors see it.
-    bad_df = spark.createDataFrame([(int(b),) for b in bad], f"{_BUCKET} long")
-    a_bad = a.join(F.broadcast(bad_df), _BUCKET, "left_semi")
-    schema = T.StructType([t1.schema[c] for c in cols] + [
-        T.StructField(_CKS, T.LongType()), T.StructField(_BUCKET, T.LongType())])
-    fetched = remote.fetch_bucket_rows(spark, schema, n_buckets, fetch_ids)
-    if fetch_ids is None:
-        fetched = fetched.join(F.broadcast(bad_df), _BUCKET, "left_semi")
-    # Read twice (per-key digests, '+' emission): cached, so a JDBC remote
-    # runs its row query once. The fetched rows carry the Spark side's
-    # types, so t1's key normalization applies to them.
-    fetched = fetched.select(
-        *cols, _CKS, *[k.alias(n) for k, n in zip(_key_norm(t1, cols), knames)]
-    ).persist()
-
-    per_key = _side_digests(a_bad, fetched, knames).filter(_digests_differ())
-    bad_cached = per_key.select(*knames).persist()
-    bad_keys = (
-        F.broadcast(bad_cached)
-        if bad_cached.count() <= _BROADCAST_KEYS_LIMIT
-        else bad_cached
-    )
-    out = _emit(t1, cols, cols, "-", bad_keys).unionAll(
-        fetched.join(bad_keys, knames, "left_semi").select(F.lit("+").alias(SIGN_COL), *cols)
-    )
-    out._ddspark_persisted = [a, fetched, bad_cached]  # released via DiffResult.unpersist()
-    out._ddspark_stats = _key_stats(per_key, sum(c for c, _ in local.values()),
-                                    sum(c for c, _ in remote_digests.values()))
-    return out
+    return hash_diff(_match_remote_scales(t1, remote), remote, n_buckets)

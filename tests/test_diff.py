@@ -764,7 +764,7 @@ def test_hashdiff_key_form_per_pair(spark, case):
     key_a, key_b, form = {
         "bigint": ("id", "id", T.LongType()),
         "int_vs_bigint": ("id32", "id", T.StringType()),
-        "double": ("dbl", "dbl", T.StringType()),
+        "double": ("dbl", "dbl", T.DoubleType()),
         "uuid": ("u", "u", T.StringType()),
         "unified_ts": ("ts", "ts", T.StringType()),
     }[case]
@@ -816,9 +816,10 @@ def _hash_inputs(df):
 @pytest.mark.parametrize("case", ["exact", "double", "int_vs_bigint", "uuid"])
 def test_hashdiff_checksum_form_per_pair(spark, case):
     """hash_diff's row checksum is xxhash64 over each column raw when both
-    sides hold it in one exact type with no override, else over its
-    canonical string: no md5, no fingerprint, no rendering recipe for the
-    exact columns. Each form gives join_diff's rows on unique keys."""
+    sides hold it in one exact type with no override (a same-typed double
+    too), else over its canonical string: no md5, no fingerprint, no
+    rendering recipe for the exact columns. Each form gives join_diff's
+    rows on unique keys."""
     exact = ["s", "price", "day", "ts", "flag", "bin"]
     base = spark.range(0, 300).selectExpr(
         "id", "cast(id * 3 as string) as s", "cast(id / 3 as decimal(12,2)) as price",
@@ -851,10 +852,32 @@ def test_hashdiff_checksum_form_per_pair(spark, case):
         assert len(values) == 1 + len(cols)
         for c, (node, typ) in zip(["id"] + cols, values):
             raw = ("AttributeReference", base.schema[c].dataType.simpleString())
-            if c == extra:
+            if c == extra and c != "dbl":
                 assert node != raw[0] and typ == "string", (c, node, typ)
             else:
                 assert (node, typ) == raw, c
+    for h in d._ddspark_persisted:
+        h.unpersist(True)
+
+
+@pytest.mark.parametrize("n_buckets", [None, 1])
+@pytest.mark.parametrize("a,b", [
+    (0.1234567, 0.1234568),  # equal at the canonical string's 6 digits
+    (0.0, -0.0),
+    (float("nan"), float("nan")),
+], ids=["seventh_digit", "signed_zero", "nan"])
+def test_hashdiff_same_typed_doubles_compare_raw(spark, a, b, n_buckets):
+    """Same-typed doubles compare raw, as join_diff compares them, both as
+    a value and as a key: a 7th-digit change differs, while 0.0 and -0.0,
+    and NaN and NaN, are equal."""
+    schema = "k double, v double"
+    rows = lambda x: [(1.0, x), (x, 1.0)]  # x as a value, then as a key
+    t1, t2 = (table_segment(spark.createDataFrame(rows(x), schema), ["k"], extra_columns=["v"])
+              for x in (a, b))
+    d = hash_diff(t1, t2, n_buckets=n_buckets)
+    got = _by_repr(d.collect())
+    assert got == _by_repr(join_diff(t1, t2).collect())
+    assert len(got) == (4 if a == 0.1234567 else 0)
     for h in d._ddspark_persisted:
         h.unpersist(True)
 

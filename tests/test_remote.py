@@ -403,8 +403,9 @@ def test_spark_integer_vs_remote_fraction_raises(spark):
 
 def test_remote_phase2_is_hashdiff_kernel_plan(spark, t1, con):
     """Phase 2 runs hashdiff's aggregation kernel, never a Window; the
-    cached Spark-side frame is hashdiff's narrow shape plus the bucket (no
-    compared column); the '+' rows are read from the cached fetch."""
+    cached Spark-side frame is hashdiff's narrow shape plus the md5 key
+    hash (no compared column); the '+' rows are read from the cached
+    fetch."""
     from data_diff_spark.operators import hashdiff as H
 
     con.execute("""create or replace view pmod as
@@ -436,9 +437,9 @@ def test_remote_phase2_is_hashdiff_kernel_plan(spark, t1, con):
     assert not [n for n in all_nodes if "Window" in n.nodeName()]
     cached = [names(n.relation().output()) for n in all_nodes
               if n.nodeName() == "InMemoryTableScan"]
-    spark_side = [c for c in cached if H._BUCKET in c]
+    spark_side = [c for c in cached if H._KHASH in c]
     assert spark_side, cached
-    assert spark_side == [sorted([H._CKS, H._knorm(0), H._BUCKET])] * len(spark_side)
+    assert spark_side == [sorted([H._CKS, H._knorm(0), H._KHASH])] * len(spark_side)
     # the union's '+' branch scans the cached fetch (compared columns +
     # checksum + normalized key), not a fresh remote read
     union = next(n for n in all_nodes if n.nodeName() == "Union")

@@ -4,7 +4,10 @@ evidence loop (run per round after perf changes).
 
 Usage: python tools/scale_probe.py [factor]   (default 10 -> ~6M rows)
 
-Prints one JSON line with timings; results (local[32], factor=10 = 6M
+Prints one JSON line with timings, and the cross-engine row: the same pair
+with side B behind a DuckDBSide over the written corpus (the mod rules in
+SQL), diffed by hash_diff_remote — its wall time, Spark jobs, remote
+queries, digest rows received and rows fetched, changed and zero-diff; results (local[32], factor=10 = 6M
 rows, ~2% changed): r3: hashdiff 36s (was 80s before the two-level
 digests), joindiff 20s. r4 (narrow default + broadcast re-read +
 small-dirty-set shortcut): hashdiff 18-51s across repeats (GC/cache
@@ -74,8 +77,57 @@ def main():
     spark.catalog.clearCache()
     t0 = time.time(); out["joindiff_rows"] = jd.join_diff(t1, t2).count()
     out["joindiff_sec"] = round(time.time() - t0, 1)
+    spark.catalog.clearCache()
+    out.update(remote_row(spark, path, t1))
     print(json.dumps(out))
     spark.stop()
+
+
+def remote_row(spark, path, t1):
+    """hash_diff_remote of t1 against the corpus in DuckDB, modified by the
+    same rules as `mod` above, and against the unmodified corpus."""
+    import duckdb
+
+    from data_diff_spark.operators.remote import DuckDBSide, hash_diff_remote
+
+    class CountingSide(DuckDBSide):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            self.queries = self.digest_rows = 0
+            self.fetched = []
+
+        def _query(self, sql):
+            rows = super()._query(sql)
+            self.queries += 1
+            self.digest_rows += len(rows)
+            return rows
+
+        def fetch_bucket_rows(self, spark, schema, n_buckets, bucket_ids):
+            self.queries += bucket_ids is None or len(bucket_ids) > 0
+            df = super().fetch_bucket_rows(spark, schema, n_buckets, bucket_ids)
+            self.fetched.append(df)
+            return df
+
+    con = duckdb.connect()
+    con.execute(f"create view big as select {', '.join(COLS)} from read_parquet('{path}/*.parquet')")
+    quantity = ("case when l_orderkey % 100 = 2 then l_quantity + 1.0 "
+                "else l_quantity end as l_quantity")
+    cols = ", ".join(quantity if c == "l_quantity" else c for c in COLS)
+    con.execute(f"create view mod as select {cols} from big where l_orderkey % 100 <> 1")
+    sc = spark.sparkContext
+    out = {}
+    for name, rel in (("remote", "mod"), ("remote_zero", "big")):
+        side = CountingSide(rel, KEYS, COLS, con=con)
+        sc.setJobGroup(name, name)
+        t0 = time.time(); out[f"{name}_rows"] = hash_diff_remote(t1, side).count()
+        out[f"{name}_sec"] = round(time.time() - t0, 1)
+        out[f"{name}_jobs"] = len(sc.statusTracker().getJobIdsForGroup(name))
+        out[f"{name}_queries"] = side.queries
+        out[f"{name}_digest_rows"] = side.digest_rows
+        out[f"{name}_fetched_rows"] = sum(df.count() for df in side.fetched)
+        spark.catalog.clearCache()
+    con.close()
+    return out
 
 
 if __name__ == "__main__":
