@@ -26,20 +26,17 @@ Cost on a cluster: two scans with count/sum partial aggs (the Spark analogue
 of "within an order of magnitude of count(*)", README.md:191) plus work
 proportional to the number of *differing* buckets — not to table size.
 
-The second side is a Spark segment or a remote engine (remote.RemoteSide,
-via remote.hash_diff_remote), and one level policy runs for both: coarse at
-DEFAULT_N_BUCKETS, then, when auto-sized, a fine level nested inside it,
-then phase 2. A remote pair keeps the reference's checksum,
+The second side is a Spark segment (_SparkPair) or a remote engine
+(remote.RemotePair), which keeps the reference checksum,
 md5_as_int(fingerprint(normalized cols)), bit-identical to every reference
-dialect (see normalize.py), and buckets rows by the md5 prefix of the key
-fingerprint (RemoteDialect.bucket_sql), so the remote computes its own
-digests with the reference's segment SQL (table_segment.py:239-258) and
-ships only digests and the rows of the dirty buckets.
+dialect (see normalize.py), so step 2's digests can also be computed by a
+remote PostgreSQL/DuckDB/Snowflake via the reference's segment SQL
+(table_segment.py:239-258).
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -48,7 +45,6 @@ from pyspark.sql import types as T
 from data_diff_spark.constants import CHECKSUM_MASK, CHECKSUM_OFFSET
 from data_diff_spark.normalize import (
     checksum_sum,
-    checksum_value,
     md5_as_int,
     normalized_columns,
     row_fingerprint,
@@ -61,7 +57,6 @@ _AUTO_ROWS_PER_BUCKET = 16  # target bucket size so a dirty row dirties ~1 bucke
 _ISIN_LIMIT = 8192  # above this, filter dirty buckets with a join, not a literal list
 _BROADCAST_KEYS_LIMIT = 2_000_000  # differing-PK sets up to this broadcast for the narrow re-read
 _FINE_LEVEL_MIN_ROWS = 2_000_000  # below this many dirty-coarse rows, go straight to phase 2
-_REMOTE_FINE_MIN_ROWS = 16384  # a remote pair's: the reference's row-download threshold
 
 _CKS = "__cks__"
 _BUCKET = "__bucket__"
@@ -115,17 +110,15 @@ def _annotated_keys(t: TableSegment, cols: List[str], raw: Optional[List[bool]] 
     """(__cks__, __knorm0__ ... __knormK__) ONLY — no other columns. This
     is the frame hash_diff caches: the keys (raw or normalized strings,
     _key_norm) and one long per row no matter how wide the table. Bucket
-    ids at any granularity come from the pair's key hash (hash_diff), so
+    ids at any granularity come from the pair's key hash (_bucket_id), so
     the digest levels are chosen after annotation.
 
-    raw=None (a remote pair) keeps the reference checksum, md5_as_int of
-    the row fingerprint, and adds __khash__: the remote's key hash, the
-    first 8 md5 hex digits of the '|'-joined key strings as a long
-    (RemoteDialect.bucket_sql before its modulo), computed once per row.
-    Given one flag per column, the checksum is the pair's own:
-    xxhash64(v1, isnull(v1), v2, ...) over each column raw or as its
-    normalized string, masked to 48 bits and centred like md5_as_int. The
-    NULL flags keep (x, NULL) apart from (NULL, x): xxhash64 skips NULLs."""
+    raw=None (the cross-engine diff) keeps the reference checksum,
+    md5_as_int of the row fingerprint. Given one flag per column, the
+    checksum is the pair's own: xxhash64(v1, isnull(v1), v2, ...) over
+    each column raw or as its normalized string, masked to 48 bits and
+    centred like md5_as_int. The NULL flags keep (x, NULL) apart from
+    (NULL, x): xxhash64 skips NULLs."""
     normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
     if raw is None:
         cks = md5_as_int(row_fingerprint(normd))
@@ -133,13 +126,18 @@ def _annotated_keys(t: TableSegment, cols: List[str], raw: Optional[List[bool]] 
         vals = [F.col(c) if r else n for c, n, r in zip(cols, normd, raw)]
         cks = (F.xxhash64(*[x for v in vals for x in (v, v.isNull())])
                .bitwiseAND(F.lit(CHECKSUM_MASK)) - F.lit(CHECKSUM_OFFSET))
-    keys = [_knorm(i) for i in range(len(t.key_columns))]
-    out = t.make_select().select(
-        cks.alias(_CKS), *[k.alias(n) for k, n in zip(_key_norm(t, cols, raw), keys)])
-    if raw is None:
-        fp = F.concat_ws("|", *keys)
-        out = out.withColumn(_KHASH, F.conv(F.substring(F.md5(fp), 1, 8), 16, 10).cast("long"))
-    return out
+    return t.make_select().select(
+        cks.alias(_CKS),
+        *[k.alias(_knorm(i)) for i, k in enumerate(_key_norm(t, cols, raw))],
+    )
+
+
+def _md5_key_hash(keys: List[str]) -> Column:
+    """The cross-engine key hash of rows holding the key strings `keys`:
+    the first 8 md5 hex digits of their '|'-join as a long, which
+    RemoteDialect.bucket_sql takes modulo the bucket count."""
+    fp = F.concat_ws("|", *[F.col(k) for k in keys])
+    return F.conv(F.substring(F.md5(fp), 1, 8), 16, 10).cast("long")
 
 
 def _emit(t: TableSegment, cols: List[str], out_names: List[str], sign: str,
@@ -201,32 +199,19 @@ def _digests_differ() -> Column:
             | ~F.col("sa_lo").eqNullSafe(F.col("sb_lo")))
 
 
-def _paired_digest(a: DataFrame, b, kh: Column, n: int,
-                   within: Optional[Tuple[int, List[int]]] = None):
-    """One level's bucket digests of both sides, collected to the driver
-    (<= n rows a side) and compared there — no digest join. The collect
-    also yields the exact row counts that size the fine level.
+def _paired_digest(a: DataFrame, b: DataFrame, kh: Column, n: int):
+    """One level's bucket digests of both cached sides, computed in ONE job
+    (one _side_digests over the union), collected to the driver (<= n
+    rows) and compared there — no digest join. Returns _dirty_buckets."""
+    rows = _side_digests(_bucketed(a, kh, n), _bucketed(b, kh, n), [_BUCKET]).collect()
+    return _dirty_buckets({
+        r[_BUCKET]: ((r["ca"], r["sa_hi"], r["sa_lo"]), (r["cb"], r["sb_hi"], r["sb_lo"]))
+        for r in rows})
 
-    b is side B's cached frame, digested in the SAME job as `a` (one
-    _side_digests over the union), or a remote.RemoteSide, whose digests
-    come from one remote query restricted, as `a` already is, to the
-    buckets `within` = (coarser n, ids) names.
 
-    Returns (dirty bucket ids, rows in dirty buckets on both sides,
-    rows_a, rows_b)."""
-    a = _bucketed(a, kh, n)
-    if isinstance(b, DataFrame):
-        rows = _side_digests(a, _bucketed(b, kh, n), [_BUCKET]).collect()
-        sides = {r[_BUCKET]: ((r["ca"], r["sa_hi"], r["sa_lo"]), (r["cb"], r["sb_hi"], r["sb_lo"]))
-                 for r in rows}
-    else:
-        hi, lo = checksum_sum(_CKS)
-        own = a.groupBy(_BUCKET).agg(F.count(F.lit(1)), hi, lo).toArrow()  # no Row objects
-        da = {k: (c, checksum_value(h, l))
-              for k, c, h, l in zip(*(col.to_pylist() for col in own.columns))}
-        db = {int(k): (int(c), None if s is None else int(s))
-              for k, c, s in b.bucket_digests(n, within)}
-        sides = {k: (da.get(k, (0, None)), db.get(k, (0, None))) for k in da.keys() | db.keys()}
+def _dirty_buckets(sides):
+    """{bucket: (digest A, digest B)}, each led by its row count -> (dirty
+    bucket ids, rows in dirty buckets on both sides, rows_a, rows_b)."""
     bad = [k for k, (x, y) in sides.items() if x != y]
     return (bad, sum(sides[k][0][0] + sides[k][1][0] for k in bad),
             sum(x[0] for x, _ in sides.values()), sum(y[0] for _, y in sides.values()))
@@ -270,6 +255,36 @@ def _restrict(df: DataFrame, kh: Column, ids: List[int], n: int) -> DataFrame:
     return _restrict_join(df, kh, ids_df, n, broadcast=True)
 
 
+class _SparkPair:
+    """A Spark second side's choices: each column in join_diff's form
+    (_raw_columns), xxhash64 of the cached keys as the key hash, both
+    sides' digests in one job, B's rows from its own cache, and a fine
+    level past _FINE_LEVEL_MIN_ROWS dirty rows."""
+
+    fine_level = True
+
+    def __init__(self, t1: TableSegment, t2: TableSegment):
+        self.t1, self.t2 = t1, t2
+        self.cols1, self.cols2 = _check_consistent(t1, t2)
+        self.raw = _raw_columns(t1, t2, self.cols1, self.cols2)
+        self.kh = F.xxhash64(*[F.col(_knorm(i)) for i in range(len(t1.key_columns))])
+        self.a = _annotated_keys(t1, self.cols1, self.raw).persist()
+        self.b = _annotated_keys(t2, self.cols2, self.raw).persist()
+        self.persisted = [self.a, self.b]
+
+    def first_level(self) -> int:
+        return DEFAULT_N_BUCKETS
+
+    def digests(self, n: int):
+        return _paired_digest(self.a, self.b, self.kh, n)
+
+    def rows_b(self, ids: List[int], n: int) -> DataFrame:
+        return _restrict(self.b, self.kh, ids, n)
+
+    def emit_b(self, out_names: List[str], bad_keys: DataFrame) -> DataFrame:
+        return _emit(self.t2, self.cols2, out_names, "+", bad_keys, self.raw)
+
+
 def hash_diff(t1: TableSegment, t2, n_buckets: Optional[int] = None) -> DataFrame:
     """Diff DataFrame (sign, *columns-of-table-1's-names), duplicate-PK-aware:
     emit ALL rows of every PK whose row *multiset* differs between sides —
@@ -277,42 +292,35 @@ def hash_diff(t1: TableSegment, t2, n_buckets: Optional[int] = None) -> DataFram
     emits a PK with 2+ equal rows per side when its segment was downloaded,
     hashdiff_tables.py:62-69 — an artifact of segmentation, not reproduced.)
 
-    t2 is a TableSegment (a Spark pair) or a remote.RemoteSide (a remote
-    pair, normally through remote.hash_diff_remote, which first renders
-    t1's numbers at the remote's scales). The level policy is the same for
-    both; the pair decides the column form, the key hash, where B's
-    digests (_paired_digest) and rows come from, and the fine gate.
-
-    n_buckets=None auto-sizes a two-level digest scheme (coarse prune +
-    fine isolate, the fine buckets nested in the coarse ones); an explicit
-    positive int forces one fixed level.
+    t2 is a TableSegment (_SparkPair) or a remote.RemoteSide
+    (remote.RemotePair); the pair decides the column form, the key hash,
+    where B's digests and rows come from, and the levels: n_buckets=None
+    auto-sizes them (a Spark pair: coarse prune + fine isolate, nested; a
+    remote pair: one level), an explicit positive int forces one level.
 
     Cache shape: only (checksum, keys) per row is persisted — one long and
     the keys no matter how wide the table, so the cache never becomes the
     table. A Spark pair takes both in the form join_diff compares each
     column: raw where both sides share an exact type (_raw_columns), else
-    its normalized string. A remote pair, whose engine hashes canonical
-    strings, takes the strings and the reference checksum, plus the cached
-    key hash. The rows of the differing PKs are then re-read from the
-    sources with a left-semi join: the sources are scanned twice, but the
-    second scan is pruned to the differing keys; a remote pair's '+' rows
-    are its fetched dirty-bucket rows, cached.
+    its normalized string; a remote pair, the canonical strings and the
+    reference checksum. The rows of the differing PKs are then re-read
+    from the sources with a left-semi join: the sources are scanned twice,
+    but the second scan is pruned to the differing keys; a remote pair's
+    '+' rows are its cached fetched rows.
     """
     if n_buckets is not None and n_buckets < 1:
         raise ValueError(f"n_buckets must be a positive int, got {n_buckets!r}")
-    remote = not isinstance(t2, TableSegment)
-    cols1, cols2 = [list(t1.relevant_columns)] * 2 if remote else _check_consistent(t1, t2)
-    raw = None if remote else _raw_columns(t1, t2, cols1, cols2)
+    if isinstance(t2, TableSegment):
+        pair = _SparkPair(t1, t2)
+    else:
+        from data_diff_spark.operators.remote import RemotePair  # remote imports this module
+
+        pair = RemotePair(t1, t2)
+    t1, cols1, a, kh = pair.t1, pair.cols1, pair.a, pair.kh
     out_names = cols1
     knorm_names = [_knorm(i) for i in range(len(t1.key_columns))]
-    # each level's bucket is pmod(kh, n), so power-of-two levels nest; kh
-    # is the remote's md5 key prefix (cached) or xxhash64 of the cached keys
-    kh = F.col(_KHASH) if remote else F.xxhash64(*[F.col(k) for k in knorm_names])
 
-    a = _annotated_keys(t1, cols1, raw).persist()
-    b = t2 if remote else _annotated_keys(t2, cols2, raw).persist()
-
-    # --- level 1: coarse digests (DEFAULT_N_BUCKETS) ------------------------
+    # --- level 1: coarse digests --------------------------------------------
     # The reference recursively bisects because remote round-trips dominate;
     # in Spark exactly TWO digest levels suffice: a coarse compare whose
     # partial-aggregation traffic is tiny (partitions x 4096 rows) prunes
@@ -321,29 +329,20 @@ def hash_diff(t1: TableSegment, t2, n_buckets: Optional[int] = None) -> DataFram
     # coarse bucket. Measured on a 6M-row / 2%-changed probe: single fixed
     # 4096-bucket level 80s -> two-level design 36s; the zero-diff case
     # pays only the coarse level (7.9s -> 5.3s).
-    coarse_n = n_buckets or DEFAULT_N_BUCKETS
-    bad_ids, dirty_rows, rows_a, rows_b = _paired_digest(a, b, kh, coarse_n)
+    coarse_n = n_buckets or pair.first_level()
+    bad_ids, dirty_rows, rows_a, rows_b = pair.digests(coarse_n)
     a_bad = _restrict(a, kh, bad_ids, coarse_n)
-    b_bad = b if remote else _restrict(b, kh, bad_ids, coarse_n)
-    level_n = coarse_n
+    b_bad = pair.rows_b(bad_ids, coarse_n)
 
     # --- level 2: fine digests over the dirty-coarse rows only --------------
-    # ...unless the dirty-coarse rows are ALREADY few: for a Spark pair,
-    # phase 2's per-key multiset compare over <2M narrow rows costs less
-    # than another digest round-trip, so the fine level only pays for
-    # itself when it can prune a big set; a remote pair downloads up to
-    # the reference's segment threshold. Exact dirty-row count comes free
-    # from the coarse digests.
+    # ...unless the dirty-coarse rows are ALREADY few: phase 2's per-key
+    # multiset compare over <2M narrow rows costs less than another digest
+    # round-trip, so the fine level only pays for itself when it can prune
+    # a big set. Exact dirty-row count comes free from the coarse digests.
     extra_handles: List[DataFrame] = []
-    fine_min = _REMOTE_FINE_MIN_ROWS if remote else _FINE_LEVEL_MIN_ROWS
-    if n_buckets is None and bad_ids and dirty_rows > fine_min:
+    if n_buckets is None and bad_ids and pair.fine_level and dirty_rows > _FINE_LEVEL_MIN_ROWS:
         fine_n = 1 << max(rows_a // _AUTO_ROWS_PER_BUCKET, 1).bit_length()
-        if fine_n > coarse_n and remote:
-            # the remote's SQL needs the fine ids, so they are compared on
-            # the driver; the remote digests only the dirty coarse buckets
-            bad_ids = _paired_digest(a_bad, b, kh, fine_n, within=(coarse_n, bad_ids))[0]
-            a_bad, level_n = _restrict(a_bad, kh, bad_ids, fine_n), fine_n
-        elif fine_n > coarse_n:
+        if fine_n > coarse_n:
             # The dirty fine-bucket set must NEVER round-trip through the
             # Python driver when it is large: at a ~2% uniform diff rate
             # over 60M rows/side, ~2M of the 8.4M fine buckets mismatch,
@@ -375,21 +374,6 @@ def hash_diff(t1: TableSegment, t2, n_buckets: Optional[int] = None) -> DataFram
             else:
                 ids_df.unpersist()
 
-    if remote:
-        # B's rows come from the remote: the dirty buckets' rows by an IN
-        # list, or every row once most buckets are dirty (a giant IN list
-        # makes the remote re-hash every row to keep rows it would keep
-        # anyway), and then A's rows are not restricted either. Cached: read
-        # by phase 2 and by the '+' emission, so the remote runs the fetch
-        # once. The fetched rows carry t1's types, so t1's key form applies.
-        fetch_ids = bad_ids if len(bad_ids) <= max(1024, level_n // 4) else None
-        if fetch_ids is None:
-            a_bad = a
-        schema = T.StructType([t1.schema[c] for c in cols1] + [T.StructField(_CKS, T.LongType())])
-        b = b_bad = t2.fetch_bucket_rows(t1.df.sparkSession, schema, level_n, fetch_ids).select(
-            *cols1, _CKS, *[k.alias(n) for k, n in zip(_key_norm(t1, cols1), knorm_names)]
-        ).persist()
-
     # Phase 2 — the diff_sets decision (hashdiff_tables.py:30-84): the same
     # digest kernel per cached key over the surviving narrow rows, one
     # map-side-combined aggregation. Only the differing KEY SET is consumed
@@ -406,12 +390,11 @@ def hash_diff(t1: TableSegment, t2, n_buckets: Optional[int] = None) -> DataFram
         if bad_cached.count() <= _BROADCAST_KEYS_LIMIT
         else bad_cached
     )
-    plus = (_emit_rows(b, out_names, "+", bad_keys) if remote
-            else _emit(t2, cols2, out_names, "+", bad_keys, raw))
-    out = _emit(t1, cols1, out_names, "-", bad_keys, raw).unionAll(plus)
+    out = _emit(t1, cols1, out_names, "-", bad_keys, pair.raw).unionAll(
+        pair.emit_b(out_names, bad_keys))
     # Caller-managed cache lifecycle: the result is lazy, so the persisted
     # frames must outlive it. DiffResult.unpersist() (and the CLI) release
     # them once the diff is materialized.
-    out._ddspark_persisted = [a, b, bad_cached, *extra_handles]
+    out._ddspark_persisted = [*pair.persisted, bad_cached, *extra_handles]
     out._ddspark_stats = _key_stats(per_key, rows_a, rows_b)
     return out

@@ -4,16 +4,16 @@ engine that computes its own bucket digests.
 This is the reference's core scenario — diff a table you can scan with
 Spark against one that lives in PostgreSQL/Snowflake/DuckDB — re-expressed
 for the bucketed algorithm (operators/hashdiff.py): the remote side never
-ships rows for matching buckets; per digest level it runs ONE query
+ships rows for matching buckets; it runs ONE digest query
 
     SELECT bucket, count(*), sum(md5_as_int(fingerprint(normalized cols)))
-    [WHERE coarse bucket IN (dirty coarse ids)]  GROUP BY bucket
+    GROUP BY bucket
 
 using the exact checksum formula of the reference's dialects (bit-identical
 to our normalize.py — that equivalence is what the golden tests pin), and
 ships only digest rows plus the rows of mismatched buckets. The diff is
-hashdiff.hash_diff with this side as its second side: its levels, phase 2
-and emission; hash_diff_remote only matches the scales first.
+hashdiff.hash_diff with this side as its second side: its phase 2 and
+emission, with RemotePair's choices (one level, rows fetched once).
 
 Three layers, mirroring the reference's dialect/adapter split
 (data_diff/databases/base.py + the 13 per-database files):
@@ -22,13 +22,12 @@ Three layers, mirroring the reference's dialect/adapter split
                   md5->int48 checksum, the bucket hash). Adding an engine
                   = the reference's md5_as_int/normalize_* recipe for it
                   (~10 lines).
-  RemoteSide      the second-side contract hash_diff consumes:
-                  bucket_digests(n, within) + fetch_bucket_rows(). It
-                  renders the digest and fetch SQL once for every adapter
-                  (within= restricts a digest to dirty coarse buckets with
-                  the fetch's where clause); an adapter implements only
-                  execution: _query(sql) -> rows (a DB-API default) and
-                  _frame(spark, schema, sql) -> DataFrame.
+  RemoteSide      the second-side contract hash_diff consumes (through
+                  RemotePair): bucket_digests() + fetch_bucket_rows(). It
+                  renders the digest and fetch SQL once for every adapter;
+                  an adapter implements only execution: _query(sql) -> rows
+                  (a DB-API default) and _frame(spark, schema, sql) ->
+                  DataFrame.
   DuckDBSide      in-process DB-API adapter (DuckDB stands in for any
                   reference dialect available as a local connection).
   SQLiteSide      in-process stdlib sqlite3 adapter — the THIRD dialect
@@ -43,11 +42,10 @@ Three layers, mirroring the reference's dialect/adapter split
                   (tests/test_jdbc_derby.py); other tests inject a reader
                   that routes the generated SQL to DuckDB.
 
-Scale notes: network transfer is O(digest rows + differing rows), same as
-the reference's checksum-then-download model (4096 digest rows on a clean
-pair); the Spark side stays fully distributed. Bucket alignment uses a
-cross-engine-stable key hash (md5-based, not xxhash64 — xxhash64 exists
-only in Spark).
+Scale notes: network transfer is O(n_buckets + differing rows), same as the
+reference's checksum-then-download model; the Spark side stays fully
+distributed. Bucket alignment uses a cross-engine-stable key hash
+(md5-based, not xxhash64 — xxhash64 exists only in Spark).
 """
 
 from __future__ import annotations
@@ -60,8 +58,25 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_diff_spark.constants import CHECKSUM_OFFSET, DEFAULT_NUMERIC_PRECISION
-from data_diff_spark.operators.hashdiff import _CKS, hash_diff
+from data_diff_spark.normalize import checksum_sum, checksum_value
+from data_diff_spark.operators.hashdiff import (
+    _AUTO_ROWS_PER_BUCKET,
+    _BUCKET,
+    _CKS,
+    _KHASH,
+    _annotated_keys,
+    _bucketed,
+    _dirty_buckets,
+    _emit_rows,
+    _key_norm,
+    _knorm,
+    _md5_key_hash,
+    _restrict,
+    hash_diff,
+)
 from data_diff_spark.table import TableSegment
+
+_MAX_BUCKETS = 1 << 20  # the one digest level's cap: 16 rows a bucket up to ~16.7M rows
 
 _DECIMAL_RE = re.compile(r"(?:DECIMAL|NUMERIC)\s*\(\s*\d+\s*,\s*(\d+)\s*\)")
 _FLOAT_TYPES = ("DOUBLE", "FLOAT", "REAL", "DOUBLE PRECISION", "FLOAT8", "FLOAT4")
@@ -170,7 +185,7 @@ class RemoteDialect:
 
     def bucket_sql(self, key_fp: str, n_buckets: int) -> str:
         """First 8 md5 hex digits of the key fingerprint, mod n_buckets —
-        must match pmod of hashdiff's cached __khash__ bit-for-bit."""
+        must match pmod of hashdiff._md5_key_hash bit-for-bit."""
         raise NotImplementedError
 
 
@@ -645,26 +660,12 @@ def _fingerprint_sql(dialect: RemoteDialect, columns: Sequence[str],
     return dialect.concat_ws_sql(parts)
 
 
-def _bucket_where_sql(dialect: RemoteDialect, key_columns: Sequence[str],
-                      types: Mapping[str, str], n_buckets: int,
-                      bucket_ids: Optional[Sequence[int]]) -> str:
-    """' where <bucket among n_buckets> in (ids)', or '' when ids=None or
-    names every bucket."""
-    if bucket_ids is None or len(bucket_ids) >= n_buckets:
-        return ""
-    bucket = dialect.bucket_sql(_fingerprint_sql(dialect, key_columns, types), n_buckets)
-    return f" where {bucket} in ({', '.join(str(int(b)) for b in bucket_ids)})"
-
-
 def digest_query_sql(dialect: RemoteDialect, relation_sql: str,
                      key_columns: Sequence[str], columns: Sequence[str],
-                     types: Mapping[str, str], n_buckets: int,
-                     within: Optional[Tuple[int, Sequence[int]]] = None) -> str:
-    """The ONE remote aggregation query: (bucket, count, checksum-sum),
-    restricted to the coarser buckets within = (n, ids) when given."""
+                     types: Mapping[str, str], n_buckets: int) -> str:
+    """The ONE remote aggregation query: (bucket, count, checksum-sum)."""
     cks = dialect.md5_as_int_sql(_fingerprint_sql(dialect, columns, types))
     bucket = dialect.bucket_sql(_fingerprint_sql(dialect, key_columns, types), n_buckets)
-    where = _bucket_where_sql(dialect, key_columns, types, *within) if within else ""
     a = dialect.alias_sql
     if not dialect.group_by_ordinal:
         # Engines whose GROUP BY can't reference select-list ordinals (and
@@ -674,12 +675,12 @@ def digest_query_sql(dialect: RemoteDialect, relation_sql: str,
             f"select {a('bucket')}, count(*) as {a('cnt')}, "
             f"cast(sum({a('cks')}) as bigint) as {a('cks')} "
             f"from (select {bucket} as {a('bucket')}, {cks} as {a('cks')} "
-            f"from {relation_sql}{where}) t group by {a('bucket')}"
+            f"from {relation_sql}) t group by {a('bucket')}"
         )
     return (
         f"select {bucket} as {a('bucket')}, count(*) as {a('cnt')}, "
         f"cast(sum({cks}) as bigint) as {a('cks')} "
-        f"from {relation_sql}{where} group by 1"
+        f"from {relation_sql} group by 1"
     )
 
 
@@ -692,7 +693,10 @@ def fetch_query_sql(dialect: RemoteDialect, relation_sql: str,
     every row (the most-buckets-dirty degenerate case, where a per-row
     bucket filter costs more than it saves)."""
     cks = dialect.md5_as_int_sql(_fingerprint_sql(dialect, columns, types))
-    where = _bucket_where_sql(dialect, key_columns, types, n_buckets, bucket_ids)
+    where = ""
+    if bucket_ids is not None:
+        bucket = dialect.bucket_sql(_fingerprint_sql(dialect, key_columns, types), n_buckets)
+        where = f" where {bucket} in ({', '.join(str(int(b)) for b in bucket_ids)})"
     sel = ", ".join(dialect.select_col_sql(c, types[c]) for c in columns)
     return f"select {sel}, {cks} as {dialect.alias_sql(_CKS)} from {relation_sql}{where}"
 
@@ -701,7 +705,7 @@ def fetch_query_sql(dialect: RemoteDialect, relation_sql: str,
 
 
 class RemoteSide:
-    """Second-side contract consumed by hash_diff. This base renders the
+    """Second-side contract consumed by hash_diff (RemotePair). This base renders the
     digest and fetch SQL for every adapter; a subclass sets dialect,
     relation_sql, key_columns, columns (keys first, positionally paired
     with the Spark side's relevant_columns) and types (column -> engine
@@ -722,14 +726,11 @@ class RemoteSide:
         in order; values may still carry the engine's own types."""
         raise NotImplementedError
 
-    def bucket_digests(self, n_buckets: int,
-                       within: Optional[Tuple[int, Sequence[int]]] = None,
-                       ) -> Sequence[Tuple[int, int, Optional[int]]]:
-        """[(bucket, count, checksum_sum)] — ONE remote aggregation query,
-        over the rows of the coarser buckets within = (n, ids) if given."""
+    def bucket_digests(self, n_buckets: int) -> Sequence[Tuple[int, int, Optional[int]]]:
+        """[(bucket, count, checksum_sum)] — ONE remote aggregation query."""
         return self._query(digest_query_sql(
             self.dialect, self.relation_sql, self.key_columns, self.columns,
-            self.types, n_buckets, within))
+            self.types, n_buckets))
 
     def fetch_bucket_rows(self, spark: SparkSession, schema: T.StructType,
                           n_buckets: int,
@@ -993,29 +994,74 @@ def _match_remote_scales(t1: TableSegment, remote: RemoteSide) -> TableSegment:
     return t1.with_(precision_overrides=overrides)
 
 
-def hash_diff_remote(
-    t1: TableSegment,
-    remote: RemoteSide,
-    n_buckets: Optional[int] = None,
-) -> DataFrame:
-    """Diff a Spark-side segment against a remote-engine side: hash_diff
-    with the remote as its second side, after rendering t1's numbers at
-    the remote's scales (_match_remote_scales).
+class RemotePair:
+    """A remote second side's choices for hashdiff.hash_diff: t1's numbers
+    rendered at the remote's scales, canonical strings and the reference
+    checksum (raw=None), the md5 key prefix cached as the key hash, ONE
+    digest level, and B's rows fetched once.
 
-    Both engines compute (bucket, count, sum cks) per level, so only
-    digests cross the wire: at most 4096 rows on a clean pair. When the
-    dirty coarse buckets hold more than 16384 rows (the reference's
-    download threshold), an auto-sized diff (n_buckets=None) digests them
-    again at ~16 rows per bucket. The rows of the dirty buckets are then
-    fetched from the remote, by an IN list or, once most buckets are
-    dirty, the whole relation; the per-key digest kernel compares them with
-    the Spark side's cached (checksum, normalized key) rows, and the
-    differing keys' rows are emitted — '-' by re-reading the Spark source,
-    '+' from the fetched rows.
-    """
-    if n_buckets is not None and n_buckets < 1:
-        raise ValueError(f"n_buckets must be a positive int, got {n_buckets!r}")
-    cols = list(t1.relevant_columns)
-    if len(cols) != len(remote.columns):
-        raise ValueError(f"column arity mismatch: {cols} vs {remote.columns}")
-    return hash_diff(_match_remote_scales(t1, remote), remote, n_buckets)
+    The level has ~_AUTO_ROWS_PER_BUCKET rows a bucket (counted on A's
+    cache, which the digest then reads), at most _MAX_BUCKETS: small
+    buckets keep the fetch proportional to the diff. No coarse level goes
+    first: each level is a full remote scan while its digest rows cost
+    next to nothing (DuckDB, 1.2M lineitem rows: 6.4 s at 4096 buckets and
+    at 131072), so a coarse level would slow every dirty pair by a scan."""
+
+    fine_level = False
+
+    def __init__(self, t1: TableSegment, remote: RemoteSide):
+        if not isinstance(remote, RemoteSide):
+            raise TypeError(f"second side must be a TableSegment or a RemoteSide, "
+                            f"got {type(remote).__name__}")
+        cols = list(t1.relevant_columns)
+        if len(cols) != len(remote.columns):
+            raise ValueError(f"column arity mismatch: {cols} vs {remote.columns}")
+        self.t1, self.cols1, self.raw = _match_remote_scales(t1, remote), cols, None
+        self.remote = remote
+        self.kh = F.col(_KHASH)
+        keys = [_knorm(i) for i in range(len(t1.key_columns))]
+        self.a = _annotated_keys(self.t1, cols).withColumn(_KHASH, _md5_key_hash(keys)).persist()
+        self.persisted = [self.a]
+
+    def first_level(self) -> int:
+        rows = self.a.count()
+        return min(1 << max(rows // _AUTO_ROWS_PER_BUCKET, 1).bit_length(), _MAX_BUCKETS)
+
+    def digests(self, n: int):
+        """Both sides' digests, A's through Arrow (no Row objects), compared
+        on the driver."""
+        hi, lo = checksum_sum(_CKS)
+        own = _bucketed(self.a, self.kh, n).groupBy(_BUCKET).agg(
+            F.count(F.lit(1)), hi, lo).toArrow()
+        da = {k: (c, checksum_value(h, l))
+              for k, c, h, l in zip(*(col.to_pylist() for col in own.columns))}
+        db = {int(k): (int(c), None if s is None else int(s))
+              for k, c, s in self.remote.bucket_digests(n)}
+        return _dirty_buckets({k: (da.get(k, (0, None)), db.get(k, (0, None)))
+                               for k in da.keys() | db.keys()})
+
+    def rows_b(self, ids: List[int], n: int) -> DataFrame:
+        """The remote rows of the dirty buckets: by an IN list, or, once
+        more than a quarter are dirty, every row, restricted here. Cached
+        for phase 2 and the '+' emission; they carry t1's types, so t1's
+        key form applies."""
+        fetch_ids = ids if len(ids) <= max(1024, n // 4) else None
+        t1, cols = self.t1, self.cols1
+        keys = [_knorm(i) for i in range(len(t1.key_columns))]
+        schema = T.StructType([t1.schema[c] for c in cols] + [T.StructField(_CKS, T.LongType())])
+        self.b = self.remote.fetch_bucket_rows(t1.df.sparkSession, schema, n, fetch_ids).select(
+            *cols, _CKS, *[k.alias(name) for k, name in zip(_key_norm(t1, cols), keys)]
+        ).persist()
+        self.persisted.append(self.b)
+        return self.b if fetch_ids is not None else _restrict(self.b, _md5_key_hash(keys), ids, n)
+
+    def emit_b(self, out_names: List[str], bad_keys: DataFrame) -> DataFrame:
+        return _emit_rows(self.b, out_names, "+", bad_keys)
+
+
+def hash_diff_remote(t1: TableSegment, remote: RemoteSide,
+                     n_buckets: Optional[int] = None) -> DataFrame:
+    """Diff a Spark-side segment against a remote-engine side: hash_diff
+    with the remote as its second side (RemotePair). Only digests and the
+    rows of the dirty buckets cross the wire."""
+    return hash_diff(t1, remote, n_buckets)
