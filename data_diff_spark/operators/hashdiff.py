@@ -278,6 +278,9 @@ class _SparkPair:
     def digests(self, n: int):
         return _paired_digest(self.a, self.b, self.kh, n)
 
+    def rows_a(self, ids: List[int], n: int) -> DataFrame:
+        return _restrict(self.a, self.kh, ids, n)
+
     def rows_b(self, ids: List[int], n: int) -> DataFrame:
         return _restrict(self.b, self.kh, ids, n)
 
@@ -331,7 +334,7 @@ def hash_diff(t1: TableSegment, t2, n_buckets: Optional[int] = None) -> DataFram
     # pays only the coarse level (7.9s -> 5.3s).
     coarse_n = n_buckets or pair.first_level()
     bad_ids, dirty_rows, rows_a, rows_b = pair.digests(coarse_n)
-    a_bad = _restrict(a, kh, bad_ids, coarse_n)
+    a_bad = pair.rows_a(bad_ids, coarse_n)
     b_bad = pair.rows_b(bad_ids, coarse_n)
 
     # --- level 2: fine digests over the dirty-coarse rows only --------------
