@@ -115,8 +115,11 @@ def diff_tables(
     AUTO resolves to joindiff: inside one Spark engine the join is always
     available and AQE-optimized (the reference picks joindiff only when both
     sides share a database, __init__.py:152-155 — here they always do).
-    hashdiff of two Spark segments hashes each column in the form joindiff
-    compares it, so its checksums are not the reference's; the reference
+    joindiff and hashdiff compare each column pair in one form
+    (normalize.compared_forms: raw, bigint across integer widths, else the
+    canonical string), so they give the same rows on unique keys. hashdiff
+    of two Spark segments hashes that form, so its checksums are not the
+    reference's; the reference
     checksum, verifiable against a reference-dialect database, comes from
     operators.remote.hash_diff_remote (the second side in that database)
     and TableSegment.count_and_checksum.

@@ -13,13 +13,19 @@ checksums bit-identical with every reference dialect (DuckDB, Postgres, ...)
 (str_to_checksum) and by the DuckDB oracle queries. Where a cast gives
 the same string as that dialect's recipe, Spark builds it with the cast.
 
+Both diff operators take each column pair's form from compared_forms:
+raw where both sides hold one exact type, bigint across integer widths,
+the canonical string otherwise. join_diff joins and flags on those forms,
+a Spark-Spark hash_diff hashes, groups and joins them, so the two give
+the same rows on unique keys.
+
 Everything here is a plain Column expression: JVM-side, whole-stage
 codegen'd, no Python in the hot path.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping, Optional, Sequence, Tuple, Union
+from typing import Callable, Iterable, List, Mapping, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -166,34 +172,77 @@ def normalize_as_string(
     return col.cast("string")
 
 
+def canonical_column(
+    col: Column, data_type: T.DataType, precision: Optional[int] = None, kind: Optional[str] = None
+) -> Column:
+    """One column's canonical string. kind marks a string column with a
+    refined semantic kind (refine.py / the reference's _refine_coltypes):
+    'uuid' → trim, 'json' → structural canonicalization, 'alphanum' →
+    comparison-neutral (detection parity only; the reference uses it for
+    key-space arithmetic Spark doesn't need)."""
+    if kind == "uuid":
+        return normalize_uuid(col)
+    if kind == "json":
+        return normalize_json(col)
+    return normalize_as_string(col, data_type, precision)
+
+
 def normalized_columns(
     schema: T.StructType,
     columns: Sequence[str],
     precision_overrides: Optional[Mapping[str, int]] = None,
     kind_overrides: Optional[Mapping[str, str]] = None,
 ) -> list[Column]:
-    """Normalize each named column per its schema type; keeps original names.
-
-    kind_overrides marks string columns with refined semantic kinds
-    (refine.py / the reference's _refine_coltypes): 'uuid' → trim,
-    'json' → structural canonicalization, 'alphanum' → comparison-neutral
-    (detection parity only; the reference uses it for key-space
-    arithmetic Spark doesn't need).
-    """
-    by_name = {f.name: f for f in schema.fields}
+    """Each named column's canonical string (canonical_column); keeps the
+    original names."""
     overrides = precision_overrides or {}
     kinds = kind_overrides or {}
+    return [canonical_column(F.col(name), schema[name].dataType, overrides.get(name), kinds.get(name))
+            .alias(name) for name in columns]
+
+
+# types whose raw values compare as they are when both sides hold the same
+# one. Floats too: their canonical string rounds to 6 digits, but eqNullSafe,
+# xxhash64, groupBy and joins all treat 0.0 as -0.0 and every NaN as one value
+_RAW_TYPES = (T.IntegralType, T.DecimalType, T.FloatType, T.DoubleType, T.StringType,
+              T.DateType, T.TimestampType, T.TimestampNTZType, T.BooleanType, T.BinaryType)
+
+RAW, BIGINT, CANONICAL = "raw", "bigint", "canonical"
+
+
+def compared_forms(
+    t1, t2, cols1: Sequence[str], cols2: Sequence[str],
+    col1: Callable[[str], Column] = F.col, col2: Callable[[str], Column] = F.col,
+) -> List[Tuple[str, Column, Column]]:
+    """THE comparison rule of both diff operators: for each compared column
+    pair of segments t1 and t2 (cols1[i] with cols2[i], the keys first), its
+    form and each side's Column in it, the side's column read by col1/col2:
+
+      RAW        both sides hold one exact _RAW_TYPES type and neither has
+                 a precision or kind override: the columns as they are
+      BIGINT     both sides are integral (of different widths, or with a
+                 precision override) and neither has a kind override: both
+                 cast to bigint, which is equal exactly when the canonical
+                 digit strings are
+      CANONICAL  every other pair: each side's canonical string
+                 (canonical_column), so a date never equals a timestamp nor
+                 an int the string '01', and maps, arrays and structs
+                 compare as their JSON
+
+    A RAW pair only separates what the canonical strings merge (a NULL vs
+    a literal '<null>' string, two instants of a DST fall-back hour)."""
     out = []
-    for name in columns:
-        f = by_name[name]
-        kind = kinds.get(name)
-        if kind == "uuid":
-            expr = normalize_uuid(F.col(name))
-        elif kind == "json":
-            expr = normalize_json(F.col(name))
+    for c1, c2 in zip(cols1, cols2):
+        d1, d2 = t1.schema[c1].dataType, t2.schema[c2].dataType
+        p1, p2 = t1.precision_overrides.get(c1), t2.precision_overrides.get(c2)
+        k1, k2 = t1.kind_overrides.get(c1), t2.kind_overrides.get(c2)
+        if d1 == d2 and isinstance(d1, _RAW_TYPES) and p1 is None and p2 is None and not (k1 or k2):
+            out.append((RAW, col1(c1), col2(c2)))
+        elif isinstance(d1, T.IntegralType) and isinstance(d2, T.IntegralType) and not (k1 or k2):
+            out.append((BIGINT, col1(c1).cast("bigint"), col2(c2).cast("bigint")))
         else:
-            expr = normalize_as_string(F.col(name), f.dataType, overrides.get(name))
-        out.append(expr.alias(name))
+            out.append((CANONICAL, canonical_column(col1(c1), d1, p1, k1),
+                        canonical_column(col2(c2), d2, p2, k2)))
     return out
 
 

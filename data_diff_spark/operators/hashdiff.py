@@ -8,11 +8,10 @@ round-trip to a remote database is expensive. In Spark a single shuffle
 replaces the whole recursion tree (SURVEY.md §4.3):
 
   1. per row: one 8-byte checksum, the pair's own (_annotated_keys):
-     xxhash64 over each column in the form join_diff compares it -- raw
-     where both sides hold one exact type (_raw_columns), else its
-     normalized string. Only it and the keys (in that same form) are
-     cached, and bucket = pmod(xxhash64(keys), n_buckets) is recomputed
-     from them at each level
+     xxhash64 over each column in the form join_diff compares it too
+     (normalize.compared_forms: raw, bigint or canonical string). Only it
+     and the keys (in that same form) are cached, and bucket =
+     pmod(xxhash64(keys), n_buckets) is recomputed from them at each level
   2. both sides: one groupBy(bucket) over the side-tagged union, giving
      each side's (count, sum(checksum)) -- the sum exact as two long
      halves (normalize.checksum_sum), map-side combined partial
@@ -36,17 +35,17 @@ remote PostgreSQL/DuckDB/Snowflake via the reference's segment SQL
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from data_diff_spark.constants import CHECKSUM_MASK, CHECKSUM_OFFSET
+from data_diff_spark.constants import CHECKSUM_MASK, CHECKSUM_OFFSET, NULL_LITERAL
 from data_diff_spark.normalize import (
+    CANONICAL,
     checksum_sum,
+    compared_forms,
     md5_as_int,
-    normalized_columns,
     row_fingerprint,
 )
 from data_diff_spark.operators.joindiff import SIGN_COL, _check_consistent
@@ -67,69 +66,37 @@ def _knorm(i: int) -> str:
     return f"__knorm{i}__"
 
 
-# types whose raw values join_diff compares as they are. Floats too: their
-# canonical string rounds to 6 digits, but join_diff compares same-typed
-# floats raw, and xxhash64, groupBy and the null-safe semi-join all treat
-# 0.0 as -0.0 and every NaN as one value, as eqNullSafe does
-_RAW_TYPES = (T.IntegralType, T.DecimalType, T.FloatType, T.DoubleType, T.StringType,
-              T.DateType, T.TimestampType, T.TimestampNTZType, T.BooleanType, T.BinaryType)
+def _side(forms: List[Tuple[str, Column]], nkeys: int) -> Tuple[List[Column], List[Column]]:
+    """One side's (form, column) per compared column, keys first -> its
+    compared columns, and its keys as hashed, grouped and joined: a
+    canonical key with NULL as '<null>'. Like the reference, which aligns
+    segments by key value (diff_tables.py:377-391), that merges keys whose
+    strings collide, e.g. a NULL int key with a '<null>' string key."""
+    keys = [F.coalesce(c, F.lit(NULL_LITERAL)) if form == CANONICAL else c
+            for form, c in forms[:nkeys]]
+    return [c for _, c in forms], keys
 
 
-def _raw_columns(t1: TableSegment, t2: TableSegment,
-                 cols1: List[str], cols2: List[str]) -> List[bool]:
-    """Per compared column pair (the keys first): True when both sides
-    hold it in the same _RAW_TYPES type with no precision or kind
-    override, so its raw values are hashed, grouped and joined as they
-    are, as join_diff compares them. A raw column only separates what the
-    canonical strings merge (a NULL vs a literal '<null>' string, two
-    instants of a DST fall-back hour)."""
-    def plain(t: TableSegment, c: str) -> bool:
-        return t.precision_overrides.get(c) is None and not t.kind_overrides.get(c)
-    return [t1.schema[c1].dataType == t2.schema[c2].dataType and plain(t1, c1) and plain(t2, c2)
-            and isinstance(t1.schema[c1].dataType, _RAW_TYPES)
-            for c1, c2 in zip(cols1, cols2)]
-
-
-def _key_norm(t: TableSegment, cols: List[str], raw: Optional[List[bool]] = None) -> List[Column]:
-    """The key columns as hashed, grouped and joined: the raw column where
-    `raw` says so, else the normalized string (NULL as '<null>'). The
-    string form aligns the sides by key VALUE even when key columns differ
-    in name, physical type or kind override (the reference aligns segments
-    by key value, diff_tables.py:377-391); like the reference, it merges
-    keys whose strings collide, e.g. a NULL int key with a '<null>' string
-    key."""
-    nkeys = len(t.key_columns)
-    normd = normalized_columns(t.schema, cols[:nkeys], t.precision_overrides, t.kind_overrides)
-    return [
-        F.col(c) if raw and raw[i] else F.coalesce(n, F.lit("<null>"))
-        for i, (c, n) in enumerate(zip(cols, normd))
-    ]
-
-
-def _annotated_keys(t: TableSegment, cols: List[str], raw: Optional[List[bool]] = None) -> DataFrame:
+def _annotated_keys(t: TableSegment, vals: List[Column], keys: List[Column],
+                    md5: bool = False) -> DataFrame:
     """(__cks__, __knorm0__ ... __knormK__) ONLY — no other columns. This
-    is the frame hash_diff caches: the keys (raw or normalized strings,
-    _key_norm) and one long per row no matter how wide the table. Bucket
-    ids at any granularity come from the pair's key hash (_bucket_id), so
-    the digest levels are chosen after annotation.
+    is the frame hash_diff caches: the keys in their compared form (_side)
+    and one long per row no matter how wide the table. Bucket ids at any
+    granularity come from the pair's key hash (_bucket_id), so the digest
+    levels are chosen after annotation.
 
-    raw=None (the cross-engine diff) keeps the reference checksum,
-    md5_as_int of the row fingerprint. Given one flag per column, the
-    checksum is the pair's own: xxhash64(v1, isnull(v1), v2, ...) over
-    each column raw or as its normalized string, masked to 48 bits and
-    centred like md5_as_int. The NULL flags keep (x, NULL) apart from
-    (NULL, x): xxhash64 skips NULLs."""
-    normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
-    if raw is None:
-        cks = md5_as_int(row_fingerprint(normd))
+    md5=True (the cross-engine diff, every column canonical) keeps the
+    reference checksum, md5_as_int of the row fingerprint. Otherwise the
+    checksum is the pair's own: xxhash64(v1, isnull(v1), v2, ...) over the
+    compared columns, masked to 48 bits and centred like md5_as_int. The
+    NULL flags keep (x, NULL) apart from (NULL, x): xxhash64 skips NULLs."""
+    if md5:
+        cks = md5_as_int(row_fingerprint(vals))
     else:
-        vals = [F.col(c) if r else n for c, n, r in zip(cols, normd, raw)]
         cks = (F.xxhash64(*[x for v in vals for x in (v, v.isNull())])
                .bitwiseAND(F.lit(CHECKSUM_MASK)) - F.lit(CHECKSUM_OFFSET))
     return t.make_select().select(
-        cks.alias(_CKS),
-        *[k.alias(_knorm(i)) for i, k in enumerate(_key_norm(t, cols, raw))],
-    )
+        cks.alias(_CKS), *[k.alias(_knorm(i)) for i, k in enumerate(keys)])
 
 
 def _md5_key_hash(keys: List[str]) -> Column:
@@ -140,20 +107,20 @@ def _md5_key_hash(keys: List[str]) -> Column:
     return F.conv(F.substring(F.md5(fp), 1, 8), 16, 10).cast("long")
 
 
-def _emit(t: TableSegment, cols: List[str], out_names: List[str], sign: str,
-          bad_keys: DataFrame, raw: Optional[List[bool]] = None) -> DataFrame:
-    """Re-read a side restricted to the PKs phase 2 decided differ; all
-    rows of a differing PK come back, so the emission is the PK's whole
-    row multiset."""
+def _emit(t: TableSegment, cols: List[str], keys: List[Column], out_names: List[str],
+          sign: str, bad_keys: DataFrame) -> DataFrame:
+    """Re-read a side restricted to the PKs phase 2 decided differ (`keys`
+    as cached, _side); all rows of a differing PK come back, so the
+    emission is the PK's whole row multiset."""
     annotated = t.make_select().select(
         *[F.col(c).alias(o) for c, o in zip(cols, out_names)],
-        *[k.alias(_knorm(i)) for i, k in enumerate(_key_norm(t, cols, raw))],
+        *[k.alias(_knorm(i)) for i, k in enumerate(keys)],
     )
     return _emit_rows(annotated, out_names, sign, bad_keys)
 
 
 def _emit_rows(rows: DataFrame, out_names: List[str], sign: str, bad_keys: DataFrame) -> DataFrame:
-    """`rows` (out_names + the keys in _key_norm's form, as cached)
+    """`rows` (out_names + the keys in _side's form, as cached)
     restricted to the differing PKs by a null-safe left-semi join."""
     on = [F.col(f"row.{k}").eqNullSafe(F.col(f"bad.{k}")) for k in bad_keys.columns]
     joined = rows.alias("row").join(bad_keys.alias("bad"), on, "left_semi")
@@ -257,19 +224,22 @@ def _restrict(df: DataFrame, kh: Column, ids: List[int], n: int) -> DataFrame:
 
 class _SparkPair:
     """A Spark second side's choices: each column in join_diff's form
-    (_raw_columns), xxhash64 of the cached keys as the key hash, both
-    sides' digests in one job, B's rows from its own cache, and a fine
-    level past _FINE_LEVEL_MIN_ROWS dirty rows."""
+    (normalize.compared_forms), xxhash64 of the cached keys as the key
+    hash, both sides' digests in one job, B's rows from its own cache,
+    and a fine level past _FINE_LEVEL_MIN_ROWS dirty rows."""
 
     fine_level = True
 
     def __init__(self, t1: TableSegment, t2: TableSegment):
         self.t1, self.t2 = t1, t2
         self.cols1, self.cols2 = _check_consistent(t1, t2)
-        self.raw = _raw_columns(t1, t2, self.cols1, self.cols2)
-        self.kh = F.xxhash64(*[F.col(_knorm(i)) for i in range(len(t1.key_columns))])
-        self.a = _annotated_keys(t1, self.cols1, self.raw).persist()
-        self.b = _annotated_keys(t2, self.cols2, self.raw).persist()
+        forms = compared_forms(t1, t2, self.cols1, self.cols2)
+        nkeys = len(t1.key_columns)
+        vals_a, self.keys_a = _side([(f, a) for f, a, _ in forms], nkeys)
+        vals_b, self.keys_b = _side([(f, b) for f, _, b in forms], nkeys)
+        self.kh = F.xxhash64(*[F.col(_knorm(i)) for i in range(nkeys)])
+        self.a = _annotated_keys(t1, vals_a, self.keys_a).persist()
+        self.b = _annotated_keys(t2, vals_b, self.keys_b).persist()
         self.persisted = [self.a, self.b]
 
     def first_level(self) -> int:
@@ -285,7 +255,7 @@ class _SparkPair:
         return _restrict(self.b, self.kh, ids, n)
 
     def emit_b(self, out_names: List[str], bad_keys: DataFrame) -> DataFrame:
-        return _emit(self.t2, self.cols2, out_names, "+", bad_keys, self.raw)
+        return _emit(self.t2, self.cols2, self.keys_b, out_names, "+", bad_keys)
 
 
 def hash_diff(t1: TableSegment, t2, n_buckets: Optional[int] = None) -> DataFrame:
@@ -304,12 +274,11 @@ def hash_diff(t1: TableSegment, t2, n_buckets: Optional[int] = None) -> DataFram
     Cache shape: only (checksum, keys) per row is persisted — one long and
     the keys no matter how wide the table, so the cache never becomes the
     table. A Spark pair takes both in the form join_diff compares each
-    column: raw where both sides share an exact type (_raw_columns), else
-    its normalized string; a remote pair, the canonical strings and the
-    reference checksum. The rows of the differing PKs are then re-read
-    from the sources with a left-semi join: the sources are scanned twice,
-    but the second scan is pruned to the differing keys; a remote pair's
-    '+' rows are its cached fetched rows.
+    column (normalize.compared_forms); a remote pair, the canonical
+    strings and the reference checksum. The rows of the differing PKs are
+    then re-read from the sources with a left-semi join: the sources are
+    scanned twice, but the second scan is pruned to the differing keys; a
+    remote pair's '+' rows are its cached fetched rows.
     """
     if n_buckets is not None and n_buckets < 1:
         raise ValueError(f"n_buckets must be a positive int, got {n_buckets!r}")
@@ -393,7 +362,7 @@ def hash_diff(t1: TableSegment, t2, n_buckets: Optional[int] = None) -> DataFram
         if bad_cached.count() <= _BROADCAST_KEYS_LIMIT
         else bad_cached
     )
-    out = _emit(t1, cols1, out_names, "-", bad_keys, pair.raw).unionAll(
+    out = _emit(t1, cols1, pair.keys_a, out_names, "-", bad_keys).unionAll(
         pair.emit_b(out_names, bad_keys))
     # Caller-managed cache lifecycle: the result is lazy, so the persisted
     # frames must outlive it. DiffResult.unpersist() (and the CLI) release

@@ -20,7 +20,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_diff_spark.normalize import normalize_as_string
+from data_diff_spark.normalize import compared_forms
 from data_diff_spark.table import TableSegment
 
 _A = "__a_"
@@ -42,29 +42,6 @@ def _check_consistent(t1: TableSegment, t2: TableSegment) -> Tuple[List[str], Li
     return cols1, cols2
 
 
-def _norm_kind(col: Column, dt, p, kind: str | None) -> Column:
-    from data_diff_spark.normalize import normalize_json, normalize_uuid
-
-    if kind == "uuid":
-        return normalize_uuid(col)
-    if kind == "json":
-        return normalize_json(col)
-    return normalize_as_string(col, dt, p)
-
-
-def _value_eq(a: Column, b: Column, dt1, dt2, p1, p2, k1=None, k2=None) -> Column:
-    """NULL-safe equality; when the two sides' physical types differ — or a
-    refined semantic kind (uuid/json, refine.py) applies — compare canonical
-    normalized strings (the reference's cross-type semantics)."""
-    if k1 or k2:
-        return _norm_kind(a, dt1, p1, k1).eqNullSafe(_norm_kind(b, dt2, p2, k2))
-    if dt1 == dt2 and p1 is None and p2 is None:
-        return a.eqNullSafe(b)
-    # differing physical types OR a declared/unified precision (unify.py):
-    # compare canonical normalized strings
-    return normalize_as_string(a, dt1, p1).eqNullSafe(normalize_as_string(b, dt2, p2))
-
-
 def joined_frame(
     t1: TableSegment, t2: TableSegment, null_safe_keys: bool = True
 ) -> Tuple[DataFrame, List[str], List[str]]:
@@ -83,9 +60,6 @@ def joined_frame(
     default; run check_null_keys first). Null-keyed rows, if any survive,
     surface as exclusive rows on both sides instead of matching."""
     cols1, cols2 = _check_consistent(t1, t2)
-    dt1 = {f.name: f.dataType for f in t1.schema.fields}
-    dt2 = {f.name: f.dataType for f in t2.schema.fields}
-
     a = t1.make_select().select(
         F.lit(True).alias(_PRESENT_A), *[F.col(c).alias(_A + c) for c in cols1]
     )
@@ -93,14 +67,13 @@ def joined_frame(
         F.lit(True).alias(_PRESENT_B), *[F.col(c).alias(_B + c) for c in cols2]
     )
 
+    # each pair in its compared form (normalize.compared_forms), built over
+    # the joined columns: a canonical form is part of the join condition or
+    # flag, never a projected column carried through the shuffle
+    forms = compared_forms(t1, t2, cols1, cols2, lambda c: F.col(_A + c), lambda c: F.col(_B + c))
+    nkeys = len(t1.key_columns)
     on = None
-    for k1, k2 in zip(t1.key_columns, t2.key_columns):
-        ka, kb = t1.kind_overrides.get(k1), t2.kind_overrides.get(k2)
-        ca, cb = F.col(_A + k1), F.col(_B + k2)
-        if ka or kb:
-            # refined key kinds (e.g. uuid-in-string): join on canonical form
-            ca = _norm_kind(ca, dt1[k1], t1.precision_overrides.get(k1), ka)
-            cb = _norm_kind(cb, dt2[k2], t2.precision_overrides.get(k2), kb)
+    for _, ca, cb in forms[:nkeys]:
         cond = ca.eqNullSafe(cb) if null_safe_keys else (ca == cb)
         on = cond if on is None else on & cond
     j = a.join(b, on=on, how="full_outer")
@@ -111,16 +84,8 @@ def joined_frame(
     # IS DISTINCT FROM per column across the outer join — exclusive rows
     # count as different in every column, exactly like the reference's
     # is_diff_* flags (joindiff_tables.py:326).
-    nkeys = len(t1.key_columns)
-    flags = []
-    for c1, c2 in zip(cols1[nkeys:], cols2[nkeys:]):
-        eq = _value_eq(
-            F.col(_A + c1), F.col(_B + c2),
-            dt1[c1], dt2[c2],
-            t1.precision_overrides.get(c1), t2.precision_overrides.get(c2),
-            t1.kind_overrides.get(c1), t2.kind_overrides.get(c2),
-        )
-        flags.append((~eq).alias(f"__diff_{c1}"))
+    flags = [(~ca.eqNullSafe(cb)).alias(f"__diff_{c1}")
+             for c1, (_, ca, cb) in zip(cols1[nkeys:], forms[nkeys:])]
 
     j = j.select(
         "*",

@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_diff_spark.constants import CHECKSUM_OFFSET, DEFAULT_NUMERIC_PRECISION
-from data_diff_spark.normalize import checksum_sum, checksum_value
+from data_diff_spark.normalize import CANONICAL, checksum_sum, checksum_value, normalized_columns
 from data_diff_spark.operators.hashdiff import (
     _AUTO_ROWS_PER_BUCKET,
     _BUCKET,
@@ -68,10 +68,10 @@ from data_diff_spark.operators.hashdiff import (
     _bucketed,
     _dirty_buckets,
     _emit_rows,
-    _key_norm,
     _knorm,
     _md5_key_hash,
     _restrict_join,
+    _side,
     hash_diff,
 )
 from data_diff_spark.table import TableSegment
@@ -1005,7 +1005,7 @@ def _in_buckets(df: DataFrame, kh: Column, ids: List[int], n: int) -> DataFrame:
 class RemotePair:
     """A remote second side's choices for hashdiff.hash_diff: t1's numbers
     rendered at the remote's scales, canonical strings and the reference
-    checksum (raw=None), the md5 key prefix cached as the key hash, ONE
+    checksum (md5), the md5 key prefix cached as the key hash, ONE
     digest level, and B's rows fetched once.
 
     The level has ~_AUTO_ROWS_PER_BUCKET rows a bucket (counted on A's
@@ -1024,11 +1024,15 @@ class RemotePair:
         cols = list(t1.relevant_columns)
         if len(cols) != len(remote.columns):
             raise ValueError(f"column arity mismatch: {cols} vs {remote.columns}")
-        self.t1, self.cols1, self.raw = _match_remote_scales(t1, remote), cols, None
+        self.t1, self.cols1 = _match_remote_scales(t1, remote), cols
         self.remote = remote
         self.kh = F.col(_KHASH)
+        t1 = self.t1
+        canonical = normalized_columns(t1.schema, cols, t1.precision_overrides, t1.kind_overrides)
+        vals, self.keys_a = _side([(CANONICAL, c) for c in canonical], len(t1.key_columns))
         keys = [_knorm(i) for i in range(len(t1.key_columns))]
-        self.a = _annotated_keys(self.t1, cols).withColumn(_KHASH, _md5_key_hash(keys)).persist()
+        self.a = (_annotated_keys(t1, vals, self.keys_a, md5=True)
+                  .withColumn(_KHASH, _md5_key_hash(keys)).persist())
         self.persisted = [self.a]
 
     def first_level(self) -> int:
@@ -1061,7 +1065,7 @@ class RemotePair:
         keys = [_knorm(i) for i in range(len(t1.key_columns))]
         schema = T.StructType([t1.schema[c] for c in cols] + [T.StructField(_CKS, T.LongType())])
         self.b = self.remote.fetch_bucket_rows(t1.df.sparkSession, schema, n, fetch_ids).select(
-            *cols, _CKS, *[k.alias(name) for k, name in zip(_key_norm(t1, cols), keys)]
+            *cols, _CKS, *[k.alias(name) for k, name in zip(self.keys_a, keys)]
         ).persist()
         self.persisted.append(self.b)
         return self.b if fetch_ids is not None else _in_buckets(self.b, _md5_key_hash(keys), ids, n)

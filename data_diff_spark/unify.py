@@ -17,8 +17,9 @@ In Spark both sides arrive as native Spark types, so "precision" is:
     Float/Double            -> DEFAULT_NUMERIC_PRECISION fractional digits
     Integer family, Boolean -> 0
 The unified precision is recorded in each segment's precision_overrides,
-which every downstream consumer (normalize.py checksums, joindiff
-_value_eq, hashdiff digests, remote digest SQL) already honors.
+which every downstream consumer (normalize.compared_forms, the one
+comparison rule of join_diff and hash_diff; normalize.py checksums;
+remote digest SQL) already honors.
 
 Unlike the reference (strict=True raises on e.g. temporal-vs-numeric
 pairs), the default here is strict=False: normalize.py genuinely supports

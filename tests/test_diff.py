@@ -739,12 +739,13 @@ def test_hashdiff_null_values_match_joindiff(spark, rows_a, rows_b, n_buckets):
         h.unpersist(True)
 
 
-@pytest.mark.parametrize("case", ["bigint", "int_vs_bigint", "double", "uuid", "unified_ts"])
+@pytest.mark.parametrize("case", ["bigint", "int_vs_bigint", "double", "uuid", "unified_ts", "decimal"])
 def test_hashdiff_key_form_per_pair(spark, case):
     """hash_diff caches a key pair raw only when both sides hold it in one
-    exact type with no override; every other pair caches the canonical
-    string. Each form gives join_diff's rows on unique keys, and the raw
-    form's emission (cached relations aside) renders no '<null>'."""
+    exact type with no override, as bigint when both are integers of
+    different widths; every other pair caches the canonical string. Each
+    form gives join_diff's rows on unique keys, and the raw and bigint
+    forms' emission (cached relations aside) renders no '<null>'."""
     from pyspark.sql import types as T
 
     from data_diff_spark.operators import hashdiff as H
@@ -755,18 +756,23 @@ def test_hashdiff_key_form_per_pair(spark, case):
         "id", "cast(id * 3 as string) as v",
         "nullif(concat(' ', uuid()), '') as u",
         "timestamp_seconds(id * 3600) + make_interval(0, 0, 0, 0, 0, 0, 0.25) as ts")
-    base = base.selectExpr("*", "cast(id as int) as id32", "id / 4D as dbl").localCheckpoint()
+    base = base.selectExpr("*", "cast(id as int) as id32", "id / 4D as dbl",
+                           "cast(id + 0.0045 as decimal(10,4)) as d4",
+                           "cast(id as decimal(10,2)) as d2").localCheckpoint()
     changed = base.withColumn("v", F.when(F.col("id") % 40 == 7, F.lit("new")).otherwise(F.col("v")))
     changed = changed.filter("id != 11").unionByName(
         base.filter("id = 0").selectExpr("id + 1000 as id", "v", "concat(u, 'z') as u",
                                          "ts + make_interval(1) as ts", "id32 + 1000 as id32",
-                                         "dbl + 1000 as dbl"))
+                                         "dbl + 1000 as dbl", "cast(d4 + 1000 as decimal(10,4)) as d4",
+                                         "cast(d2 + 1000 as decimal(10,2)) as d2"))
     key_a, key_b, form = {
         "bigint": ("id", "id", T.LongType()),
-        "int_vs_bigint": ("id32", "id", T.StringType()),
+        "int_vs_bigint": ("id32", "id", T.LongType()),
         "double": ("dbl", "dbl", T.DoubleType()),
         "uuid": ("u", "u", T.StringType()),
         "unified_ts": ("ts", "ts", T.StringType()),
+        # decimal(10,4) id.0045 against decimal(10,2) id.00: equal at the unified scale 2
+        "decimal": ("d4", "d2", T.StringType()),
     }[case]
     t1 = table_segment(base, [key_a], extra_columns=["v"])
     t2 = table_segment(changed, [key_b], extra_columns=["v"])
@@ -775,11 +781,16 @@ def test_hashdiff_key_form_per_pair(spark, case):
     if case == "unified_ts":
         t1, t2 = unify_precisions(t1.with_(precision_overrides={"ts": 3}), t2)
         assert t2.precision_overrides == {"ts": 3}
+    if case == "decimal":
+        t1, t2 = unify_precisions(t1, t2)
+        assert tuple(count_diff_per_column(t1, t2).collect()[0]) == (301, 1, 1, 10)
     d = hash_diff(t1, t2)
     assert d._ddspark_persisted[0].schema[H._knorm(0)].dataType == form
     got = _by_repr(d.collect())
     assert got == _by_repr(join_diff(t1, t2).collect())
     assert len(got) == 2 * 8 + 2
+    if case == "decimal":
+        _assert_one_bucket_rows(t1, t2, got)
 
     exprs, todo = [], [d._jdf.queryExecution().optimizedPlan()]
     while todo:
@@ -792,6 +803,36 @@ def test_hashdiff_key_form_per_pair(spark, case):
     assert any("<null>" in e for e in exprs) == (form == T.StringType())
     for h in d._ddspark_persisted:
         h.unpersist(True)
+
+
+def _assert_one_bucket_rows(t1, t2, rows):
+    """hash_diff with every key in one bucket gives `rows` too."""
+    d = hash_diff(t1, t2, n_buckets=1)
+    assert _by_repr(d.collect()) == rows
+    for h in d._ddspark_persisted:
+        h.unpersist(True)
+
+
+@pytest.mark.parametrize("case", ["date_vs_timestamp", "int_vs_string"])
+def test_cross_family_keys_compare_canonical(spark, case):
+    """A key pair of two type families compares canonical strings in both
+    operators: a date is not its midnight timestamp, and the int 1 is not
+    the string '01' (while 10 is '10'). hash_diff at either bucketing
+    gives join_diff's rows."""
+    base = spark.range(0, 20).selectExpr(
+        "cast(id as int) as i", "lpad(cast(id as string), 2, '0') as s",
+        "date_add(date'2020-01-01', cast(id as int)) as day", "cast(id * 3 as string) as v")
+    base = base.selectExpr("*", "cast(day as timestamp) as ts").localCheckpoint()
+    key_a, key_b, n = {"date_vs_timestamp": ("day", "ts", 40), "int_vs_string": ("i", "s", 20)}[case]
+    t1 = table_segment(base, [key_a], extra_columns=["v"])
+    t2 = table_segment(base, [key_b], extra_columns=["v"])
+    want = _by_repr(join_diff(t1, t2).collect())
+    assert len(want) == n
+    d = hash_diff(t1, t2)
+    assert _by_repr(d.collect()) == want
+    for h in d._ddspark_persisted:
+        h.unpersist(True)
+    _assert_one_bucket_rows(t1, t2, want)
 
 
 def _hash_inputs(df):
@@ -813,20 +854,72 @@ def _hash_inputs(df):
     return []
 
 
-@pytest.mark.parametrize("case", ["exact", "double", "int_vs_bigint", "uuid"])
+def _subexpressions(e):
+    out, todo = [], [e]
+    while todo:
+        x = todo.pop()
+        out.append(x)
+        todo.extend(x.children().apply(i) for i in range(x.children().size()))
+    return out
+
+
+def _join_comparisons(df):
+    """(join condition, {flag name: its expression}) in df's optimized plan."""
+    cond, flags, todo = None, {}, [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        for e in (node.expressions().apply(i) for i in range(node.expressions().size())):
+            if node.nodeName() == "Join":
+                cond = e
+            elif e.nodeName() == "Alias" and e.name().startswith("__diff_"):
+                flags[e.name()] = e.child()
+        todo.extend(node.children().apply(i) for i in range(node.children().size()))
+    return cond, flags
+
+
+def test_joindiff_compares_same_typed_columns_bare(spark):
+    """join_diff's plan on the orders shape of its benchmark (bigint key;
+    int, decimal, date and string values, both sides one type, no
+    override): the join condition and every __diff_ flag compare bare
+    attributes, no cast, to_json or '<null>'. An int against a bigint key
+    joins on cast(... as bigint), never on strings."""
+    from data_diff_spark.operators.joindiff import joined_frame
+
+    orders = spark.range(0, 10).selectExpr(
+        "id as o_orderkey", "cast(id as int) as o_custkey",
+        "cast(id / 3 as decimal(12,2)) as o_totalprice",
+        "date_add(date'1995-01-01', cast(id as int)) as o_orderdate", "cast(id as string) as o_comment")
+    t = table_segment(orders, ["o_orderkey"], extra_columns=orders.columns[1:])
+    cond, flags = _join_comparisons(joined_frame(t, t)[0])
+    assert sorted(flags) == [f"__diff_{c}" for c in sorted(orders.columns[1:])]
+    for e, allowed in [(cond, {"EqualNullSafe", "AttributeReference"})] + [
+            (f, {"Not", "EqualNullSafe", "AttributeReference"}) for f in flags.values()]:
+        assert {x.nodeName() for x in _subexpressions(e)} == allowed, e.toString()
+
+    t1 = table_segment(orders.selectExpr("o_custkey as k", "o_comment"), ["k"])
+    t2 = table_segment(orders.selectExpr("o_orderkey as k", "o_comment"), ["k"])
+    cond, _ = _join_comparisons(joined_frame(t1, t2)[0])
+    subs = _subexpressions(cond)
+    assert [x.dataType().simpleString() for x in subs if x.nodeName() == "Cast"] == ["bigint"]
+    assert "string" not in {x.dataType().simpleString() for x in subs}, cond.toString()
+
+
+@pytest.mark.parametrize("case", ["exact", "double", "int_vs_bigint", "uuid", "map", "array_double"])
 def test_hashdiff_checksum_form_per_pair(spark, case):
     """hash_diff's row checksum is xxhash64 over each column raw when both
     sides hold it in one exact type with no override (a same-typed double
-    too), else over its canonical string: no md5, no fingerprint, no
-    rendering recipe for the exact columns. Each form gives join_diff's
-    rows on unique keys."""
+    too), as bigint across integer widths, else over its canonical string
+    (a map or array too): no md5, no fingerprint, no rendering recipe for
+    the exact columns. Each form gives join_diff's rows on unique keys."""
     exact = ["s", "price", "day", "ts", "flag", "bin"]
     base = spark.range(0, 300).selectExpr(
         "id", "cast(id * 3 as string) as s", "cast(id / 3 as decimal(12,2)) as price",
         "date_add(date'2020-01-01', cast(id as int)) as day", "timestamp_seconds(id * 3600) as ts",
         "id % 2 = 0 as flag", "cast(cast(id as string) as binary) as bin", "id / 4D as dbl",
-        "cast(id as int) as id32", "concat(' ', uuid()) as u").localCheckpoint()
-    extra = {"exact": None, "double": "dbl", "int_vs_bigint": "id32", "uuid": "u"}[case]
+        "cast(id as int) as id32", "concat(' ', uuid()) as u", "map('k', cast(id as int)) as m",
+        "array(id * 0D) as arr").localCheckpoint()
+    extra = {"exact": None, "double": "dbl", "int_vs_bigint": "id32", "uuid": "u",
+             "map": "m", "array_double": "arr"}[case]
     changed = base.withColumn("s", F.when(F.col("id") % 40 == 7, F.lit("new")).otherwise(F.col("s")))
     if extra:
         changed = changed.withColumn(extra, {
@@ -835,6 +928,9 @@ def test_hashdiff_checksum_form_per_pair(spark, case):
             # a trimmed uuid is the same uuid: only id 11 differs
             "u": F.when(F.col("id") == 11, F.concat("u", F.lit("z")))
                   .otherwise(F.when(F.col("id") == 12, F.trim("u")).otherwise(F.col("u"))),
+            "m": F.when(F.col("id") == 11, F.create_map(F.lit("k"), F.lit(-1))).otherwise(F.col("m")),
+            # [0.0] and [-0.0]: their JSON differs
+            "arr": F.when(F.col("id") == 11, F.array(F.lit(-0.0))).otherwise(F.col("arr")),
         }[extra])
     cols = exact + ([extra] if extra else [])
     t1, t2 = (table_segment(x, ["id"], extra_columns=cols) for x in (base, changed.localCheckpoint()))
@@ -844,6 +940,8 @@ def test_hashdiff_checksum_form_per_pair(spark, case):
     got = _by_repr(d.collect())
     assert got == _by_repr(join_diff(t1, t2).collect())
     assert len(got) == 2 * 8 + (2 if extra else 0)
+    if case in ("map", "array_double"):
+        _assert_one_bucket_rows(t1, t2, got)
     for df in d._ddspark_persisted[:2]:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "xxhash64(" in plan
@@ -853,7 +951,7 @@ def test_hashdiff_checksum_form_per_pair(spark, case):
         for c, (node, typ) in zip(["id"] + cols, values):
             raw = ("AttributeReference", base.schema[c].dataType.simpleString())
             if c == extra and c != "dbl":
-                assert node != raw[0] and typ == "string", (c, node, typ)
+                assert (node, typ) != raw and typ == ("bigint" if c == "id32" else "string"), (c, node, typ)
             else:
                 assert (node, typ) == raw, c
     for h in d._ddspark_persisted:

@@ -4,6 +4,10 @@ evidence loop (run per round after perf changes).
 
 Usage: python tools/scale_probe.py [factor]   (default 10 -> ~6M rows)
 
+sf0.1 lineitem repeats (l_orderkey, l_linenumber), so the corpus carries
+a row id, l_rowid, as a third key: on unique keys join_diff and hash_diff
+give the same rows, which the probe checks, so both time one diff.
+
 Prints one JSON line with timings, and the cross-engine row: the same pair
 with side B behind a DuckDBSide over the written corpus (the mod rules in
 SQL), diffed by hash_diff_remote — its wall time, Spark jobs, remote
@@ -26,9 +30,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F
 
-COLS = ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity",
+COLS = ["l_orderkey", "l_linenumber", "l_rowid", "l_partkey", "l_suppkey", "l_quantity",
         "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus", "l_shipdate"]
-KEYS = ["l_orderkey", "l_linenumber"]
+KEYS = ["l_orderkey", "l_linenumber", "l_rowid"]
 
 
 def main():
@@ -47,13 +51,14 @@ def main():
     from data_diff_spark.operators import hashdiff as hd, joindiff as jd
 
     scratch = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
-    path = os.path.join(scratch, f"lineitem_x{factor}")
+    path = os.path.join(scratch, f"lineitem_keyed_x{factor}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         base = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
         big = None
         for i in range(factor):
             c = base.withColumn("l_orderkey", F.col("l_orderkey") + F.lit(i * 100_000_000))
             big = c if big is None else big.unionAll(c)
+        big = big.withColumn("l_rowid", F.monotonically_increasing_id())
         big.repartition(64).write.mode("overwrite").parquet(path)
 
     big = spark.read.parquet(path).select(*COLS)
@@ -77,6 +82,8 @@ def main():
     spark.catalog.clearCache()
     t0 = time.time(); out["joindiff_rows"] = jd.join_diff(t1, t2).count()
     out["joindiff_sec"] = round(time.time() - t0, 1)
+    if out["joindiff_rows"] != out["hashdiff_rows"]:
+        raise RuntimeError(f"join_diff and hash_diff disagree on unique keys: {out}")
     spark.catalog.clearCache()
     out.update(remote_row(spark, path, t1))
     print(json.dumps(out))
